@@ -4,11 +4,11 @@ The reference hashes each k-mer string with the implementation-defined
 ``std::hash<std::string>(element + std::to_string(i))``
 (/root/reference/src/BloomFilter.hpp:91-93,108-110), which is not portable.
 We instead use a seedable polynomial rolling hash over int tokens finished
-with a splitmix64-style mixer, and Kirsch–Mitzenmacher double hashing
-``h1 + i*h2 mod m`` for multi-probe sketches (the reference's own
-``dependencies`` file names ``mmh3`` for the same purpose). Filter
-*decisions* are matched against the reference semantics, not bit arrays —
-see SURVEY.md §7 "hard parts".
+with a splitmix64-style mixer, and derive the i-th Bloom probe of a hash
+with one more independent splitmix64 round per probe (``bloom_probe_index``;
+the reference's own ``dependencies`` file names ``mmh3`` for the same
+purpose). Filter *decisions* are matched against the reference semantics,
+not bit arrays — see SURVEY.md §7 "hard parts".
 
 All arithmetic is numpy uint64 (wrapping mod 2^64), fully vectorized.
 """
@@ -75,6 +75,31 @@ def rolling_kgram_hash(
         h *= _POLY_P
         h += flat[j : j + n_windows]
     return splitmix64(h, inplace=True)
+
+
+def code_kgram_hashes(
+    radix: int, k: int, token_map: np.ndarray | None = None,
+    reverse: bool = False,
+) -> np.ndarray:
+    """``rolling_kgram_hash`` of every possible length-k window over the
+    alphabet ``[0, radix)``, indexed by the window's base-radix code
+    (``functions.kgrams.window_codes``: ``sum(t_j * radix**(k-1-j))``).
+
+    Entry c is the hash ``rolling_kgram_hash(token_map[w], 1, k, reverse)``
+    of the window w of code c (``token_map`` None = identity). The same
+    polynomial is built digit by digit over the code tree, so the radix^k
+    hashes cost about radix^k multiply-adds instead of k each.
+    """
+    alphabet = np.arange(radix, dtype=np.uint64)
+    if token_map is not None:
+        alphabet = np.asarray(token_map)[:radix].astype(np.uint64)
+    h = alphabet
+    for _ in range(k - 1):
+        if reverse:  # h(t_0 w) = t_0 + P*h(w): t_0 is consumed last
+            h = (alphabet[:, None] + h[None, :] * _POLY_P).ravel()
+        else:        # h(w t) = P*h(w) + t
+            h = (h[:, None] * _POLY_P + alphabet[None, :]).ravel()
+    return splitmix64(h)
 
 
 def hash_tokens_1d(tokens: np.ndarray) -> np.uint64:

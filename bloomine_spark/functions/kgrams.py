@@ -10,6 +10,7 @@ with zero per-row Python in the hot path.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -21,14 +22,20 @@ from bloomine_spark.functions.hashing import rolling_kgram_hash
 class TokenBatch:
     """A flattened batch of token rows.
 
-    flat:      concatenated tokens of all rows (uint64 view of the ints)
+    values:    concatenated tokens of all rows, in their native int dtype
+    flat:      uint64 copy of ``values`` for the hash kernels (widened on
+               first use, so consumers that never hash never pay for it)
     lens:      per-row token counts
     offsets:   exclusive prefix sum of lens (row i spans flat[offsets[i]:offsets[i]+lens[i]])
     """
 
-    flat: np.ndarray
+    values: np.ndarray
     lens: np.ndarray
     offsets: np.ndarray
+
+    @cached_property
+    def flat(self) -> np.ndarray:
+        return self.values.astype(np.uint64, copy=False)
 
     @property
     def n_rows(self) -> int:
@@ -60,8 +67,9 @@ def token_batch_from_arrow(rb, col: str) -> TokenBatch:
 
     Arrow already stores a list column as ONE contiguous child buffer plus
     offsets — exactly the TokenBatch layout — so unlike the pandas path
-    there is no per-row ndarray materialization and no concatenate: the only
-    copy is the int32→uint64 widening the hash kernels need anyway.
+    there is no per-row ndarray materialization and no concatenate; the
+    int32→uint64 widening the hash kernels need happens on first ``flat``
+    access.
     """
     import pyarrow as pa
 
@@ -70,10 +78,9 @@ def token_batch_from_arrow(rb, col: str) -> TokenBatch:
         arr = arr.combine_chunks()
     offsets = arr.offsets.to_numpy().astype(np.int64, copy=False)
     values = arr.values.to_numpy(zero_copy_only=False)
-    flat = values[offsets[0] : offsets[-1]].astype(np.uint64)
     lens = np.diff(offsets)
     off = offsets[:-1] - offsets[0]
-    return TokenBatch(flat, lens, off)
+    return TokenBatch(values[offsets[0] : offsets[-1]], lens, off)
 
 
 def raw_list_values(rb, col: str) -> np.ndarray:
@@ -146,6 +153,25 @@ def kgram_windows(batch: TokenBatch, k: int, reverse: bool = False) -> WindowSet
     if reverse:
         starts = np.repeat(batch.lens, n_win_per_row) - k - starts
     return WindowSet(row_ids, starts, gstarts, hashes)
+
+
+def window_codes(
+    values: np.ndarray, n_windows: int, k: int, radix: int
+) -> np.ndarray:
+    """Base-``radix`` integer code of every length-k window of ``values``.
+
+    One Horner pass, ``code = code*radix + t`` over k shifted views, in
+    int32 on the raw token buffer (no uint64 widening). Window ``i`` gets
+    ``sum(values[i+j] * radix**(k-1-j))``; callers guarantee tokens lie in
+    ``[0, radix)`` and ``radix**k <= 2**31``. As with the rolling hash,
+    windows crossing row boundaries are coded too and masked by the caller.
+    """
+    values = values.astype(np.int32, copy=False)  # a no-op for Arrow int32
+    code = np.zeros(max(n_windows, 0), dtype=np.int32)
+    for j in range(k):
+        code *= radix
+        code += values[j : j + n_windows]
+    return code
 
 
 def iter_cache_slices(rb, tokens_col: str, max_tokens: int = 1 << 16):

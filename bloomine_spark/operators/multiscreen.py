@@ -3,8 +3,9 @@
 The reference screens probes sequentially — each (sample, probe) pair
 re-reads the whole FASTQ (/root/reference/bloomine/run.py:26-61). At 100 TB
 the scan dominates, so this operator screens EVERY target in a single pass:
-window hashes are computed once per batch and each target then pays only
-its (candidate-compressed) Bloom probes and its own survivors' scoring.
+window codes (or, off the window-table path, window hashes) are computed
+once per batch slice and each target then pays only its own table gather
+(or Bloom probes) and its own survivors' scoring.
 
 Output is a long-format score log: one row per (FP-surviving row, target),
 columns (passthrough..., target_id, rc, fp_hits, score, threshold, sp_pass)
@@ -28,10 +29,11 @@ from pyspark.sql import types as T
 from bloomine_spark.operators.screen import (
     FlatWindows,
     TargetContext,
-    _exact_candidates,
-    _fp_pass_counts,
+    TargetWindows,
     prepare_target,
-    score_runs,
+    prescreen,
+    score_survivors,
+    window_radix,
 )
 from bloomine_spark.params import ScreenParams
 
@@ -49,31 +51,92 @@ def prepare_targets(
     }
 
 
-def _score_survivors(
-    batch, ctx: TargetContext, win: FlatWindows, row_sel: np.ndarray,
-    reverse: bool, scores: np.ndarray, p: ScreenParams,
-) -> None:
-    """Paint + score one orientation's survivors (shared canvas logic)."""
-    rids, starts = _exact_candidates(win, batch, ctx, row_sel, reverse)
-    if len(rids) == 0:
-        return
-    total_len = len(batch.flat)
-    gpos = batch.offsets[rids] + starts
-    delta = np.zeros(total_len + 1, dtype=np.int32)
-    np.add.at(delta, gpos, 1)
-    np.add.at(delta, gpos + ctx.k, -1)
-    gmask = np.cumsum(delta[:total_len]) > 0
-    edges = np.flatnonzero(np.diff(gmask.view(np.int8)))
-    run_starts = np.concatenate(([0], edges + 1))
-    run_ends = np.concatenate((edges + 1, [total_len]))
-    run_vals = gmask[run_starts]
-    for r in np.unique(rids):
-        o = int(batch.offsets[r])
-        e = o + int(batch.lens[r])
-        i0 = int(np.searchsorted(run_ends, o, side="right"))
-        i1 = int(np.searchsorted(run_starts, e, side="left"))
-        rl = np.minimum(run_ends[i0:i1], e) - np.maximum(run_starts[i0:i1], o)
-        scores[r] = score_runs(run_vals[i0:i1], rl, p)
+def make_multi_screen_kernel(
+    ctx_bc,  # Broadcast[dict[str, TargetContext]]
+    tokens_col: str,
+    passthrough: list[str],
+    rc_retry: bool,
+    k: int,
+    complement_map: np.ndarray | None = None,
+):
+    """Build the mapInArrow function of ``screen_multi_scores``."""
+    import pyarrow as pa
+
+    from bloomine_spark.functions.kgrams import (
+        iter_cache_slices,
+        raw_list_values,
+        token_batch_from_arrow,
+    )
+
+    def kernel(batches) -> Iterator["pa.RecordBatch"]:
+        ctx_map: dict[str, TargetContext] = ctx_bc.value
+        for rb0 in batches:
+            if rb0.num_rows == 0:
+                continue
+            radix = window_radix(
+                raw_list_values(rb0, tokens_col), k, complement_map
+            )
+            # cache-blocking row slices (see screen.py): per-row logic only,
+            # so slicing is semantics-free
+            for rb in iter_cache_slices(rb0, tokens_col):
+                if rb.num_rows:
+                    out = _slice(rb, ctx_map, radix)
+                    if out is not None:
+                        yield out
+
+    def _slice(rb, ctx_map, radix):
+        n = rb.num_rows
+        batch = token_batch_from_arrow(rb, tokens_col)
+        # window codes (or hashes) computed ONCE, shared by every target
+        win = FlatWindows(batch, k, complement_map, radix)
+        frames: list[dict] = []
+        for tid, ctx in ctx_map.items():
+            tw = TargetWindows(win, ctx)
+            fp_f, fp_r, fp_hits = prescreen(tw, n, rc_retry)
+            fp_any = fp_f | fp_r
+            if not fp_any.any():
+                continue
+            scores = np.zeros(n, dtype=np.int64)
+            score_survivors(tw, fp_f, False, scores, ctx.params)
+            score_survivors(tw, fp_r, True, scores, ctx.params)
+            sp_pass = fp_any & (scores >= ctx.mst)
+            idx = np.flatnonzero(fp_any)
+            frames.append(
+                {
+                    "idx": idx,
+                    "target_id": tid,
+                    "rc": fp_r[idx],
+                    "fp_hits": fp_hits[idx].astype(np.int32),
+                    "score": scores[idx],
+                    "threshold": float(ctx.mst),
+                    "sp_pass": sp_pass[idx],
+                }
+            )
+        if not frames:
+            return None
+        sizes = [len(f["idx"]) for f in frames]
+        take = pa.array(np.concatenate([f["idx"] for f in frames]))
+        cols = {c: rb.column(rb.schema.get_field_index(c)).take(take)
+                for c in passthrough}
+        cols["target_id"] = pa.array(
+            np.repeat(
+                np.array([f["target_id"] for f in frames], dtype=object),
+                sizes,
+            ).tolist(),
+            type=pa.string(),
+        )
+        cols["rc"] = pa.array(np.concatenate([f["rc"] for f in frames]))
+        cols["fp_hits"] = pa.array(np.concatenate([f["fp_hits"] for f in frames]))
+        cols["score"] = pa.array(
+            np.concatenate([f["score"] for f in frames]).astype(np.int64)
+        )
+        cols["threshold"] = pa.array(
+            np.repeat(np.array([f["threshold"] for f in frames]), sizes)
+        )
+        cols["sp_pass"] = pa.array(np.concatenate([f["sp_pass"] for f in frames]))
+        return pa.RecordBatch.from_pydict(cols)
+
+    return kernel
 
 
 def screen_multi_scores(
@@ -99,108 +162,10 @@ def screen_multi_scores(
         T.StructField("threshold", T.DoubleType()),
         T.StructField("sp_pass", T.BooleanType()),
     ]
-    schema = T.StructType(fields)
-
-    import pyarrow as pa
-
-    from bloomine_spark.functions.kgrams import (
-        iter_cache_slices,
-        token_batch_from_arrow,
+    kernel = make_multi_screen_kernel(
+        ctx_bc, tokens_col, passthrough, rc_retry, params.k, complement_map
     )
-
-    def kernel(batches) -> Iterator["pa.RecordBatch"]:
-        ctx_map: dict[str, TargetContext] = ctx_bc.value
-        for rb0 in batches:
-            if rb0.num_rows == 0:
-                continue
-            yield from _slices(rb0, ctx_map)
-
-    def _slices(rb0, ctx_map) -> Iterator["pa.RecordBatch"]:
-        # cache-blocking row slices (see screen.py): per-row logic only,
-        # so slicing is semantics-free
-        for rb in iter_cache_slices(rb0, tokens_col):
-            n = rb.num_rows
-            if n == 0:
-                continue
-            batch = token_batch_from_arrow(rb, tokens_col)
-            # window hashes computed ONCE, shared by every target
-            win_f = FlatWindows(batch, params.k)
-            win_r: FlatWindows | None = None
-
-            frames: list[dict] = []
-            for tid, ctx in ctx_map.items():
-                p = ctx.params
-                bloom = ctx.bloom
-                counts_f = _fp_pass_counts(win_f, bloom, n, None)
-                if ctx.fp_threshold <= 0:
-                    fp_f = np.ones(n, dtype=bool)
-                else:
-                    fp_f = counts_f >= ctx.fp_threshold
-                rc_rows = ~fp_f
-                fp_r = np.zeros(n, dtype=bool)
-                counts_r = np.zeros(n, dtype=np.int64)
-                if rc_retry and rc_rows.any() and ctx.fp_threshold > 0:
-                    if win_r is None:
-                        win_r = FlatWindows(
-                            batch, params.k, reverse=True,
-                            complement_map=complement_map,
-                        )
-                    counts_r = _fp_pass_counts(win_r, bloom, n, rc_rows)
-                    fp_r = rc_rows & (counts_r >= ctx.fp_threshold)
-                fp_any = fp_f | fp_r
-                if not fp_any.any():
-                    continue
-                scores = np.zeros(n, dtype=np.int64)
-                _score_survivors(batch, ctx, win_f, fp_f, False, scores, p)
-                if fp_r.any() and win_r is not None:
-                    _score_survivors(batch, ctx, win_r, fp_r, True, scores, p)
-                sp_pass = fp_any & (scores >= ctx.mst)
-                idx = np.flatnonzero(fp_any)
-                frames.append(
-                    {
-                        "idx": idx,
-                        "target_id": tid,
-                        "rc": fp_r[idx],
-                        "fp_hits": np.where(fp_r, counts_r, counts_f)[idx]
-                        .astype(np.int32),
-                        "score": scores[idx],
-                        "threshold": float(ctx.mst),
-                        "sp_pass": sp_pass[idx],
-                    }
-                )
-            if not frames:
-                continue
-            sizes = [len(f["idx"]) for f in frames]
-            all_idx = np.concatenate([f["idx"] for f in frames])
-            take = pa.array(all_idx)
-            cols = {c: rb.column(rb.schema.get_field_index(c)).take(take)
-                    for c in passthrough}
-            cols["target_id"] = pa.array(
-                np.repeat(
-                    np.array([f["target_id"] for f in frames], dtype=object),
-                    sizes,
-                ).tolist(),
-                type=pa.string(),
-            )
-            cols["rc"] = pa.array(np.concatenate([f["rc"] for f in frames]))
-            cols["fp_hits"] = pa.array(
-                np.concatenate([f["fp_hits"] for f in frames])
-            )
-            cols["score"] = pa.array(
-                np.concatenate([f["score"] for f in frames]).astype(np.int64)
-            )
-            cols["threshold"] = pa.array(
-                np.repeat(np.array([f["threshold"] for f in frames]), sizes)
-            )
-            cols["sp_pass"] = pa.array(
-                np.concatenate([f["sp_pass"] for f in frames])
-            )
-            ordered = {name: cols[name] for name in
-                       passthrough + ["target_id", "rc", "fp_hits", "score",
-                                      "threshold", "sp_pass"]}
-            yield pa.RecordBatch.from_pydict(ordered)
-
-    return df.mapInArrow(kernel, schema=schema)
+    return df.mapInArrow(kernel, schema=T.StructType(fields))
 
 
 def polyfamily_onepass(

@@ -8,7 +8,7 @@ verifies survivors (exact subarray containment, or the reference's
 max-subalignment score vs MST).
 
 Spark-first design: the whole per-row pipeline (FP → RC retry → SP) runs
-fused inside ONE ``mapInPandas`` pass — shuffle-free, embarrassingly
+fused inside ONE ``mapInArrow`` pass — shuffle-free, embarrassingly
 parallel, the cluster-scale analog of the reference's per-thread loop
 (/root/reference/src/BlooMineUtils.cpp:306-373). The Bloom filter, target
 k-gram set, and thresholds are built once on the driver (they are tiny) and
@@ -17,6 +17,16 @@ const-ref across threads (/root/reference/src/BlooMineUtils.cpp:262-264).
 Everything inside the kernel is vectorized numpy over Arrow batches — no
 per-row Python in the FP hot path; only post-prescreen survivors (a tiny
 fraction) see per-row scoring.
+
+Window tables: over a small alphabet (DNA: 5 tokens, 5^7 = 78 125 possible
+7-grams) every window is first turned into a base-V integer code, and each
+target answers its four per-window questions (Bloom hit and token-confirmed
+target k-gram, forward and reverse complement) once per possible code, in a
+V^k-byte table built lazily on the executor. The prescreen then costs one
+gather per window instead of a rolling hash, ~n_hashes Bloom probes and a
+second complemented hash for the RC retry. Batches whose alphabet is too
+large for a table (V^k > 2^20) or too small to amortize one (V^k above the
+batch's window count) take the hash path; both paths give identical output.
 """
 
 from __future__ import annotations
@@ -25,21 +35,24 @@ from dataclasses import dataclass, field
 from typing import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bloomine_spark.functions.hashing import code_kgram_hashes, rolling_kgram_hash
 from bloomine_spark.functions.kgrams import (
     TokenBatch,
-
     distinct_per_row,
-    flatten_token_series,
-
     unique_kgram_hashes,
+    window_codes,
 )
 from bloomine_spark.params import ScreenParams
 from bloomine_spark.sketch.bloom import BloomFilter
+
+# window-table flag bits: one byte per possible window code
+FWD_BLOOM, RC_BLOOM, FWD_KSET, RC_KSET = 1, 2, 4, 8
+# largest table (bytes per target); bigger alphabets take the hash path
+MAX_TABLE_CODES = 1 << 20
 
 
 @dataclass
@@ -62,6 +75,10 @@ class TargetContext:
     complement_map: np.ndarray | None = None  # optional vocab permutation
 
     _bloom: BloomFilter | None = field(default=None, repr=False, compare=False)
+    # (radix, flags) of the last window table built on this executor
+    _table: tuple[int, np.ndarray] | None = field(
+        default=None, repr=False, compare=False
+    )
 
     @property
     def bloom(self) -> BloomFilter:
@@ -72,7 +89,46 @@ class TargetContext:
     def __getstate__(self):
         d = dict(self.__dict__)
         d["_bloom"] = None
+        d["_table"] = None
         return d
+
+    def kset_lookup(self, hashes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(index into kset_hashes / kgram_matrix, hash-is-member mask)."""
+        idx = np.searchsorted(self.kset_hashes, hashes)
+        np.minimum(idx, len(self.kset_hashes) - 1, out=idx)
+        return idx, self.kset_hashes[idx] == hashes
+
+    def window_table(self, radix: int) -> np.ndarray:
+        """Flag byte per window code over the alphabet ``[0, radix)``.
+
+        Code ``c`` is the window ``t_0..t_{k-1}`` with
+        ``c = sum(t_j * radix**(k-1-j))`` (see ``window_codes``). Its byte
+        holds FWD_BLOOM / RC_BLOOM (Bloom hit of the window / of its reverse
+        complement) and FWD_KSET / RC_KSET (exact target k-gram, confirmed
+        token by token). Every bit comes from the same hashes, probes and
+        token checks as the hash path, so both paths decide alike. Only the
+        last radix's table is kept: at most MAX_TABLE_CODES bytes.
+        """
+        if self._table is not None and self._table[0] == radix:
+            return self._table[1]
+        k = self.k
+        weights = radix ** np.arange(k - 1, -1, -1, dtype=np.int64)
+        flags = np.zeros(radix**k, dtype=np.uint8)
+        for reverse, bloom_bit, kset_bit in (
+            (False, FWD_BLOOM, FWD_KSET), (True, RC_BLOOM, RC_KSET),
+        ):
+            cmap = self.complement_map if reverse else None
+            h = code_kgram_hashes(radix, k, cmap, reverse)
+            flags[self.bloom.contains_hashes(h)] |= bloom_bit
+            idx, member = self.kset_lookup(h)
+            codes = np.flatnonzero(member)
+            toks = codes[:, None] // weights % radix
+            if reverse:
+                toks = (toks if cmap is None else cmap[toks])[:, ::-1]
+            ok = (toks == self.kgram_matrix[idx[codes]]).all(axis=1)
+            flags[codes[ok]] |= kset_bit
+        object.__setattr__(self, "_table", (radix, flags))
+        return flags
 
     def low_complexity(self) -> bool:
         """True when <50% of the target's k-grams are unique — the
@@ -93,8 +149,6 @@ def prepare_target(
     hashes = unique_kgram_hashes(tokens, k)
     # k-gram token matrix aligned with the sorted hash array (for exact
     # candidate verification — hash collisions must not fabricate coverage)
-    from bloomine_spark.functions.hashing import rolling_kgram_hash
-
     win = np.lib.stride_tricks.sliding_window_view(tokens, k)
     wh = rolling_kgram_hash(tokens.astype(np.uint64), len(tokens) - k + 1, k)
     order = np.argsort(wh, kind="stable")
@@ -185,30 +239,93 @@ def score_runs(run_cov: np.ndarray, run_len: np.ndarray, p: ScreenParams) -> int
 
 
 # ---------------------------------------------------------------------------
-# the mapInPandas kernel
+# the mapInArrow kernel
 # ---------------------------------------------------------------------------
 
+def window_radix(
+    values: np.ndarray, k: int, complement_map: np.ndarray | None = None
+) -> int | None:
+    """Radix of a batch's window codes, or None to keep the hash path.
+
+    The table path needs every token in ``[0, V)`` with V = max token + 1
+    (at least ``len(complement_map)`` when a map is given), V^k within
+    MAX_TABLE_CODES, and V^k no larger than the batch's window count, so a
+    table never costs more to build than hashing the batch it serves.
+
+    Raises ValueError for a token outside the complement map's vocabulary:
+    the map could not complement it (a negative token would wrap around to
+    the map's last entry).
+    """
+    if len(values) == 0:
+        return None
+    lo, hi = int(values.min()), int(values.max())
+    radix = hi + 1
+    if complement_map is not None:
+        vocab = len(complement_map)
+        if lo < 0 or hi >= vocab:
+            bad = lo if lo < 0 else hi
+            raise ValueError(
+                f"token {bad} is outside the complement map's vocabulary "
+                f"of {vocab} tokens (0..{vocab - 1})"
+            )
+        radix = vocab
+    if lo < 0:
+        return None
+    n_codes = radix**k
+    if n_codes > min(MAX_TABLE_CODES, len(values) - k + 1):
+        return None
+    return radix
+
+
 class FlatWindows:
-    """All length-k windows of the FLAT buffer, row structure derived
-    lazily: hashes are computed for every flat position once; row ids /
+    """All length-k windows of the FLAT buffer, in both orientations, row
+    structure derived lazily: per-window keys (base-``radix`` codes, or
+    hashes computed on first use) cover every flat position once; row ids /
     in-row starts / validity are materialized only for the (few) positions
     that survive a probe. This keeps per-batch transient allocations to the
-    hash array itself — large temporaries serialize multi-worker executors
-    on kernel page zeroing."""
+    key arrays themselves — large temporaries serialize multi-worker
+    executors on kernel page zeroing.
 
-    def __init__(self, batch: TokenBatch, k: int, reverse: bool = False,
-                 complement_map: np.ndarray | None = None):
-        from bloomine_spark.functions.hashing import rolling_kgram_hash
+    The reverse orientation is the reverse complement: ``complement_map``
+    (a vocabulary permutation, or None for plain reversal) then reversal.
+    """
 
+    def __init__(self, batch: TokenBatch, k: int,
+                 complement_map: np.ndarray | None = None,
+                 radix: int | None = None):
         self.batch = batch
         self.k = k
-        self.reverse = reverse
-        flat = batch.flat
-        if complement_map is not None:
-            flat = complement_map[flat.astype(np.int64)].astype(np.uint64)
-        n_flat = max(len(flat) - k + 1, 0)
-        self.hashes = rolling_kgram_hash(flat, n_flat, k, reverse=reverse)
+        self.complement_map = complement_map
+        self.radix = radix
+        self.n_windows = max(len(batch.values) - k + 1, 0)
+        self.codes = (
+            None if radix is None
+            else window_codes(batch.values, self.n_windows, k, radix)
+        )
+        self._hashes: dict[bool, np.ndarray] = {}
         self._row_ends = batch.offsets + batch.lens
+
+    def hashes(self, reverse: bool = False) -> np.ndarray:
+        """Hash of every window (``reverse``: of its reverse complement)."""
+        h = self._hashes.get(reverse)
+        if h is None:
+            flat = self.batch.flat
+            if reverse and self.complement_map is not None:
+                flat = self.complement_map[flat.astype(np.int64)].astype(np.uint64)
+            h = rolling_kgram_hash(flat, self.n_windows, self.k, reverse=reverse)
+            self._hashes[reverse] = h
+        return h
+
+    def tokens(self, pos: np.ndarray, reverse: bool) -> np.ndarray:
+        """(len(pos), k) int64 tokens of the windows at ``pos``, reverse
+        complemented when ``reverse``."""
+        gather = pos[:, None] + np.arange(self.k, dtype=np.int64)[None, :]
+        toks = self.batch.values[gather].astype(np.int64)
+        if reverse:
+            if self.complement_map is not None:
+                toks = self.complement_map[toks]
+            toks = toks[:, ::-1]
+        return toks
 
     def rows_of(self, pos: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(row_ids, valid_mask) for flat window positions."""
@@ -216,76 +333,154 @@ class FlatWindows:
         valid = pos + self.k <= self._row_ends[rows]
         return rows, valid
 
-    def starts_of(self, pos: np.ndarray, rows: np.ndarray) -> np.ndarray:
+    def starts_of(self, pos: np.ndarray, rows: np.ndarray,
+                  reverse: bool) -> np.ndarray:
         """In-row window starts (reversed-row coordinates when reverse)."""
         starts = pos - self.batch.offsets[rows]
-        if self.reverse:
+        if reverse:
             starts = self.batch.lens[rows] - self.k - starts
         return starts
 
 
+class TargetWindows:
+    """One target's answers for a FlatWindows. On the table path they are
+    one gather from the target's window table per window; on the hash path
+    they come from Bloom probes and k-set lookups of the window hashes."""
+
+    def __init__(self, win: FlatWindows, ctx: TargetContext):
+        self.win = win
+        self.ctx = ctx
+        self.on_table = win.codes is not None
+        if self.on_table:
+            flags = np.take(ctx.window_table(win.radix), win.codes)
+            # flagged windows (Bloom hits) are rare: keep only those
+            self._pos = np.flatnonzero(flags.astype(bool))
+            self._flags = flags[self._pos]
+
+    def flagged(self, bit: int) -> np.ndarray:
+        """Flat positions of the windows whose table byte has ``bit``."""
+        return self._pos[(self._flags & bit) != 0]
+
+
 def _fp_pass_counts(
-    win: FlatWindows, bloom: BloomFilter, n_rows: int, row_mask: np.ndarray | None
+    tw: TargetWindows, n_rows: int, row_mask: np.ndarray | None,
+    reverse: bool = False,
 ) -> np.ndarray:
     """Distinct-kgram Bloom hit count per row (vectorized F1/A3).
 
     Probes every flat window, then derives row structure for hits only:
-    distinct-hits-per-row == distinct (row, hash) among valid hits.
+    distinct-hits-per-row == distinct (row, window key) among valid hits —
+    the oracle's distinct-tuple rule (``oracle.fp_screen``).
     """
-    if len(win.hashes) == 0:
-        return np.zeros(n_rows, dtype=np.int64)
-    hit_pos = np.flatnonzero(bloom.contains_hashes(win.hashes))
+    win = tw.win
+    if tw.on_table:
+        keys = win.codes
+        hit_pos = tw.flagged(RC_BLOOM if reverse else FWD_BLOOM)
+    else:
+        keys = win.hashes(reverse)
+        hit_pos = np.flatnonzero(tw.ctx.bloom.contains_hashes(keys))
     if len(hit_pos) == 0:
         return np.zeros(n_rows, dtype=np.int64)
     rows, valid = win.rows_of(hit_pos)
     if row_mask is not None:
         valid &= row_mask[rows]
     rows = rows[valid]
-    hh = win.hashes[hit_pos[valid]]
-    uniq = distinct_per_row(rows, hh)
+    uniq = distinct_per_row(rows, keys[hit_pos[valid]])
     return np.bincount(rows[uniq], minlength=n_rows)
 
 
+def prescreen(
+    tw: TargetWindows, n_rows: int, rc_retry: bool
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Phase 1 for one target: (fp_f, fp_r, fp_hits) per row.
+
+    Forward distinct Bloom-hit counts vs threshold (F1), then the reverse
+    complement retry for forward failures only (F4); ``fp_hits`` is the
+    count of the orientation that decided the row.
+    """
+    ctx = tw.ctx
+    counts_f = _fp_pass_counts(tw, n_rows, None)
+    if ctx.fp_threshold <= 0:
+        fp_f = np.ones(n_rows, dtype=bool)  # FQread.hpp:69 quirk
+    else:
+        fp_f = counts_f >= ctx.fp_threshold
+    fp_r = np.zeros(n_rows, dtype=bool)
+    rc_rows = ~fp_f
+    if not (rc_retry and rc_rows.any()):
+        return fp_f, fp_r, counts_f
+    counts_r = _fp_pass_counts(tw, n_rows, rc_rows, reverse=True)
+    fp_r = rc_rows & (counts_r >= ctx.fp_threshold)
+    return fp_f, fp_r, np.where(fp_r, counts_r, counts_f)
+
+
 def _exact_candidates(
-    win: FlatWindows,
-    batch: TokenBatch,
-    ctx: TargetContext,
-    row_sel: np.ndarray,
-    reverse: bool,
+    tw: TargetWindows, row_sel: np.ndarray, reverse: bool,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(row_ids, starts) of windows whose TOKENS exactly match a target k-gram.
 
-    Candidates come from hash membership (searchsorted into the sorted target
-    hash set) and are then confirmed token-by-token against the aligned
-    k-gram matrix, so Bloom/hash collisions cannot fabricate coverage —
-    mirroring the reference's exact map lookup
-    (/root/reference/src/FQread.hpp:233-241).
+    On the hash path candidates come from hash membership (searchsorted into
+    the sorted target hash set) and are then confirmed token-by-token
+    against the aligned k-gram matrix, so hash collisions cannot fabricate
+    coverage — mirroring the reference's exact map lookup
+    (src/FQread.hpp:233-241). The window table stores the outcome of that
+    same check per code, so the table path is a flag test.
     """
-    e = np.zeros(0, dtype=np.int64)
-    if len(win.hashes) == 0:
-        return e, e
-    idx = np.searchsorted(ctx.kset_hashes, win.hashes)
-    idx = np.minimum(idx, len(ctx.kset_hashes) - 1)
-    cand_pos = np.flatnonzero(ctx.kset_hashes[idx] == win.hashes)
-    if len(cand_pos) == 0:
-        return e, e
-    rows, valid = win.rows_of(cand_pos)
+    win = tw.win
+    if tw.on_table:
+        pos = tw.flagged(RC_KSET if reverse else FWD_KSET)
+    else:
+        h = win.hashes(reverse)
+        idx, member = tw.ctx.kset_lookup(h)
+        pos = np.flatnonzero(member)
+    rows, valid = win.rows_of(pos)
     valid &= row_sel[rows]
-    cand_pos = cand_pos[valid]
-    rows = rows[valid]
-    if len(cand_pos) == 0:
-        return e, e
-    # gather window tokens from the ORIGINAL buffer: (n_cand, k)
-    gather = cand_pos[:, None] + np.arange(ctx.k, dtype=np.int64)[None, :]
-    toks = batch.flat[gather].astype(np.int64)
-    if reverse:
-        # RC orientation: the canonical transform is reverse (optionally
-        # composed with the vocabulary complement map)
-        if ctx.complement_map is not None:
-            toks = ctx.complement_map[toks]
-        toks = toks[:, ::-1]
-    ok = (toks == ctx.kgram_matrix[idx[cand_pos]]).all(axis=1)
-    return rows[ok], win.starts_of(cand_pos[ok], rows[ok])
+    pos, rows = pos[valid], rows[valid]
+    if not tw.on_table and len(pos):
+        ok = (win.tokens(pos, reverse) == tw.ctx.kgram_matrix[idx[pos]]).all(axis=1)
+        pos, rows = pos[ok], rows[ok]
+    return rows, win.starts_of(pos, rows, reverse)
+
+
+def score_survivors(
+    tw: TargetWindows, row_sel: np.ndarray, reverse: bool,
+    scores: np.ndarray, p: ScreenParams,
+) -> None:
+    """Scored verify of one orientation's survivors, written into ``scores``.
+
+    Coverage from exact-verified k-gram candidates is painted onto ONE
+    global canvas (every window interval stays inside its row, so a single
+    cumsum gives every row's mask at once — no per-row allocations).
+    """
+    if not row_sel.any():
+        return
+    rids, starts = _exact_candidates(tw, row_sel, reverse)
+    if len(rids) == 0:
+        return
+    batch, k = tw.win.batch, tw.win.k
+    total_len = len(batch.values)
+    gpos = batch.offsets[rids] + starts
+    delta = np.zeros(total_len + 1, dtype=np.int32)
+    np.add.at(delta, gpos, 1)
+    np.add.at(delta, gpos + k, -1)
+    gmask = np.cumsum(delta[:total_len]) > 0
+    # global run-length encoding; per row: slice + clip runs
+    edges = np.flatnonzero(np.diff(gmask.view(np.int8)))
+    run_starts = np.concatenate(([0], edges + 1))
+    run_ends = np.concatenate((edges + 1, [total_len]))
+    run_vals = gmask[run_starts]
+    # row-bound run windows for ALL survivors in two vectorized
+    # searchsorteds; the remaining per-row work is the quirk-preserving
+    # O(runs) scoring itself
+    rs = np.unique(rids)
+    offs = batch.offsets[rs]
+    ends = offs + batch.lens[rs]
+    i0s = np.searchsorted(run_ends, offs, side="right")
+    i1s = np.searchsorted(run_starts, ends, side="left")
+    for r, o, e, i0, i1 in zip(
+        rs.tolist(), offs.tolist(), ends.tolist(), i0s.tolist(), i1s.tolist(),
+    ):
+        rl = np.minimum(run_ends[i0:i1], e) - np.maximum(run_starts[i0:i1], o)
+        scores[r] = score_runs(run_vals[i0:i1], rl, p)
 
 
 def _contains_subarray(
@@ -298,18 +493,16 @@ def _contains_subarray(
     pattern hash, confirm token equality, then validate row boundaries —
     collision-proof. Used by verify mode "exact".
     """
-    from bloomine_spark.functions.hashing import rolling_kgram_hash
-
     n_rows = len(row_sel)
     out = np.zeros(n_rows, dtype=bool)
     kp = len(pattern)
-    win = FlatWindows(batch, kp, reverse=reverse, complement_map=complement_map)
-    if len(win.hashes) == 0:
+    win = FlatWindows(batch, kp, complement_map=complement_map)
+    if win.n_windows == 0:
         return out
     # the transformed read contains raw-P iff some window w satisfies
-    # reverse(π(w)) == P, and win.hashes are exactly hash(reverse(π(w)))
+    # reverse(π(w)) == P, and win.hashes(True) are exactly hash(reverse(π(w)))
     pat_h = rolling_kgram_hash(pattern.astype(np.uint64), 1, kp)[0]
-    cand_pos = np.flatnonzero(win.hashes == pat_h)
+    cand_pos = np.flatnonzero(win.hashes(reverse) == pat_h)
     if len(cand_pos) == 0:
         return out
     rows, valid = win.rows_of(cand_pos)
@@ -317,12 +510,7 @@ def _contains_subarray(
     cand_pos, rows = cand_pos[valid], rows[valid]
     if len(cand_pos) == 0:
         return out
-    gather = cand_pos[:, None] + np.arange(kp, dtype=np.int64)[None, :]
-    toks = batch.flat[gather].astype(np.int64)
-    if complement_map is not None:
-        toks = complement_map[toks]
-    if reverse:
-        toks = toks[:, ::-1]
+    toks = win.tokens(cand_pos, reverse)
     ok = (toks == pattern[None, :].astype(np.int64)).all(axis=1)
     out[np.unique(rows[ok])] = True
     return out
@@ -346,132 +534,75 @@ def make_screen_kernel(
 
     from bloomine_spark.functions.kgrams import (
         iter_cache_slices,
+        raw_list_values,
         token_batch_from_arrow,
     )
 
     def kernel(batches) -> Iterator["pa.RecordBatch"]:
         ctx: TargetContext = ctx_bc.value
-        p = ctx.params
-        bloom = ctx.bloom
         for rb0 in batches:
             if rb0.num_rows == 0:
                 continue
-            # cache-blocking: process the batch in zero-copy row slices so
-            # the window-hash/canvas temporaries stay cache-resident (all
-            # downstream logic is per-row, so slicing is semantics-free)
-            yield from _screen_slice_iter(rb0, ctx, p, bloom)
-
-    def _screen_slice_iter(rb0, ctx, p, bloom):
-        for rb in iter_cache_slices(rb0, tokens_col):
-            n = rb.num_rows
-            if n == 0:
-                continue
-            batch = token_batch_from_arrow(rb, tokens_col)
-
-            # ---- phase 1 forward: distinct Bloom-hit counts (F1)
-            win_f = FlatWindows(batch, ctx.k)
-            counts_f = _fp_pass_counts(win_f, bloom, n, None)
-            if ctx.fp_threshold <= 0:
-                fp_f = np.ones(n, dtype=bool)  # FQread.hpp:69 quirk
-            else:
-                fp_f = counts_f >= ctx.fp_threshold
-
-            # ---- phase 1 RC retry, only for forward failures (F4)
-            rc_rows = ~fp_f
-            fp_r = np.zeros(n, dtype=bool)
-            counts_r = np.zeros(n, dtype=np.int64)
-            win_r = None
-            if rc_retry and rc_rows.any() and ctx.fp_threshold > 0:
-                win_r = FlatWindows(
-                    batch, ctx.k, reverse=True,
-                    complement_map=ctx.complement_map,
-                )
-                counts_r = _fp_pass_counts(win_r, bloom, n, rc_rows)
-                fp_r = rc_rows & (counts_r >= ctx.fp_threshold)
-            elif rc_retry and ctx.fp_threshold <= 0:
-                fp_r = np.zeros(n, dtype=bool)  # fwd already passed all
-
-            fp_any = fp_f | fp_r
-            if not fp_any.any():
-                continue
-
-            # ---- phase 2: verify survivors
-            scores = np.zeros(n, dtype=np.int64)
-            if mode == "scored":
-                # coverage from exact-verified k-gram candidates, per
-                # orientation, painted onto ONE global canvas (every window
-                # interval stays inside its row, so a single cumsum gives
-                # every row's mask at once — no per-row allocations)
-                total_len = len(batch.flat)
-                for reverse, row_sel, win in (
-                    (False, fp_f, win_f),
-                    (True, fp_r, win_r),
-                ):
-                    if win is None or not row_sel.any():
-                        continue
-                    rids, starts = _exact_candidates(
-                        win, batch, ctx, row_sel, reverse
-                    )
-                    if len(rids) == 0:
-                        continue
-                    gpos = batch.offsets[rids] + starts
-                    delta = np.zeros(total_len + 1, dtype=np.int32)
-                    np.add.at(delta, gpos, 1)
-                    np.add.at(delta, gpos + ctx.k, -1)
-                    gmask = np.cumsum(delta[:total_len]) > 0
-                    # global run-length encoding; per row: slice + clip runs
-                    edges = np.flatnonzero(np.diff(gmask.view(np.int8)))
-                    run_starts = np.concatenate(([0], edges + 1))
-                    run_ends = np.concatenate((edges + 1, [total_len]))
-                    run_vals = gmask[run_starts]
-                    # row-bound run windows for ALL survivors in two
-                    # vectorized searchsorteds; the remaining per-row work
-                    # is the quirk-preserving O(runs) scoring itself
-                    rs = np.unique(rids)
-                    offs = batch.offsets[rs]
-                    ends = offs + batch.lens[rs]
-                    i0s = np.searchsorted(run_ends, offs, side="right")
-                    i1s = np.searchsorted(run_starts, ends, side="left")
-                    for r, o, e, i0, i1 in zip(
-                        rs.tolist(), offs.tolist(), ends.tolist(),
-                        i0s.tolist(), i1s.tolist(),
-                    ):
-                        rl = np.minimum(run_ends[i0:i1], e) - np.maximum(
-                            run_starts[i0:i1], o
-                        )
-                        scores[r] = score_runs(run_vals[i0:i1], rl, p)
-                sp_pass = fp_any & (scores >= ctx.mst)
-            elif mode == "exact":
-                contains = _contains_subarray(
-                    batch, ctx.target_tokens, fp_f, False, None
-                )
-                if fp_r.any():
-                    contains |= _contains_subarray(
-                        batch, ctx.target_tokens, fp_r, True, ctx.complement_map
-                    )
-                sp_pass = fp_any & contains
-                scores = np.where(contains, len(ctx.target_tokens) * int(p.hit), 0)
-            else:  # pragma: no cover
-                raise ValueError(f"unknown mode {mode!r}")
-
-            out_idx = pa.array(np.flatnonzero(fp_any))
-            idx_np = np.flatnonzero(fp_any)
-            cols = {c: rb.column(rb.schema.get_field_index(c)).take(out_idx)
-                    for c in passthrough}
-            cols["rc"] = pa.array(fp_r[idx_np])
-            cols["fp_hits"] = pa.array(
-                np.where(fp_r, counts_r, counts_f)[idx_np].astype(np.int32)
+            # the table decision is per incoming batch; cache-blocking then
+            # processes it in zero-copy row slices so the window temporaries
+            # stay cache-resident (all downstream logic is per-row, so
+            # slicing is semantics-free)
+            radix = window_radix(
+                raw_list_values(rb0, tokens_col), ctx.k, ctx.complement_map
             )
-            cols["score"] = pa.array(scores[idx_np].astype(np.int64))
-            cols["threshold"] = pa.array(
-                np.full(len(idx_np), float(ctx.mst), dtype=np.float64)
+            for rb in iter_cache_slices(rb0, tokens_col):
+                if rb.num_rows:
+                    out = _screen_slice(rb, ctx, radix)
+                    if out is not None:
+                        yield out
+
+    def _screen_slice(rb, ctx, radix):
+        n = rb.num_rows
+        p = ctx.params
+        batch = token_batch_from_arrow(rb, tokens_col)
+        tw = TargetWindows(
+            FlatWindows(batch, ctx.k, ctx.complement_map, radix), ctx
+        )
+        fp_f, fp_r, fp_hits = prescreen(tw, n, rc_retry)
+        fp_any = fp_f | fp_r
+        if not fp_any.any():
+            return None
+
+        # ---- phase 2: verify survivors
+        scores = np.zeros(n, dtype=np.int64)
+        if mode == "scored":
+            score_survivors(tw, fp_f, False, scores, p)
+            score_survivors(tw, fp_r, True, scores, p)
+            sp_pass = fp_any & (scores >= ctx.mst)
+        elif mode == "exact":
+            contains = _contains_subarray(
+                batch, ctx.target_tokens, fp_f, False, None
             )
-            cols["sp_pass"] = pa.array(sp_pass[idx_np])
-            if keep_tokens:
-                cols[tokens_col] = rb.column(
-                    rb.schema.get_field_index(tokens_col)
-                ).take(out_idx)
-            yield pa.RecordBatch.from_pydict(cols)
+            if fp_r.any():
+                contains |= _contains_subarray(
+                    batch, ctx.target_tokens, fp_r, True, ctx.complement_map
+                )
+            sp_pass = fp_any & contains
+            scores = np.where(contains, len(ctx.target_tokens) * int(p.hit), 0)
+        else:  # pragma: no cover
+            raise ValueError(f"unknown mode {mode!r}")
+
+        idx_np = np.flatnonzero(fp_any)
+        out_idx = pa.array(idx_np)
+        cols = {c: rb.column(rb.schema.get_field_index(c)).take(out_idx)
+                for c in passthrough}
+        cols["rc"] = pa.array(fp_r[idx_np])
+        cols["fp_hits"] = pa.array(fp_hits[idx_np].astype(np.int32))
+        cols["score"] = pa.array(scores[idx_np].astype(np.int64))
+        cols["threshold"] = pa.array(
+            np.full(len(idx_np), float(ctx.mst), dtype=np.float64)
+        )
+        cols["sp_pass"] = pa.array(sp_pass[idx_np])
+        if keep_tokens:
+            cols[tokens_col] = rb.column(
+                rb.schema.get_field_index(tokens_col)
+            ).take(out_idx)
+        return pa.RecordBatch.from_pydict(cols)
 
     return kernel
 

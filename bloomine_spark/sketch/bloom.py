@@ -6,10 +6,11 @@ Sizing reproduces the reference exactly, including its quirks
   m = int(-(n * ln p) / ln(2)^2)          # C++ double→int truncation
   k = int((m // n) * ln 2)                # INTEGER division m/n first
 
-Probing uses portable Kirsch–Mitzenmacher double hashing instead of the
+Probe i of an element hash is one independent splitmix64 round
+(``functions.hashing.bloom_probe_index``) — portable, unlike the
 reference's implementation-defined ``std::hash<string>(el + str(i))``
-(/root/reference/src/BloomFilter.hpp:91-93) — decisions, not bit arrays,
-are what we match (SURVEY.md §7).
+(src/BloomFilter.hpp:91-93); decisions, not bit arrays, are what we match
+(SURVEY.md §7).
 
 The bit array is a packed ``np.uint8`` buffer, so a filter merge is a
 single ``np.bitwise_or`` — the distributive-aggregate property that makes

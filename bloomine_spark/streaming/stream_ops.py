@@ -3,8 +3,8 @@
 The reference is batch-only (SURVEY.md §2.9); these are the streaming
 extensions a training-data ingest pipeline needs:
 
- * ``screen_stream`` — the SAME fused mapInPandas screen kernel applied to a
-   streaming DataFrame (mapInPandas is stateless, so it composes with
+ * ``screen_stream`` — the SAME fused mapInArrow screen kernel applied to a
+   streaming DataFrame (mapInArrow is stateless, so it composes with
    readStream unchanged — one code path for batch and streaming).
  * ``hits_per_window_stream`` — watermarked tumbling-window hit counts with
    late-data handling.

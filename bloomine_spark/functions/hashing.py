@@ -102,16 +102,6 @@ def code_kgram_hashes(
     return splitmix64(h)
 
 
-def hash_tokens_1d(tokens: np.ndarray) -> np.uint64:
-    """Hash one full token array (used for target patterns / exact dedup)."""
-    h = np.uint64(0)
-    flat = tokens.astype(np.uint64, copy=False)
-    # same recurrence as rolling_kgram_hash with k == len(tokens)
-    for t in flat:
-        h = h * _POLY_P + t
-    return splitmix64(np.array([h], dtype=np.uint64))[0]
-
-
 def bloom_probe_index(
     h: np.ndarray, i: int, m: np.uint64
 ) -> np.ndarray:

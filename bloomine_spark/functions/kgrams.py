@@ -1,10 +1,12 @@
 """Batch-level k-gram window machinery.
 
-Converts a pandas Series of token arrays (one Arrow record batch worth of
-rows) into flat numpy buffers plus per-window row ids and hashes — the
+Views an Arrow list column's contiguous values+offsets buffers (one
+record batch worth of rows) as flat numpy buffers, zero copy, and derives
+per-window row ids, hashes and base-radix codes from them — the
 vectorized analog of the reference's per-read ``genKmerSet`` /
 ``genKmerPosMap`` loops (/root/reference/src/FQread.hpp:105-115,502-512),
-with zero per-row Python in the hot path.
+with zero per-row Python in the hot path. ``flatten_token_series`` builds
+the same flat layout from a pandas Series of token arrays.
 """
 
 from __future__ import annotations

@@ -14,7 +14,6 @@ from __future__ import annotations
 from typing import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -236,8 +235,8 @@ def _batch_flank_anchors(batch, kascade, flank_flag: str, len_flank: int,
 
 def _extract_regions(batch, kas_head, kas_tail, len_head, len_tail,
                      kas_head_rev=None, kas_tail_rev=None, comp=None):
-    """Batched isolate_target core shared by ``extract_targets`` and
-    ``extract_targets_multi``: anchor both flanks, resolve orientation and
+    """Batched isolate_target core of ``extract_targets_multi``'s kernel,
+    run once per probe's rows: anchor both flanks, resolve orientation and
     slice bounds with Python-slice semantics, and gather the inter-flank
     regions from the flat token buffer.
 
@@ -316,68 +315,17 @@ def extract_targets(
     revcomp normalization of '-' reads and swapped-flank slices.
 
     Output: doc_id, extracted (array<int>), raw anchor positions and
-    orientation. Arrow-native: anchor search is the batched
-    ``_batch_flank_anchors`` (no per-row Python), and the variable-length
-    extracted regions are assembled with one vectorized gather over the
-    flat token buffer.
+    orientation. The one-probe case of ``extract_targets_multi``: every
+    row is assigned the same probe, and the sample and probe columns are
+    dropped again.
     """
-    head = np.asarray(list(head_flank), dtype=np.int64)
-    tail = np.asarray(list(tail_flank), dtype=np.int64)
-    kas_head = _kascade_hashes(head, min_kmer)
-    kas_tail = _kascade_hashes(tail, min_kmer)
-    comp = (np.asarray(complement_map, dtype=np.int64)
-            if complement_map is not None else None)
-    kas_head_rev = (_kascade_hashes(comp[head], min_kmer)
-                    if comp is not None else None)
-    kas_tail_rev = (_kascade_hashes(comp[tail], min_kmer)
-                    if comp is not None else None)
-    len_head, len_tail = len(head), len(tail)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("extracted", T.ArrayType(T.IntegerType())),
-            T.StructField("head_pos", T.IntegerType()),
-            T.StructField("tail_pos", T.IntegerType()),
-            T.StructField("orientation", T.StringType()),
-        ]
-    )
-
-    def kernel(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from bloomine_spark.functions.kgrams import token_batch_from_arrow
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            batch = token_batch_from_arrow(rb, tokens_col)
-            res = _extract_regions(batch, kas_head, kas_tail,
-                                   len_head, len_tail,
-                                   kas_head_rev, kas_tail_rev, comp)
-            if res is None:
-                continue
-            rows, offs, vals, raw_h, raw_t, o_rev = res
-            ext = pa.ListArray.from_arrays(pa.array(offs), pa.array(vals))
-            doc = pc.cast(
-                rb.column(rb.schema.get_field_index("doc_id")).take(
-                    pa.array(rows)
-                ),
-                pa.string(),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc,
-                    ext,
-                    pa.array(raw_h.astype(np.int32)),
-                    pa.array(raw_t.astype(np.int32)),
-                    pa.array(np.where(o_rev, "-", "+")),
-                ],
-                ["doc_id", "extracted", "head_pos", "tail_pos", "orientation"],
-            )
-
-    return hits.mapInArrow(kernel, schema=schema)
+    return extract_targets_multi(
+        hits.withColumn("target_id", F.lit("")),
+        {"": (head_flank, tail_flank)},
+        min_kmer=min_kmer,
+        tokens_col=tokens_col,
+        complement_map=complement_map,
+    ).select("doc_id", "extracted", "head_pos", "tail_pos", "orientation")
 
 
 def extract_targets_multi(

@@ -484,19 +484,16 @@ def score_survivors(
 
 
 def _contains_subarray(
-    batch: TokenBatch, pattern: np.ndarray,
-    row_sel: np.ndarray, reverse: bool, complement_map: np.ndarray | None,
+    win: FlatWindows, pattern: np.ndarray, row_sel: np.ndarray, reverse: bool,
 ) -> np.ndarray:
     """Exact contiguous-subarray containment per row (vectorized).
 
-    Hash every len(pattern)-window of the flat buffer, compare to the
-    pattern hash, confirm token equality, then validate row boundaries —
-    collision-proof. Used by verify mode "exact".
+    ``win`` holds the len(pattern)-windows of the batch. Hash them, compare
+    to the pattern hash, confirm token equality, then validate row
+    boundaries — collision-proof. Used by verify mode "exact".
     """
-    n_rows = len(row_sel)
-    out = np.zeros(n_rows, dtype=bool)
+    out = np.zeros(len(row_sel), dtype=bool)
     kp = len(pattern)
-    win = FlatWindows(batch, kp, complement_map=complement_map)
     if win.n_windows == 0:
         return out
     # the transformed read contains raw-P iff some window w satisfies
@@ -516,19 +513,56 @@ def _contains_subarray(
     return out
 
 
+def verify(
+    tw: TargetWindows, fp_f: np.ndarray, fp_r: np.ndarray, mode: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Phase 2 for one target: (score, sp_pass) per row.
+
+    ``"scored"`` scores each orientation's survivors against MST;
+    ``"exact"`` requires the whole target as a contiguous subarray of the
+    row (reverse complemented for RC survivors).
+    """
+    ctx = tw.ctx
+    p = ctx.params
+    fp_any = fp_f | fp_r
+    if mode == "scored":
+        scores = np.zeros(len(fp_f), dtype=np.int64)
+        score_survivors(tw, fp_f, False, scores, p)
+        score_survivors(tw, fp_r, True, scores, p)
+        return scores, fp_any & (scores >= ctx.mst)
+    if mode == "exact":
+        target = ctx.target_tokens
+        pat = FlatWindows(tw.win.batch, len(target), ctx.complement_map)
+        contains = _contains_subarray(pat, target, fp_f, False)
+        if fp_r.any():
+            contains |= _contains_subarray(pat, target, fp_r, True)
+        scores = np.where(contains, len(target) * int(p.hit), 0)
+        return scores, fp_any & contains
+    raise ValueError(f"unknown mode {mode!r}")
+
+
 def make_screen_kernel(
-    ctx_bc,  # Broadcast[TargetContext]
+    ctx_bc,  # Broadcast[dict[str, TargetContext]]
     tokens_col: str,
     passthrough: list[str],
-    mode: str,
-    rc_retry: bool,
-    keep_tokens: bool,
+    k: int,
+    complement_map: np.ndarray | None = None,
+    mode: str = "scored",
+    rc_retry: bool = True,
+    keep_tokens: bool = False,
+    id_col: str = "target_id",
 ):
-    """Build the mapInArrow function. ``ctx_bc`` is a Spark broadcast.
+    """Build the mapInArrow function screening every target of ``ctx_bc``
+    (a Spark broadcast of ``{target_id: TargetContext}``, all prepared with
+    this ``k`` and ``complement_map``) in one pass over the data.
 
     Arrow-native: the tokens list column is consumed through its contiguous
-    values+offsets buffers (zero copy, no per-row ndarrays), and survivor
-    rows are emitted with ``take`` on the original Arrow columns.
+    values+offsets buffers (zero copy, no per-row ndarrays). Window codes
+    (or, off the table path, window hashes) are computed once per slice and
+    shared by every target, which then pays only its own table gather (or
+    Bloom probes) and its own survivors' verification. Each target's
+    survivor rows are emitted as one record batch, with ``take`` on the
+    original Arrow columns and the target id in column ``id_col``.
     """
     import pyarrow as pa
 
@@ -539,7 +573,7 @@ def make_screen_kernel(
     )
 
     def kernel(batches) -> Iterator["pa.RecordBatch"]:
-        ctx: TargetContext = ctx_bc.value
+        ctx_map: dict[str, TargetContext] = ctx_bc.value
         for rb0 in batches:
             if rb0.num_rows == 0:
                 continue
@@ -548,63 +582,78 @@ def make_screen_kernel(
             # stay cache-resident (all downstream logic is per-row, so
             # slicing is semantics-free)
             radix = window_radix(
-                raw_list_values(rb0, tokens_col), ctx.k, ctx.complement_map
+                raw_list_values(rb0, tokens_col), k, complement_map
             )
             for rb in iter_cache_slices(rb0, tokens_col):
                 if rb.num_rows:
-                    out = _screen_slice(rb, ctx, radix)
-                    if out is not None:
-                        yield out
+                    yield from _screen_slice(rb, ctx_map, radix)
 
-    def _screen_slice(rb, ctx, radix):
+    def _screen_slice(rb, ctx_map, radix):
         n = rb.num_rows
-        p = ctx.params
-        batch = token_batch_from_arrow(rb, tokens_col)
-        tw = TargetWindows(
-            FlatWindows(batch, ctx.k, ctx.complement_map, radix), ctx
+        win = FlatWindows(
+            token_batch_from_arrow(rb, tokens_col), k, complement_map, radix
         )
-        fp_f, fp_r, fp_hits = prescreen(tw, n, rc_retry)
-        fp_any = fp_f | fp_r
-        if not fp_any.any():
-            return None
-
-        # ---- phase 2: verify survivors
-        scores = np.zeros(n, dtype=np.int64)
-        if mode == "scored":
-            score_survivors(tw, fp_f, False, scores, p)
-            score_survivors(tw, fp_r, True, scores, p)
-            sp_pass = fp_any & (scores >= ctx.mst)
-        elif mode == "exact":
-            contains = _contains_subarray(
-                batch, ctx.target_tokens, fp_f, False, None
+        for tid, ctx in ctx_map.items():
+            tw = TargetWindows(win, ctx)
+            fp_f, fp_r, fp_hits = prescreen(tw, n, rc_retry)
+            fp_any = fp_f | fp_r
+            if not fp_any.any():
+                continue
+            scores, sp_pass = verify(tw, fp_f, fp_r, mode)
+            idx_np = np.flatnonzero(fp_any)
+            out_idx = pa.array(idx_np)
+            cols = {c: rb.column(rb.schema.get_field_index(c)).take(out_idx)
+                    for c in passthrough}
+            cols[id_col] = pa.array([tid] * len(idx_np), type=pa.string())
+            cols["rc"] = pa.array(fp_r[idx_np])
+            cols["fp_hits"] = pa.array(fp_hits[idx_np].astype(np.int32))
+            cols["score"] = pa.array(scores[idx_np].astype(np.int64))
+            cols["threshold"] = pa.array(
+                np.full(len(idx_np), float(ctx.mst), dtype=np.float64)
             )
-            if fp_r.any():
-                contains |= _contains_subarray(
-                    batch, ctx.target_tokens, fp_r, True, ctx.complement_map
-                )
-            sp_pass = fp_any & contains
-            scores = np.where(contains, len(ctx.target_tokens) * int(p.hit), 0)
-        else:  # pragma: no cover
-            raise ValueError(f"unknown mode {mode!r}")
-
-        idx_np = np.flatnonzero(fp_any)
-        out_idx = pa.array(idx_np)
-        cols = {c: rb.column(rb.schema.get_field_index(c)).take(out_idx)
-                for c in passthrough}
-        cols["rc"] = pa.array(fp_r[idx_np])
-        cols["fp_hits"] = pa.array(fp_hits[idx_np].astype(np.int32))
-        cols["score"] = pa.array(scores[idx_np].astype(np.int64))
-        cols["threshold"] = pa.array(
-            np.full(len(idx_np), float(ctx.mst), dtype=np.float64)
-        )
-        cols["sp_pass"] = pa.array(sp_pass[idx_np])
-        if keep_tokens:
-            cols[tokens_col] = rb.column(
-                rb.schema.get_field_index(tokens_col)
-            ).take(out_idx)
-        return pa.RecordBatch.from_pydict(cols)
+            cols["sp_pass"] = pa.array(sp_pass[idx_np])
+            if keep_tokens:
+                cols[tokens_col] = rb.column(
+                    rb.schema.get_field_index(tokens_col)
+                ).take(out_idx)
+            yield pa.RecordBatch.from_pydict(cols)
 
     return kernel
+
+
+def _screen_plan(
+    df: DataFrame,
+    ctxs: dict[str, TargetContext],
+    k: int,
+    complement_map: np.ndarray | None,
+    tokens_col: str,
+    mode: str,
+    rc_retry: bool,
+    keep_tokens: bool,
+    id_col: str = "target_id",
+) -> DataFrame:
+    """The one screen plan: a ``mapInArrow`` of ``make_screen_kernel`` over
+    ``df`` with the targets ``ctxs`` broadcast. Columns: passthrough cols +
+    (``id_col``, rc, fp_hits, score, threshold, sp_pass) + the tokens
+    column when ``keep_tokens``."""
+    ctx_bc = df.sparkSession.sparkContext.broadcast(ctxs)
+    fields = [f for f in df.schema.fields if f.name != tokens_col]
+    passthrough = [f.name for f in fields]
+    fields += [
+        T.StructField(id_col, T.StringType()),
+        T.StructField("rc", T.BooleanType()),
+        T.StructField("fp_hits", T.IntegerType()),
+        T.StructField("score", T.LongType()),
+        T.StructField("threshold", T.DoubleType()),
+        T.StructField("sp_pass", T.BooleanType()),
+    ]
+    if keep_tokens:
+        fields.append(df.schema[tokens_col])
+    kernel = make_screen_kernel(
+        ctx_bc, tokens_col, passthrough, k, complement_map, mode, rc_retry,
+        keep_tokens, id_col,
+    )
+    return df.mapInArrow(kernel, schema=T.StructType(fields))
 
 
 def screen_scores(
@@ -622,28 +671,19 @@ def screen_scores(
     Columns: passthrough cols + (rc, fp_hits, score, threshold, sp_pass)
     — the Spark analog of ``<prefix>_flank_scores.tsv``
     (/root/reference/src/BlooMineUtils.cpp:43-60).
+
+    The one-target case of the multi-target screen plan; its target-id
+    column is dropped again.
     """
-    spark = df.sparkSession
     ctx = prepare_target(target_tokens, params, complement_map)
-    ctx_bc = spark.sparkContext.broadcast(ctx)
-
-    passthrough = [f.name for f in df.schema.fields if f.name != tokens_col]
-    fields = [f for f in df.schema.fields if f.name != tokens_col]
-    fields += [
-        T.StructField("rc", T.BooleanType()),
-        T.StructField("fp_hits", T.IntegerType()),
-        T.StructField("score", T.LongType()),
-        T.StructField("threshold", T.DoubleType()),
-        T.StructField("sp_pass", T.BooleanType()),
-    ]
-    if keep_tokens:
-        fields.append(df.schema[tokens_col])
-    schema = T.StructType(fields)
-
-    kernel = make_screen_kernel(
-        ctx_bc, tokens_col, passthrough, mode, rc_retry, keep_tokens
-    )
-    return df.mapInArrow(kernel, schema=schema)
+    # name the dropped id column apart from every input column
+    id_col = "target_id"
+    while id_col in df.columns:
+        id_col = "_" + id_col
+    return _screen_plan(
+        df, {"": ctx}, params.k, complement_map, tokens_col, mode, rc_retry,
+        keep_tokens, id_col,
+    ).drop(id_col)
 
 
 def screen_hits(

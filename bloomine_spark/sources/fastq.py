@@ -147,10 +147,6 @@ def iter_fasta_records(data: bytes):
         yield name, b"".join(chunks), None
 
 
-def _reader(fmt: str):
-    return iter_fastq_records if fmt == "fastq" else iter_fasta_records
-
-
 def parse_fastq_flat(data: bytes):
     """C-speed FASTQ framing + ONE vectorized tokenization per file.
 
@@ -360,12 +356,12 @@ def write_fastq(df: DataFrame, path: str, partition_by_source: bool = True,
             if n == 0:
                 continue
             batch = token_batch_from_arrow(rb, tokens_col)
-            flat, lens = batch.flat, batch.lens
-            if len(flat) and (
-                flat.min() < 0 or flat.max() >= len(TOKEN_BASES)
+            values, lens = batch.values, batch.lens
+            if len(values) and (
+                values.min() < 0 or values.max() >= len(TOKEN_BASES)
             ):
                 raise ValueError("tokens outside the DNA vocabulary 0..4")
-            bases = TOKEN_BASES[flat].tobytes().decode("ascii")
+            bases = TOKEN_BASES[values].tobytes().decode("ascii")
             ends = np.cumsum(lens)
             starts = (ends - lens).tolist()
             ends = ends.tolist()

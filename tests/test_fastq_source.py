@@ -246,6 +246,20 @@ def test_fastq_hits_sink_roundtrip(spark, tmp_path, fastq_dir):
     assert back == want and len(want) == 3
 
 
+@pytest.mark.parametrize("bad", [-1, 5])
+def test_write_fastq_rejects_tokens_outside_dna(spark, tmp_path, bad):
+    """A token with no base (negative, or past N) fails the sink instead
+    of writing a wrong base."""
+    from bloomine_spark.sources.fastq import write_fastq
+
+    df = spark.createDataFrame(
+        [("r0", [0, 1, 2, 3, 4]), ("r1", [0, bad, 2])],
+        "doc_id string, tokens array<int>",
+    )
+    with pytest.raises(Exception, match="outside the DNA vocabulary"):
+        write_fastq(df, str(tmp_path / "out"), partition_by_source=False)
+
+
 def test_parse_fastq_flat_matches_iter_records():
     """The vectorized file parser == the per-record reference parser,
     including CRLF line endings and headers with metadata."""

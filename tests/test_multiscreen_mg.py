@@ -54,6 +54,22 @@ def test_multi_screen_equals_single_screens(spark, seq_df):
     assert (multi["target_id"] == "tB").sum() >= 30
 
 
+def test_screen_scores_keeps_input_target_id_column(spark, seq_df):
+    """screen_scores drops only its own target-id column, never an input
+    column of the same name."""
+    plain = screen_scores(seq_df, DEFAULT_TARGET, P)
+    tagged = screen_scores(
+        seq_df.withColumn("target_id", F.lit("probe-7")), DEFAULT_TARGET, P
+    )
+    n = len(seq_df.columns) - 1  # passthrough columns of seq_df
+    assert tagged.columns == (
+        plain.columns[:n] + ["target_id"] + plain.columns[n:]
+    )
+    got = tagged.toPandas()
+    assert set(got["target_id"]) == {"probe-7"}
+    assert len(got) == plain.count() > 0
+
+
 def test_polyfamily_onepass_equals_multipass(spark, seq_df):
     from bloomine_spark.operators.cascade import polyfamily_run
 

@@ -15,10 +15,7 @@ from hypothesis import strategies as st
 
 from bloomine_spark import oracle
 from bloomine_spark.functions.kgrams import raw_list_values
-from bloomine_spark.operators.multiscreen import (
-    make_multi_screen_kernel,
-    prepare_targets,
-)
+from bloomine_spark.operators.multiscreen import prepare_targets
 from bloomine_spark.operators.screen import (
     make_screen_kernel,
     prepare_target,
@@ -55,11 +52,12 @@ def run_kernel_local(reads: list[list[int]], target: list[int],
     """Drive the mapInArrow kernel on one in-memory batch."""
     ctx = prepare_target(target, params, complement_map)
     kern = make_screen_kernel(
-        FakeBroadcast(ctx), "tokens", ["doc_id"], mode, True, False
+        FakeBroadcast({"": ctx}), "tokens", ["doc_id"], params.k,
+        complement_map, mode,
     )
-    return collect(
-        kern, reads, ["doc_id", "rc", "fp_hits", "score", "threshold", "sp_pass"]
-    )
+    cols = ["doc_id", "target_id", "rc", "fp_hits", "score", "threshold",
+            "sp_pass"]
+    return collect(kern, reads, cols).drop(columns="target_id")
 
 
 token = st.integers(min_value=0, max_value=15)  # tiny vocab → many collisions
@@ -201,14 +199,15 @@ def test_dna_kernel_matches_oracle(case):
 @settings(max_examples=40, deadline=None)
 @given(dna_case(n_targets=3))
 def test_multi_screen_matches_single_target_screens(case):
-    """screen_multi_scores' kernel == one screen_scores kernel per target."""
+    """The kernel screening several targets at once == the kernel run
+    once per target."""
     reads, targets, params = case
     tmap = {f"t{i}": t for i, t in enumerate(targets)}
     cols = ["doc_id", "target_id", "rc", "fp_hits", "score", "threshold",
             "sp_pass"]
-    kern = make_multi_screen_kernel(
+    kern = make_screen_kernel(
         FakeBroadcast(prepare_targets(tmap, params, DNA_COMPLEMENT_MAP)),
-        "tokens", ["doc_id"], True, params.k, DNA_COMPLEMENT_MAP,
+        "tokens", ["doc_id"], params.k, DNA_COMPLEMENT_MAP,
     )
     multi = collect(kern, reads, cols)
     for tid, target in tmap.items():

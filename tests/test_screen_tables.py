@@ -3,7 +3,8 @@
 The table path (base-V window codes + per-target flag tables) must give
 exactly the hash path's answers: per-row distinct Bloom-hit counts in both
 orientations, token-confirmed target k-gram candidates, and the kernels'
-full output. Also covers the table gate, out-of-vocabulary tokens under a
+full output, with one target and with several sharing one set of
+window codes. Also covers the table gate, out-of-vocabulary tokens under a
 complement map, and the screen modules' imports."""
 
 import ast
@@ -21,10 +22,7 @@ from bloomine_spark.functions.kgrams import (
     window_codes,
 )
 from bloomine_spark.operators import screen
-from bloomine_spark.operators.multiscreen import (
-    make_multi_screen_kernel,
-    prepare_targets,
-)
+from bloomine_spark.operators.multiscreen import prepare_targets
 from bloomine_spark.operators.screen import (
     FlatWindows,
     TargetWindows,
@@ -180,7 +178,7 @@ def test_screen_kernel_table_matches_hash(k, fp, cmap, mode, monkeypatch):
     def kernel_of():
         ctx = prepare_target(target, params, cmap)
         return make_screen_kernel(
-            FakeBroadcast(ctx), "tokens", ["doc_id"], mode, True, False
+            FakeBroadcast({"": ctx}), "tokens", ["doc_id"], k, cmap, mode
         )
 
     table, hashed = both_paths(kernel_of, rb, monkeypatch)
@@ -193,7 +191,8 @@ def test_screen_kernel_table_matches_hash(k, fp, cmap, mode, monkeypatch):
 
 
 @pytest.mark.parametrize("cmap", [DNA_COMPLEMENT_MAP, None])
-def test_multi_kernel_table_matches_hash(cmap, monkeypatch):
+@pytest.mark.parametrize("mode", ["scored", "exact"])
+def test_multi_kernel_table_matches_hash(cmap, mode, monkeypatch):
     rng = np.random.default_rng(3)
     targets = {f"t{i}": rng.integers(0, 4, 20).tolist() for i in range(3)}
     rb = dna_batch(rng, 3000, *targets.values())
@@ -201,13 +200,15 @@ def test_multi_kernel_table_matches_hash(cmap, monkeypatch):
 
     def kernel_of():
         ctxs = prepare_targets(targets, params, cmap)
-        return make_multi_screen_kernel(
-            FakeBroadcast(ctxs), "tokens", ["doc_id"], True, params.k, cmap
+        return make_screen_kernel(
+            FakeBroadcast(ctxs), "tokens", ["doc_id"], params.k, cmap, mode
         )
 
     table, hashed = both_paths(kernel_of, rb, monkeypatch)
     pd.testing.assert_frame_equal(table, hashed)
     assert set(table["target_id"]) == set(targets)
+    passed = table[table["sp_pass"]]
+    assert set(passed["target_id"]) == set(targets)
 
 
 # ---------------------------------------------------------------------------
@@ -260,7 +261,7 @@ def test_gated_batches_take_hash_path(monkeypatch):
     for rb, cmap in ((small, DNA_COMPLEMENT_MAP), (wide, None)):
         ctx = prepare_target(target, params, cmap)
         kern = make_screen_kernel(
-            FakeBroadcast(ctx), "tokens", ["doc_id"], "scored", True, False
+            FakeBroadcast({"": ctx}), "tokens", ["doc_id"], params.k, cmap
         )
         out = run_kernel(kern, rb)
         assert out["sp_pass"].sum() > 0
@@ -273,7 +274,7 @@ def test_gated_batches_take_hash_path(monkeypatch):
 
 @pytest.mark.parametrize("bad", [-1, 7])
 @pytest.mark.parametrize("n_filler", [0, 3000])  # hash path / table path
-@pytest.mark.parametrize("multi", [False, True])
+@pytest.mark.parametrize("multi", [False, True])  # 1 target / 3 targets
 def test_oov_token_under_complement_map_raises(bad, n_filler, multi):
     rng = np.random.default_rng(9)
     target = rng.integers(0, 4, 24)
@@ -287,27 +288,25 @@ def test_oov_token_under_complement_map_raises(bad, n_filler, multi):
         }
     )
     params = ScreenParams()
+    targets = {"t0": target}
     if multi:
-        ctxs = prepare_targets({"t": target}, params, DNA_COMPLEMENT_MAP)
-        kern = make_multi_screen_kernel(
-            FakeBroadcast(ctxs), "tokens", ["doc_id"], True, params.k,
-            DNA_COMPLEMENT_MAP,
-        )
-    else:
-        ctx = prepare_target(target, params, DNA_COMPLEMENT_MAP)
-        kern = make_screen_kernel(
-            FakeBroadcast(ctx), "tokens", ["doc_id"], "scored", True, False
-        )
+        targets.update((f"t{i}", rng.integers(0, 4, 24)) for i in (1, 2))
+    ctxs = prepare_targets(targets, params, DNA_COMPLEMENT_MAP)
+    kern = make_screen_kernel(
+        FakeBroadcast(ctxs), "tokens", ["doc_id"], params.k,
+        DNA_COMPLEMENT_MAP,
+    )
     with pytest.raises(ValueError, match=rf"token {bad} .*vocabulary of 5 tokens"):
         run_kernel(kern, rb)
 
 
 # ---------------------------------------------------------------------------
-# lint: the screen modules import nothing they do not use
+# lint: the screen and cascade modules import nothing they do not use
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize(
-    "module", ["operators/screen.py", "operators/multiscreen.py"]
+    "module",
+    ["operators/screen.py", "operators/multiscreen.py", "operators/cascade.py"],
 )
 def test_screen_module_imports_are_used(module):
     tree = ast.parse((REPO / "bloomine_spark" / module).read_text())

@@ -10,8 +10,8 @@ source string)``.
 
 Not a port: the reference is a single-node C++ thread-pool engine
 (src/BlooMineUtils.cpp:258-268); this package expresses the same dataflow as
-shuffle-free ``mapInPandas`` scans plus relational ops that Catalyst
-optimizes, designed for 1000-executor clusters.
+shuffle-free Arrow-native ``mapInArrow`` scans plus relational ops that
+Catalyst optimizes, designed for 1000-executor clusters.
 """
 
 __version__ = "0.1.0"

@@ -2,9 +2,10 @@
 
 Design (SURVEY.md §7 step 5): a sketch aggregation is two physical stages —
 
-1. **partials** — a shuffle-free ``mapInPandas`` pass that folds every
-   partition into one tiny binary sketch state per (partition × group):
-   the map-side combine. This is where all the data volume dies; what
+1. **partials** — a shuffle-free ``mapInArrow`` pass (one kernel,
+   ``fold_partition``, for any number of group columns; a null key is its
+   own group) that folds every partition into one tiny binary sketch state
+   per (partition × group): the map-side combine. This is where all the data volume dies; what
    shuffles afterwards is O(partitions × groups × state_size) bytes,
    independent of row count — the property that makes this viable at
    10^12 rows.
@@ -21,7 +22,7 @@ Sketch value objects only need: ``update_values(np.ndarray)``,
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -120,6 +121,77 @@ class CompositeSketch:
         return cls(members)
 
 
+def _group_order(rb, group_cols: list[str]):
+    """Rows of ``rb`` stably ordered by group, each group's row bounds in
+    that order, and each group's key tuple.
+
+    Every key column is dictionary-encoded with null as its own entry — a
+    null key is its own group, as in Spark's ``groupBy`` — and the codes
+    fold column by column into one compact per-batch group id.
+    """
+    import pyarrow.compute as pc
+
+    gid = np.zeros(rb.num_rows, dtype=np.int64)
+    for c in group_cols:
+        enc = pc.dictionary_encode(rb.column(c), null_encoding="encode")
+        codes = enc.indices.to_numpy(zero_copy_only=False)
+        _, gid = np.unique(gid * len(enc.dictionary) + codes, return_inverse=True)
+    order = np.argsort(gid, kind="stable")
+    bounds = np.searchsorted(gid[order], np.arange(gid.max() + 2))
+    first = order[bounds[:-1]]
+    keys = list(zip(*(rb.column(c).take(first).to_pylist() for c in group_cols)))
+    return order, bounds, keys
+
+
+def fold_partition(batches, group_cols: list[str], value_col: str, factory):
+    """The partial-fold kernel: fold one partition's Arrow record batches
+    into one sketch state per group.
+
+    Returns ``(states, rows, n_values)``: ``states`` is a record batch of
+    the group columns + ``sketch_state`` (``None`` when a grouped fold saw
+    no rows; the ungrouped fold always yields one state, and an empty one
+    is harmless to merge). Values reach ``update_values`` in their native
+    dtype and in batch order: grouped rows are taken once in group order
+    and the value buffer is sliced at the group bounds.
+    """
+    import pyarrow as pa
+
+    acc: dict[tuple, object] = {} if group_cols else {(): factory()}
+    key_types = None
+    rows = n_values = 0
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        rows += rb.num_rows
+        col = rb.column(value_col)
+        if group_cols:
+            key_types = [rb.schema.field(c).type for c in group_cols]
+            order, bounds, keys = _group_order(rb, group_cols)
+            col = col.take(order)
+        else:
+            bounds, keys = np.array([0, rb.num_rows]), [()]
+        if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+            offsets = col.offsets.to_numpy()
+            vals = col.values.to_numpy(zero_copy_only=False)[offsets[0] : offsets[-1]]
+            bounds = offsets[bounds] - offsets[0]
+        else:
+            vals = col.to_numpy(zero_copy_only=False)
+        n_values += len(vals)
+        for key, lo, hi in zip(keys, bounds[:-1], bounds[1:]):
+            sk = acc.get(key)
+            if sk is None:
+                sk = acc[key] = factory()
+            sk.update_values(vals[lo:hi])
+    if not acc:
+        return None, rows, n_values
+    data = {
+        c: pa.array([k[i] for k in acc], type=key_types[i])
+        for i, c in enumerate(group_cols)
+    }
+    data[STATE_COL] = pa.array([sk.to_bytes() for sk in acc.values()], type=pa.binary())
+    return pa.RecordBatch.from_pydict(data), rows, n_values
+
+
 def sketch_partials(
     df: DataFrame,
     group_cols: list[str],
@@ -128,125 +200,22 @@ def sketch_partials(
 ) -> DataFrame:
     """Stage 1: one sketch state per (partition, group). Shuffle-free.
 
-    The global (ungrouped) path runs as ``mapInArrow``: a list column's
-    Arrow layout IS the flat-values+offsets form the kernels want, so the
-    fold touches the token buffer zero-copy — no per-row ndarray
-    materialization at all.
+    Runs ``fold_partition`` as ``mapInArrow`` for any number of group
+    columns: a list column's Arrow layout IS the flat-values+offsets form
+    the update kernels want, so the fold reads the token buffer without
+    per-row ndarray materialization.
     """
-    out_fields = [df.schema[c] for c in group_cols] + [
-        T.StructField(STATE_COL, T.BinaryType())
-    ]
-    schema = T.StructType(out_fields)
+    schema = T.StructType(
+        [df.schema[c] for c in group_cols]
+        + [T.StructField(STATE_COL, T.BinaryType())]
+    )
 
-    if not group_cols:
-        import pyarrow as pa
+    def kernel(batches):
+        states, _, _ = fold_partition(batches, group_cols, value_col, factory)
+        if states is not None:
+            yield states
 
-        from bloomine_spark.functions.kgrams import raw_list_values
-
-        is_array = isinstance(df.schema[value_col].dataType, T.ArrayType)
-
-        def fold_arrow(batches):
-            sk = factory()
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                if is_array:
-                    # native-dtype zero-copy: the update kernels widen
-                    # per cache-sized chunk in their scratch buffers, so
-                    # a full-batch int32→u64 pass here would only add
-                    # memory traffic
-                    sk.update_values(raw_list_values(rb, value_col))
-                else:
-                    sk.update_values(
-                        rb.column(rb.schema.get_field_index(value_col))
-                        .to_numpy(zero_copy_only=False)
-                    )
-            # empty partitions yield an empty sketch — harmless to merge
-            yield pa.RecordBatch.from_pydict(
-                {STATE_COL: pa.array([sk.to_bytes()], type=pa.binary())}
-            )
-
-        return df.mapInArrow(fold_arrow, schema=schema)
-
-    if len(group_cols) == 1:
-        # single-key grouped fold, also Arrow-native: group rows with one
-        # np.unique, slice the flat token buffer per group via a stable
-        # sort on per-position group ids — no pandas groupby machinery
-        import pyarrow as pa
-
-        from bloomine_spark.functions.kgrams import token_batch_from_arrow
-
-        gcol = group_cols[0]
-        is_array = isinstance(df.schema[value_col].dataType, T.ArrayType)
-
-        def fold_arrow_grouped(batches):
-            acc: dict = {}
-            gtype = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                garr = rb.column(rb.schema.get_field_index(gcol))
-                if gtype is None:
-                    gtype = garr.type
-                g = garr.to_numpy(zero_copy_only=False)
-                keys, inv = np.unique(g, return_inverse=True)
-                if is_array:
-                    tb = token_batch_from_arrow(rb, value_col)
-                    pos_group = np.repeat(inv, tb.lens)
-                    vals_all = tb.flat
-                else:
-                    pos_group = inv
-                    vals_all = rb.column(
-                        rb.schema.get_field_index(value_col)
-                    ).to_numpy(zero_copy_only=False)
-                order = np.argsort(pos_group, kind="stable")
-                sorted_vals = vals_all[order]
-                sorted_groups = pos_group[order]
-                bounds = np.searchsorted(
-                    sorted_groups, np.arange(len(keys) + 1)
-                )
-                for gi, key in enumerate(keys):
-                    if key not in acc:
-                        acc[key] = factory()
-                    acc[key].update_values(sorted_vals[bounds[gi]:bounds[gi + 1]])
-            if acc:
-                keys = sorted(acc.keys())
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        gcol: pa.array(list(keys), type=gtype),
-                        STATE_COL: pa.array(
-                            [acc[k].to_bytes() for k in keys], type=pa.binary()
-                        ),
-                    }
-                )
-
-        return df.mapInArrow(fold_arrow_grouped, schema=schema)
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, object] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, sort=False):
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    sk = acc.get(key)
-                    if sk is None:
-                        sk = acc[key] = factory()
-                    sk.update_values(_values_of(sub[value_col]))
-            else:
-                sk = acc.get(())
-                if sk is None:
-                    sk = acc[()] = factory()
-                sk.update_values(_values_of(pdf[value_col]))
-        if acc:
-            keys = list(acc.keys())
-            data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
-            data[STATE_COL] = [acc[k].to_bytes() for k in keys]
-            yield pd.DataFrame(data)
-
-    return df.mapInPandas(fold, schema=schema)
+    return df.mapInArrow(kernel, schema=schema)
 
 
 def _merge_states(states: list[bytes], factory) -> bytes:

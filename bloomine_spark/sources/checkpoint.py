@@ -3,26 +3,27 @@ resume-from-checkpoint — the distributed generalization of the reference's
 output-existence stage skip (/root/reference/bloomine/BloomineRunner.py:170-190).
 
 A checkpointed aggregation persists one row per input partition:
-(partition_id, sketch_state, rows, n_values, secs, ts). Resuming lists the
-completed partition ids, recomputes ONLY the missing ones, appends them,
-and merges — so a 10k-partition job that died at 9k partitions redoes 1k,
-not 10k. Partition ids are stable as long as the input files and
-maxPartitionBytes are unchanged (documented invariant).
+(partition_id, sketch_state, rows, n_values, secs). Each row comes from the
+ungrouped case of the sketch partial fold (``sketch.core.fold_partition``)
+run as one ``mapInArrow`` node. Resuming lists the checkpointed partition
+ids and the same node folds ONLY the missing ones (it yields nothing for the
+others), appends them, and merges. The append is one write job, and a job
+that fails commits none of its partitions: the skip saves work when
+checkpointed rows survive, not yet for a job that died midway. Partition ids
+are stable as long as the input files and maxPartitionBytes are unchanged
+(documented invariant).
 """
 
 from __future__ import annotations
 
 import os
 import time
-from typing import Callable, Iterator
+from typing import Callable
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from bloomine_spark.sketch.core import _merge_states, _values_of
+from bloomine_spark.sketch.core import _merge_states, fold_partition
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -35,37 +36,40 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+def _lineage_kernel(value_col, factory, skip=frozenset(), fail=frozenset()):
+    """mapInArrow kernel: one sketch state + metrics per partition; yields
+    nothing for partitions in ``skip`` and raises in those in ``fail``."""
+
+    def kernel(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        if pid in skip:
+            return
+        if pid in fail:
+            raise RuntimeError(f"injected failure in partition {pid}")
+        t0 = time.time()
+        states, rows, n_values = fold_partition(batches, [], value_col, factory)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([pid], type=pa.int32()),
+                states.column(0),
+                pa.array([rows], type=pa.int64()),
+                pa.array([n_values], type=pa.int64()),
+                pa.array([round(time.time() - t0, 4)], type=pa.float64()),
+            ],
+            names=LINEAGE_SCHEMA.names,
+        )
+
+    return kernel
+
+
 def partials_with_lineage(
     df: DataFrame, value_col: str, factory: Callable[[], object]
 ) -> DataFrame:
     """One sketch state per partition + per-partition metrics."""
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        t0 = time.time()
-        pid = TaskContext.get().partitionId()
-        sk = factory()
-        rows = 0
-        n_values = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vals = _values_of(pdf[value_col])
-            sk.update_values(vals)
-            rows += len(pdf)
-            n_values += len(vals)
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "sketch_state": [sk.to_bytes()],
-                "rows": [rows],
-                "n_values": [n_values],
-                "secs": [round(time.time() - t0, 4)],
-            }
-        )
-
-    return df.mapInPandas(fold, schema=LINEAGE_SCHEMA)
+    return df.mapInArrow(_lineage_kernel(value_col, factory), schema=LINEAGE_SCHEMA)
 
 
 def checkpoint_dir(base: str, run_id: str, stage: str) -> str:
@@ -103,41 +107,12 @@ def checkpointed_sketch_agg(
     missing = [p for p in range(n_parts) if p not in done]
 
     if missing:
-        work = df
-        if done:
-            # recompute only missing partitions; partition ids are stable
-            # for unchanged input files
-            pids = spark.sparkContext.broadcast(set(missing))
-
-            def keep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                from pyspark import TaskContext
-
-                if TaskContext.get().partitionId() in pids.value:
-                    yield from batches
-
-            work = df.mapInPandas(keep, schema=df.schema)
-
-        partials = partials_with_lineage(work, value_col, factory)
-        if done:
-            partials = partials.filter(
-                F.col("partition_id").isin([int(p) for p in missing])
-            )
-        if fail_partitions:
-            bad = spark.sparkContext.broadcast(set(fail_partitions))
-
-            def poison(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                from pyspark import TaskContext
-
-                for pdf in batches:
-                    if TaskContext.get().partitionId() in bad.value:
-                        raise RuntimeError(
-                            f"injected failure in partition "
-                            f"{TaskContext.get().partitionId()}"
-                        )
-                    yield pdf
-
-            partials = partials.mapInPandas(poison, schema=LINEAGE_SCHEMA)
-        partials.write.mode("append").parquet(path)
+        # recompute only missing partitions; partition ids are stable for
+        # unchanged input files
+        kernel = _lineage_kernel(
+            value_col, factory, frozenset(done), frozenset(fail_partitions or ())
+        )
+        df.mapInArrow(kernel, schema=LINEAGE_SCHEMA).write.mode("append").parquet(path)
 
     lineage = spark.read.parquet(path).dropDuplicates(["partition_id"])
     states = [r["sketch_state"] for r in lineage.select("sketch_state").collect()]

@@ -22,7 +22,9 @@ def seq_parquet(spark, tmp_path_factory):
     return d
 
 
-def test_checkpoint_resume_skips_done_partitions(spark, seq_parquet, tmp_path):
+def test_checkpoint_resume_skips_done_partitions(
+    spark, seq_parquet, tmp_path, monkeypatch
+):
     base = str(tmp_path / "ckpt")
     df = spark.read.parquet(seq_parquet)
     factory = lambda: HyperLogLog.empty(12)  # noqa: E731
@@ -51,6 +53,8 @@ def test_checkpoint_resume_skips_done_partitions(spark, seq_parquet, tmp_path):
     assert lin["partition_id"].nunique() == df.rdd.getNumPartitions()
     assert (lin["rows"] >= 0).all() and lin["rows"].sum() == df.count()
     assert (lin["secs"] >= 0).all()
+    n_tokens = df.select(F.sum(F.size("tokens"))).head()[0]
+    assert lin["n_values"].sum() == n_tokens
 
     # run 3 (fully resumed): no partition recomputation — lineage unchanged
     sk3, lineage3 = checkpointed_sketch_agg(
@@ -58,6 +62,36 @@ def test_checkpoint_resume_skips_done_partitions(spark, seq_parquet, tmp_path):
     )
     assert sk3.estimate() == whole.estimate()
     assert lineage3.count() == df.rdd.getNumPartitions()
+
+    # run 4 (partly resumed): drop half the checkpointed partitions; only
+    # those recompute, in a plan with ONE python map node over the scan
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from bloomine_spark.plans.audit import plan_facts
+
+    ckpt = os.path.join(base, "run1", "hll")
+    parts = sorted(f for f in os.listdir(ckpt) if f.startswith("part-"))
+    for f in parts[: len(parts) // 2]:
+        os.remove(os.path.join(ckpt, f))
+    written = []
+    write_parquet = DataFrameWriter.parquet
+
+    def spy(self, *args, **kwargs):
+        written.append(self._df)
+        return write_parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    sk4, lineage4 = checkpointed_sketch_agg(
+        df, "tokens", factory, base, "run1", "hll"
+    )
+    assert (sk4.registers == whole.registers).all()
+    lin4 = lineage4.toPandas()
+    assert lin4["partition_id"].nunique() == df.rdd.getNumPartitions()
+    assert lin4["n_values"].sum() == n_tokens
+    (resumed,) = written
+    text = plan_facts(resumed).text
+    assert "MapInPandas" not in text
+    assert text.count("MapInArrow") == 1, text
 
 
 def test_streaming_screen_matches_batch(spark, seq_parquet, tmp_path):

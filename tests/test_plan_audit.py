@@ -93,8 +93,8 @@ def test_sketch_partials_shuffle_is_narrow(spark):
     text = facts.text
     # exactly one exchange, and it is ABOVE the partial fold node
     assert facts.n_exchanges == 1
-    fold_node = "MapInArrow" if "MapInArrow" in text else "MapInPandas"
-    assert text.index("Exchange") < text.index(fold_node)
+    assert "MapInPandas" not in text
+    assert text.index("Exchange") < text.index("MapInArrow")
 
 
 @needs_data

@@ -301,12 +301,15 @@ def test_oov_token_under_complement_map_raises(bad, n_filler, multi):
 
 
 # ---------------------------------------------------------------------------
-# lint: the screen and cascade modules import nothing they do not use
+# lint: the screen, cascade and sketch-fold modules import nothing unused
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize(
     "module",
-    ["operators/screen.py", "operators/multiscreen.py", "operators/cascade.py"],
+    [
+        "operators/screen.py", "operators/multiscreen.py", "operators/cascade.py",
+        "sketch/core.py", "sources/checkpoint.py",
+    ],
 )
 def test_screen_module_imports_are_used(module):
     tree = ast.parse((REPO / "bloomine_spark" / module).read_text())

@@ -3,7 +3,9 @@ single-machine sketch over the same data (grouping invariance through the
 real Spark shuffle), and estimates must track exact answers."""
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from bloomine_spark.datagen import generate_rows
 from bloomine_spark.sketch.cms import CountMinSketch
@@ -29,16 +31,51 @@ def seq_pdf():
     return generate_rows(np.arange(2000), seed=42)
 
 
-def test_hll_distinct_tokens_per_source(spark, seq_df, seq_pdf):
+def _local_fold(pdf, group_cols, value_col, factory):
+    """{key tuple: sketch} from one update_values per group, values in row
+    order — what the partial fold computes on a one-partition, one-batch
+    input."""
+    out = {}
+    for key, sub in pdf.groupby(group_cols, sort=False, dropna=False):
+        key = key if isinstance(key, tuple) else (key,)
+        sk = out[key] = factory()
+        sk.update_values(np.concatenate(sub[value_col].to_list()))
+    return out
+
+
+@pytest.mark.parametrize(
+    "group_cols", [["source"], ["source", "bucket"]], ids=["source", "source-bucket"]
+)
+def test_hll_distinct_tokens_per_source(spark, seq_df, seq_pdf, group_cols):
+    """Per-key HLL estimates track the exact distinct counts, HLL registers
+    equal a local per-key fold after the 16-partition merge, and KLL state
+    bytes (order-sensitive) equal a local per-key fold on one partition —
+    so each group's values keep their row order."""
+    seq_df = seq_df.withColumn("bucket", F.col("n_tok") % 3)
+    seq_pdf = seq_pdf.assign(bucket=seq_pdf["n_tok"] % 3)
     factory = lambda: HyperLogLog.empty(12)  # noqa: E731
-    got = sketch_agg(seq_df, ["source"], "tokens", factory)
-    got = estimates_df(got, factory, lambda h: h.estimate(), "est").toPandas()
+    states = sketch_agg(seq_df, group_cols, "tokens", factory)
+    got = estimates_df(states, factory, lambda h: h.estimate(), "est").toPandas()
+    local = _local_fold(seq_pdf, group_cols, "tokens", factory)
+    assert len(got) == len(local)
 
     for _, row in got.iterrows():
-        sub = seq_pdf[seq_pdf["source"] == row["source"]]
+        key = tuple(row[c] for c in group_cols)
+        sub = seq_pdf[(seq_pdf[group_cols] == key).all(axis=1)]
         exact = len(np.unique(np.concatenate(sub["tokens"].to_list())))
         rel = abs(row["est"] - exact) / exact
-        assert rel < 3 * 1.04 / 64, (row["source"], exact, row["est"])
+        assert rel < 3 * 1.04 / 64, (key, exact, row["est"])
+        merged = HyperLogLog.from_bytes(row[STATE_COL])
+        assert (merged.registers == local[key].registers).all(), key
+
+    kll = lambda: KLL(k=200)  # noqa: E731
+    one = spark.createDataFrame(seq_pdf).coalesce(1)
+    local = _local_fold(seq_pdf, group_cols, "tokens", kll)
+    got = {
+        tuple(r[c] for c in group_cols): bytes(r[STATE_COL])
+        for r in sketch_agg(one, group_cols, "tokens", kll).collect()
+    }
+    assert got == {k: sk.to_bytes() for k, sk in local.items()}
 
 
 def test_hll_spark_state_equals_local_state(spark, seq_df, seq_pdf):
@@ -256,3 +293,70 @@ def test_kll_grouped_quantiles(spark, seq_df, seq_pdf):
         for name, q in (("p25", 0.25), ("p50", 0.5), ("p75", 0.75)):
             exact_rank = np.searchsorted(sub, row[name]) / len(sub)
             assert abs(exact_rank - q) < 0.08, (row["source"], name)
+
+
+@pytest.mark.parametrize(
+    "value_col,factory",
+    [
+        ("arr_l", lambda: KLL(k=8)),
+        ("arr_l", lambda: TDigest(20.0)),
+        ("arr_d", lambda: KLL(k=8)),
+        ("arr_d", lambda: TDigest(20.0)),
+    ],
+    ids=["bigint-kll", "bigint-tdigest", "double-kll", "double-tdigest"],
+)
+def test_grouped_fold_passes_native_values(spark, value_col, factory):
+    """A grouped fold over array<bigint> with negative values and over
+    array<double> must see the native values (a uint64 widening turns -1
+    into 1.8e19 and truncates 0.5 to 0): each group's state equals a local
+    update_values on that group's values in row order."""
+    rng = np.random.default_rng(5)
+    lens = rng.integers(0, 12, 300)
+    pdf = pd.DataFrame({
+        "g": rng.integers(0, 4, 300),
+        "arr_l": [rng.integers(-1000, 1000, n) for n in lens],
+        "arr_d": [rng.normal(0.0, 10.0, n) for n in lens],
+    })
+    df = spark.createDataFrame(
+        pdf, "g bigint, arr_l array<bigint>, arr_d array<double>"
+    ).coalesce(1)
+    got = {
+        r["g"]: bytes(r[STATE_COL])
+        for r in sketch_agg(df, ["g"], value_col, factory).collect()
+    }
+    local = _local_fold(pdf, ["g"], value_col, factory)
+    assert got == {k: sk.to_bytes() for (k,), sk in local.items()}
+
+
+@pytest.mark.parametrize(
+    "group_cols", [["k1"], ["k1", "k2"]], ids=["one-key", "two-keys"]
+)
+def test_null_group_key_is_its_own_group(spark, group_cols):
+    """Rows whose key is null form their own group (as in Spark's groupBy)
+    through the partial fold and merge_grouped — not an error, not
+    dropped."""
+    rng = np.random.default_rng(9)
+    rows = [
+        (
+            ["a", "b", None][int(rng.integers(0, 3))],
+            [1, 2, None][int(rng.integers(0, 3))],
+            rng.integers(0, 5000, int(rng.integers(1, 40))).tolist(),
+        )
+        for _ in range(400)
+    ]
+    df = spark.createDataFrame(
+        rows, "k1 string, k2 bigint, tokens array<int>"
+    ).repartition(4)
+    factory = lambda: HyperLogLog.empty(10)  # noqa: E731
+    got = {
+        tuple(r[c] for c in group_cols): HyperLogLog.from_bytes(r[STATE_COL])
+        for r in sketch_agg(df, group_cols, "tokens", factory).collect()
+    }
+    want: dict = {}
+    for k1, k2, toks in rows:
+        key = (k1, k2)[: len(group_cols)]
+        want.setdefault(key, factory()).update_values(np.asarray(toks))
+    assert set(got) == set(want)
+    assert any(None in key for key in got)
+    for key, sk in want.items():
+        assert (got[key].registers == sk.registers).all(), key

@@ -91,16 +91,25 @@ class CountMinSketch:
         return s
 
     def update_values(self, values: np.ndarray) -> None:
-        if len(values) == 0:
+        self._add(np.asarray(values), None)
+
+    def update_counts(self, values: np.ndarray, counts: np.ndarray) -> None:
+        """Add ``counts[i]`` occurrences of each ``values[i]`` (a value
+        histogram): counter sums and ``n`` equal ``update_values`` on the
+        raw values."""
+        self._add(np.asarray(values), np.asarray(counts))
+
+    def _add(self, v: np.ndarray, weights) -> None:
+        if len(v) == 0:
             return
         from bloomine_spark.functions.hashing import _SM_GAMMA
 
-        v = np.asarray(values)
         cs = self._consts()
         shift = self._shift
         seed_mix = np.uint64(int(_SM_GAMMA))  # seed=1, matches hash_u64
         for i in range(0, len(v), self._CHUNK):
             c = v[i : i + self._CHUNK]
+            w = None if weights is None else weights[i : i + self._CHUNK]
             hb, tb = (b[: len(c)] for b in self._scratch())
             # hb = hash_u64(c, seed=1), computed in place
             np.copyto(hb, c, casting="unsafe")
@@ -115,10 +124,10 @@ class CountMinSketch:
                     np.right_shift(tb, shift, out=tb)
                 else:
                     np.remainder(tb, np.uint64(self.w), out=tb)
-                self.counts[r] += np.bincount(
-                    tb.view(np.int64), minlength=self.w
-                )
-        self.n += len(v)
+                row = np.bincount(tb.view(np.int64), weights=w, minlength=self.w)
+                # weighted sums are float64, exact below 2^53
+                self.counts[r] += row if w is None else row.astype(np.int64)
+        self.n += len(v) if weights is None else int(weights.sum())
 
     def estimate_values(self, values: np.ndarray) -> np.ndarray:
         """Vectorized point queries → int64 estimates (min over rows)."""

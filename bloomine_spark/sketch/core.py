@@ -4,20 +4,27 @@ Design (SURVEY.md §7 step 5): a sketch aggregation is two physical stages —
 
 1. **partials** — a shuffle-free ``mapInArrow`` pass (one kernel,
    ``fold_partition``, for any number of group columns; a null key is its
-   own group) that folds every partition into one tiny binary sketch state
-   per (partition × group): the map-side combine. This is where all the data volume dies; what
+   own group) over only the group and value columns, that folds every
+   partition into one tiny binary sketch state per (partition × group): the
+   map-side combine. This is where all the data volume dies; what
    shuffles afterwards is O(partitions × groups × state_size) bytes,
    independent of row count — the property that makes this viable at
    10^12 rows.
 2. **merge** — grouped: ``groupBy(keys).applyInPandas`` (each group merges
-   its ≤P small states); global: a fan-in **tree reduce** implemented as
-   repeated bucketed merges, so no single task ever folds more than
+   its ≤P small states); global: one collect of the partial states in
+   partition order and a driver-side fold in that order, so the global
+   aggregation is ONE Spark job. Above ``fanin`` partitions, rounds of
+   bucketed merges (bucket = position // fanin, merged in position order)
+   run as shuffle stages of that same job, so no merge ever folds more than
    ``fanin`` states (the distributed analog of the reference's
    futures-collection loop, /root/reference/src/BlooMineUtils.cpp:275-280,
    which is O(P) on one thread — ours is O(log_fanin P) rounds).
 
 Sketch value objects only need: ``update_values(np.ndarray)``,
-``merge(other)``, ``to_bytes()``, classmethod ``from_bytes``.
+``merge(other)``, ``to_bytes()``, classmethod ``from_bytes``. A member of a
+``CompositeSketch`` may also define ``update_counts(distinct, counts)``: the
+composite then hands it one value histogram per batch instead of the raw
+values (see ``value_histogram``).
 """
 
 from __future__ import annotations
@@ -50,6 +57,20 @@ def _values_of(pdf_col: pd.Series) -> np.ndarray:
     return pdf_col.to_numpy()
 
 
+def value_histogram(values: np.ndarray):
+    """``(distinct, counts)`` of ``values`` from one ``np.bincount``, or
+    ``None`` when the values are not non-negative integers with
+    max < ``len(values)`` — the data gate that bounds the histogram by the
+    batch's own size (token ids over a small vocabulary pass; hashes,
+    floats, negative and empty arrays do not)."""
+    v = np.asarray(values)
+    if v.dtype.kind not in "iu" or len(v) == 0 or v.min() < 0 or v.max() >= len(v):
+        return None
+    counts = np.bincount(v.astype(np.intp, copy=False))
+    distinct = np.flatnonzero(counts)
+    return distinct, counts[distinct]
+
+
 class CompositeSketch:
     """Several mergeable sketches folded in ONE pass over the input.
 
@@ -57,7 +78,12 @@ class CompositeSketch:
     hitters) are each one-pass mergeable folds — running them as separate
     ``sketch_agg_global`` calls scans the corpus once per sketch. A
     composite updates every member per batch, so the scan cost is paid
-    once and the members still merge independently. Serialization embeds
+    once and the members still merge independently. Members that define
+    ``update_counts`` (HLL, count-min, theta) get one shared value histogram
+    per call when ``value_histogram`` accepts the values; their states are
+    functions of that histogram (register max, k smallest distinct hashes,
+    counter sums), so they are byte-identical to ``update_values`` on the
+    raw values. Serialization embeds
     each member's ``module:qualname`` so ``from_bytes`` reconstructs the
     members on any executor (all sketch classes ship in the addPyFile zip).
     """
@@ -68,8 +94,13 @@ class CompositeSketch:
         self.sketches = list(sketches)
 
     def update_values(self, values: np.ndarray) -> None:
+        counted = any(hasattr(s, "update_counts") for s in self.sketches)
+        hist = value_histogram(values) if counted else None
         for s in self.sketches:
-            s.update_values(values)
+            if hist is not None and hasattr(s, "update_counts"):
+                s.update_counts(*hist)
+            else:
+                s.update_values(values)
 
     def merge(self, other: "CompositeSketch") -> None:
         if len(other.sketches) != len(self.sketches):
@@ -201,9 +232,10 @@ def sketch_partials(
     """Stage 1: one sketch state per (partition, group). Shuffle-free.
 
     Runs ``fold_partition`` as ``mapInArrow`` for any number of group
-    columns: a list column's Arrow layout IS the flat-values+offsets form
-    the update kernels want, so the fold reads the token buffer without
-    per-row ndarray materialization.
+    columns over only the group and value columns (``mapInArrow`` cannot
+    prune its input, so the select does): a list column's Arrow layout IS
+    the flat-values+offsets form the update kernels want, so the fold reads
+    the token buffer without per-row ndarray materialization.
     """
     schema = T.StructType(
         [df.schema[c] for c in group_cols]
@@ -215,7 +247,9 @@ def sketch_partials(
         if states is not None:
             yield states
 
-    return df.mapInArrow(kernel, schema=schema)
+    # a value column that is also a group column is read once
+    cols = list(dict.fromkeys([*group_cols, value_col]))
+    return df.select(*cols).mapInArrow(kernel, schema=schema)
 
 
 def _merge_states(states: list[bytes], factory) -> bytes:
@@ -244,52 +278,54 @@ def merge_grouped(
     return partials.groupBy(*group_cols).applyInPandas(merge_fn, schema=schema)
 
 
+def _merge_round(factory, fanin: int):
+    """One tree round over ``(bucket, (pos, state))`` records of one
+    bucket: merge them in position order and key the result by the next
+    round's bucket."""
+
+    def merge_bucket(records):
+        records = sorted(records, key=lambda r: r[1][0])  # stable: row order
+        if records:
+            bucket = records[0][0]
+            merged = _merge_states([state for _, (_, state) in records], factory)
+            yield bucket // fanin, (bucket, merged)
+
+    return merge_bucket
+
+
 def tree_merge_global(
     partials: DataFrame, factory, fanin: int = 64
 ) -> bytes:
-    """Stage 2 (global): fan-in tree reduce of all partial states.
+    """Stage 2 (global): merge all partial states in partition order, in
+    ONE Spark job.
 
-    Rounds of bucketed merges — each round shrinks the state count by
-    ``fanin``× and no task merges more than ``fanin`` states, keeping both
-    task memory and driver work bounded at any partition count.
+    The ungrouped fold yields exactly one state per input partition, so the
+    state count comes from the plan (the partition count), not from a
+    ``count`` job. With ≤ ``fanin`` partitions the states are collected in
+    partition order and folded on the driver in that order. Above that,
+    each round shuffles state ``pos`` to bucket ``pos // fanin`` (bucket b
+    lands in partition b of ⌈n/fanin⌉, so each task merges exactly one
+    bucket of ≤ ``fanin`` states, in position order) — rounds are shuffle
+    stages of the same job, and the result is the same fixed tree on every
+    run.
     """
-    spark = partials.sparkSession
-    schema = T.StructType(
-        [T.StructField("bucket", T.LongType()), T.StructField(STATE_COL, T.BinaryType())]
-    )
-
-    def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "bucket": [pdf["bucket"].iloc[0] // fanin],
-                STATE_COL: [_merge_states(list(pdf[STATE_COL]), factory)],
-            }
+    states = partials.select(STATE_COL).rdd
+    n = states.getNumPartitions()
+    if n > fanin:
+        cur = states.mapPartitionsWithIndex(
+            lambda i, rows: ((i // fanin, (i, bytes(r[0]))) for r in rows)
         )
-
-    # materialize the (tiny) partials once — every downstream action below
-    # must NOT recompute the full input scan
-    partials = partials.persist()
-    n = partials.count()
-    if n <= fanin:
-        # common case (P ≤ fanin): one driver-side fold, no extra stages
-        states = [bytes(r[STATE_COL]) for r in partials.select(STATE_COL).collect()]
-        partials.unpersist()
-        if not states:
-            return factory().to_bytes()
-        return _merge_states(states, factory)
-    # contiguous bucket ids → balanced fan-in tree
-    indexed = partials.select(STATE_COL).rdd.zipWithIndex()
-    cur = spark.createDataFrame(
-        indexed.map(lambda t: (t[1] // fanin, bytes(t[0][STATE_COL]))), schema
-    )
-    while n > fanin:
-        cur = cur.groupBy("bucket").applyInPandas(merge_bucket, schema=schema)
-        n = (n + fanin - 1) // fanin
-    states = [r[STATE_COL] for r in cur.collect()]
-    partials.unpersist()
-    if not states:
+        while n > fanin:
+            n = -(-n // fanin)
+            cur = cur.partitionBy(n, lambda b: b).mapPartitions(
+                _merge_round(factory, fanin)
+            )
+        blobs = [state for _, (_, state) in sorted(cur.collect(), key=lambda r: r[1][0])]
+    else:
+        blobs = [bytes(r[0]) for r in states.collect()]
+    if not blobs:
         return factory().to_bytes()
-    return _merge_states(states, factory)
+    return _merge_states(blobs, factory)
 
 
 def sketch_agg(

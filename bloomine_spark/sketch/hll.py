@@ -19,8 +19,6 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from bloomine_spark.functions.hashing import hash_u64
-
 _MAGIC = b"HLL1"
 
 
@@ -130,6 +128,13 @@ class HyperLogLog:
             np.copyto(hb, c, casting="unsafe")
             splitmix64(hb, inplace=True)
             self._fold_chunk(hb)
+
+    def update_counts(self, values: np.ndarray, counts: np.ndarray) -> None:
+        """Fold a value histogram (``values`` distinct, ``counts`` their
+        multiplicities): a register keeps a max, so the state depends only
+        on the distinct values and equals ``update_values`` on the raw
+        values."""
+        self.update_values(values)
 
     def merge(self, other: "HyperLogLog") -> "HyperLogLog":
         if self.b != other.b:

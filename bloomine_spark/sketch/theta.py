@@ -60,6 +60,12 @@ class ThetaSketch:
             self.samples = np.unique(np.concatenate([self.samples, h]))
             self._trim()
 
+    def update_counts(self, values: np.ndarray, counts: np.ndarray) -> None:
+        """Fold a value histogram: the state is the k smallest distinct
+        hashes (and θ), a function of the distinct values alone, so it
+        equals ``update_values`` on the raw values."""
+        self.update_values(values)
+
     def _trim(self) -> None:
         if len(self.samples) > self.k:
             # θ becomes the (k+1)-th smallest (exclusive threshold)

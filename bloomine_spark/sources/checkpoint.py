@@ -5,13 +5,18 @@ output-existence stage skip (/root/reference/bloomine/BloomineRunner.py:170-190)
 A checkpointed aggregation persists one row per input partition:
 (partition_id, sketch_state, rows, n_values, secs). Each row comes from the
 ungrouped case of the sketch partial fold (``sketch.core.fold_partition``)
-run as one ``mapInArrow`` node. Resuming lists the checkpointed partition
-ids and the same node folds ONLY the missing ones (it yields nothing for the
-others), appends them, and merges. The append is one write job, and a job
-that fails commits none of its partitions: the skip saves work when
-checkpointed rows survive, not yet for a job that died midway. Partition ids
-are stable as long as the input files and maxPartitionBytes are unchanged
-(documented invariant).
+run as one ``mapInArrow`` node over the value column alone. The checkpoint
+is read back with the known ``LINEAGE_SCHEMA`` (no schema-inference job):
+one collect of (partition_id, sketch_state) gives the checkpointed ids and
+their states. Resuming folds ONLY the missing partitions (the same node
+yields nothing for the others), appends them, collects again, and merges
+the first state of each partition id in partition-id order — the order
+``sketch_agg_global`` merges in, so both give the same state. A fresh run
+is two jobs (write, collect), a fully resumed one a single collect. The
+append is one write job, and a job that fails commits none of its
+partitions: the skip saves work when checkpointed rows survive, not yet
+for a job that died midway. Partition ids are stable as long as the input
+files and maxPartitionBytes are unchanged (documented invariant).
 """
 
 from __future__ import annotations
@@ -69,11 +74,28 @@ def partials_with_lineage(
     df: DataFrame, value_col: str, factory: Callable[[], object]
 ) -> DataFrame:
     """One sketch state per partition + per-partition metrics."""
-    return df.mapInArrow(_lineage_kernel(value_col, factory), schema=LINEAGE_SCHEMA)
+    return df.select(value_col).mapInArrow(
+        _lineage_kernel(value_col, factory), schema=LINEAGE_SCHEMA
+    )
 
 
 def checkpoint_dir(base: str, run_id: str, stage: str) -> str:
     return os.path.join(base, run_id, stage)
+
+
+def _checkpointed_states(spark, path: str) -> dict[int, bytes]:
+    """{partition_id: sketch_state} of the checkpoint at ``path``, first
+    row per id, from one collect."""
+    if not os.path.isdir(path):
+        return {}
+    rows = (
+        spark.read.schema(LINEAGE_SCHEMA).parquet(path)
+        .select("partition_id", "sketch_state").collect()
+    )
+    states: dict[int, bytes] = {}
+    for pid, state in rows:
+        states.setdefault(pid, bytes(state))
+    return states
 
 
 def checkpointed_sketch_agg(
@@ -87,34 +109,31 @@ def checkpointed_sketch_agg(
 ):
     """Global sketch aggregation with per-partition checkpoint + resume.
 
-    Returns (sketch, lineage_df). On a rerun with the same (run_id, stage),
-    partitions already checkpointed are skipped — only missing ones compute.
+    Returns (sketch, lineage_df); ``lineage_df`` is lazy (one row per
+    partition id). On a rerun with the same (run_id, stage), partitions
+    already checkpointed are skipped — only missing ones compute.
     ``fail_partitions`` injects failures after persisting earlier partitions
     (test hook for the resume path).
     """
     spark = df.sparkSession
     path = checkpoint_dir(base_dir, run_id, stage)
 
-    done: set[int] = set()
-    if os.path.isdir(path):
-        try:
-            existing = spark.read.parquet(path)
-            done = {r["partition_id"] for r in existing.select("partition_id").collect()}
-        except Exception:  # noqa: BLE001 - empty/corrupt dir → full recompute
-            done = set()
-
-    n_parts = df.rdd.getNumPartitions()
-    missing = [p for p in range(n_parts) if p not in done]
-
-    if missing:
+    states = _checkpointed_states(spark, path)
+    if set(range(df.rdd.getNumPartitions())) - states.keys():
         # recompute only missing partitions; partition ids are stable for
         # unchanged input files
         kernel = _lineage_kernel(
-            value_col, factory, frozenset(done), frozenset(fail_partitions or ())
+            value_col, factory, frozenset(states), frozenset(fail_partitions or ())
         )
-        df.mapInArrow(kernel, schema=LINEAGE_SCHEMA).write.mode("append").parquet(path)
+        (
+            df.select(value_col).mapInArrow(kernel, schema=LINEAGE_SCHEMA)
+            .write.mode("append").parquet(path)
+        )
+        states = _checkpointed_states(spark, path)
 
-    lineage = spark.read.parquet(path).dropDuplicates(["partition_id"])
-    states = [r["sketch_state"] for r in lineage.select("sketch_state").collect()]
-    blob = _merge_states([bytes(s) for s in states], factory)
+    blob = _merge_states([states[pid] for pid in sorted(states)], factory)
+    lineage = (
+        spark.read.schema(LINEAGE_SCHEMA).parquet(path)
+        .dropDuplicates(["partition_id"])
+    )
     return type(factory()).from_bytes(blob), lineage

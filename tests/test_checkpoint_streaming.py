@@ -94,6 +94,41 @@ def test_checkpoint_resume_skips_done_partitions(
     assert text.count("MapInArrow") == 1, text
 
 
+def test_checkpoint_merges_in_partition_id_order(spark, seq_parquet, tmp_path):
+    """KLL merges are order-sensitive: the checkpointed composite equals
+    sketch_agg_global byte for byte, fresh and after half the checkpoint
+    files are lost and the run resumes."""
+    from bloomine_spark.sketch.cms import CountMinSketch
+    from bloomine_spark.sketch.core import CompositeSketch, sketch_agg_global
+    from bloomine_spark.sketch.kll import KLL
+    from bloomine_spark.sketch.theta import ThetaSketch
+
+    factory = lambda: CompositeSketch([  # noqa: E731
+        HyperLogLog.empty(12), CountMinSketch.empty(1e-3, 1e-3), KLL(k=50),
+        ThetaSketch.empty(512),
+    ])
+    # a file open cost above maxPartitionBytes reads each of the 8 files as
+    # its own partition
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 30))
+    try:
+        df = spark.read.parquet(seq_parquet)
+        assert df.rdd.getNumPartitions() == 8
+        want = sketch_agg_global(df, "tokens", factory).to_bytes()
+        base = str(tmp_path / "ckpt")
+        fresh, _ = checkpointed_sketch_agg(df, "tokens", factory, base, "r", "c")
+        assert fresh.to_bytes() == want
+        ckpt = os.path.join(base, "r", "c")
+        parts = sorted(f for f in os.listdir(ckpt) if f.startswith("part-"))
+        for f in parts[: len(parts) // 2]:
+            os.remove(os.path.join(ckpt, f))
+        resumed, _ = checkpointed_sketch_agg(df, "tokens", factory, base, "r", "c")
+        assert resumed.to_bytes() == want
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_streaming_screen_matches_batch(spark, seq_parquet, tmp_path):
     from bloomine_spark.operators.screen import screen_hits
     from bloomine_spark.streaming.stream_ops import screen_stream

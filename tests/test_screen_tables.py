@@ -308,7 +308,8 @@ def test_oov_token_under_complement_map_raises(bad, n_filler, multi):
     "module",
     [
         "operators/screen.py", "operators/multiscreen.py", "operators/cascade.py",
-        "sketch/core.py", "sources/checkpoint.py",
+        "sketch/core.py", "sketch/hll.py", "sketch/cms.py", "sketch/theta.py",
+        "sources/checkpoint.py",
     ],
 )
 def test_screen_module_imports_are_used(module):

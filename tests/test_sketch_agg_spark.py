@@ -360,3 +360,18 @@ def test_null_group_key_is_its_own_group(spark, group_cols):
     assert any(None in key for key in got)
     for key, sk in want.items():
         assert (got[key].registers == sk.registers).all(), key
+
+
+def test_value_column_that_is_also_a_group_column(spark, seq_df, seq_pdf):
+    """Grouping by n_tok and folding n_tok: the fold reads the column once,
+    and each group's KLL holds exactly its rows' n_tok values."""
+    factory = lambda: KLL(k=8)  # noqa: E731
+    got = {
+        r["n_tok"]: KLL.from_bytes(r[STATE_COL])
+        for r in sketch_agg(seq_df, ["n_tok"], "n_tok", factory).collect()
+    }
+    want = seq_pdf["n_tok"].value_counts()
+    assert set(got) == set(want.index)
+    for key, sk in got.items():
+        assert sk.n == want[key]
+        assert sk.quantile(0.5) == key

@@ -250,3 +250,81 @@ def test_composite_serde_nested_class_member():
     back = CompositeSketch.from_bytes(comp.to_bytes())
     assert type(back.sketches[0]) is _Outer.InnerHLL
     assert back.sketches[0].estimate() == inner.estimate()
+
+
+# ---------------------------------------------------------------------------
+# composite value-histogram path: byte-identical to per-member raw updates
+# ---------------------------------------------------------------------------
+
+def _hist_members(hashed_input=False):
+    from bloomine_spark.sketch.theta import ThetaSketch
+
+    return [
+        HyperLogLog.empty(12, hashed_input=hashed_input),
+        CountMinSketch.empty(1e-3, 1e-3),
+        KLL(k=200),
+        ThetaSketch.empty(4096),
+    ]
+
+
+def _boundary_values():
+    # many distinct values (theta trims, several update chunks), 0 and
+    # len-1 both present: the largest input the gate accepts
+    v = np.random.default_rng(3).integers(0, 100_000, 100_000)
+    v[0], v[-1] = 0, len(v) - 1
+    return v
+
+
+def _vocab(dtype):
+    return np.random.default_rng(1).integers(0, 256, 100_000).astype(dtype)
+
+
+HIST_CASES = {
+    # name: (values, hashed_input HLL, histogram gate accepts)
+    "int32": (lambda: _vocab(np.int32), False, True),
+    "int64": (lambda: _vocab(np.int64), False, True),
+    "zero-and-len-1": (_boundary_values, False, True),
+    "negative": (lambda: np.append(_vocab(np.int64), -1), False, False),
+    "max-eq-len": (lambda: np.append(_vocab(np.int64)[:299], 300), False, False),
+    "float64": (lambda: _vocab(np.float64), False, False),
+    "hashed-u64": (
+        lambda: np.random.default_rng(2).integers(
+            0, np.iinfo(np.uint64).max, 50_000, dtype=np.uint64, endpoint=True
+        ),
+        True,
+        False,
+    ),
+    "empty": (lambda: np.empty(0, dtype=np.int64), False, False),
+}
+
+
+@pytest.mark.parametrize("case", list(HIST_CASES))
+def test_composite_histogram_path_is_byte_identical(case):
+    """CompositeSketch([HLL, CMS, KLL, theta]) state equals, byte for byte,
+    each member's own update_values on the raw values — whether the value
+    histogram gate takes the values or not."""
+    from bloomine_spark.sketch.core import CompositeSketch, value_histogram
+
+    make, hashed, accepted = HIST_CASES[case]
+    values = make()
+    assert (value_histogram(values) is not None) == accepted
+    comp = CompositeSketch(_hist_members(hashed))
+    alone = _hist_members(hashed)
+    for _ in range(2):  # a second batch folds into non-empty states
+        comp.update_values(values)
+        for sk in alone:
+            sk.update_values(values)
+    for got, want in zip(comp.sketches, alone):
+        assert got.to_bytes() == want.to_bytes(), type(got).__name__
+
+
+def test_cms_update_counts_adds_counts_and_n():
+    cms = CountMinSketch.empty(1e-2, 1e-2)
+    cms.update_counts(np.array([3, 7, 11]), np.array([5, 1, 2]))
+    assert cms.n == 8
+    assert cms.counts.dtype == np.int64
+    assert (cms.counts.sum(axis=1) == 8).all()
+    raw = CountMinSketch.empty(1e-2, 1e-2)
+    raw.update_values(np.repeat([3, 7, 11], [5, 1, 2]))
+    np.testing.assert_array_equal(cms.counts, raw.counts)
+    assert cms.estimate(3) >= 5 and cms.estimate(11) >= 2

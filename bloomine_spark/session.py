@@ -77,3 +77,16 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.addPyFile(package_zip())
     return spark
+
+
+def job_session(app_name: str) -> SparkSession:
+    """The session of a ``jobs/`` CLI: master and resources come from
+    spark-submit (or pyspark's local default). AQE may also coalesce the
+    output partitions of cached plans — otherwise a cached DataFrame keeps
+    all ``spark.sql.shuffle.partitions`` (200 by default) and every scan of
+    it runs that many tasks, however few rows it holds."""
+    return (
+        SparkSession.builder.appName(app_name)
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        .getOrCreate()
+    )

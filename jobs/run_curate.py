@@ -172,7 +172,7 @@ def main() -> None:
         ap.error("--near-dup (drop) and --soft-dedup (reweight) are "
                  "mutually exclusive")
 
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from bloomine_spark.operators.textops import (
@@ -181,9 +181,10 @@ def main() -> None:
         scrub_pii,
         token_counts,
     )
+    from bloomine_spark.session import job_session
     from bloomine_spark.sources.stages import StageRunner
 
-    spark = SparkSession.builder.appName("bloomine-curate").getOrCreate()
+    spark = job_session("bloomine-curate")
     run_dir = f"{args.output}/{args.run_id}"
     runner = StageRunner(spark, run_dir, force=args.force)
     manifest = {

@@ -63,7 +63,7 @@ def main() -> None:
     ap.add_argument("--force", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from bloomine_spark.operators.cascade import extract_targets_multi
@@ -71,9 +71,10 @@ def main() -> None:
     from bloomine_spark.operators.report import polyfamily_summary_from_counts
     from bloomine_spark.operators.screen import prepare_target
     from bloomine_spark.params import ScreenParams
+    from bloomine_spark.session import job_session
     from bloomine_spark.sources.stages import StageRunner
 
-    spark = SparkSession.builder.appName("bloomine-grid").getOrCreate()
+    spark = job_session("bloomine-grid")
     complement_map = None
     if args.targets_fasta:
         from bloomine_spark.sources.fastq import (

@@ -37,13 +37,12 @@ def main() -> None:
     ap.add_argument("--force", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from bloomine_spark.operators.report import render_subpop_report
     from bloomine_spark.params import ScreenParams
+    from bloomine_spark.session import job_session
     from bloomine_spark.sources.stages import resumable_cascade
 
-    spark = SparkSession.builder.appName("bloomine-moi").getOrCreate()
+    spark = job_session("bloomine-moi")
 
     def _flank(v):
         if set(v.upper()) <= set("ACGTN"):

@@ -40,15 +40,15 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from bloomine_spark.operators.cascade import extract_targets_multi
     from bloomine_spark.operators.multiscreen import polyfamily_onepass
     from bloomine_spark.operators.report import polyfamily_summary_from_counts
     from bloomine_spark.params import ScreenParams
+    from bloomine_spark.session import job_session
 
-    spark = SparkSession.builder.appName("bloomine-polyfamily").getOrCreate()
+    spark = job_session("bloomine-polyfamily")
     complement_map = None
     if args.targets_fasta:
         from bloomine_spark.sources.fastq import (

@@ -62,13 +62,13 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from bloomine_spark.operators.screen import screen_scores
     from bloomine_spark.params import ScreenParams
+    from bloomine_spark.session import job_session
 
-    spark = SparkSession.builder.appName("bloomine-screen").getOrCreate()
+    spark = job_session("bloomine-screen")
     params = ScreenParams(
         k=args.k, false_positive=args.fp, fp_sim=args.fp_sim,
         sp_error=args.sp_error,

@@ -410,3 +410,33 @@ def test_spark_submit_py_files_launch(spark, tmp_path):
     assert r.returncode == 0, (r.stdout[-2000:], r.stderr[-4000:])
     hits = spark.read.parquet(f"{out}/hits").toPandas()
     assert sorted(hits["doc_id"]) == ["r0"]
+
+
+def test_job_session_lets_aqe_coalesce_cached_plans(spark):
+    """A cached DataFrame behind a shuffle keeps every shuffle partition
+    unless AQE may change the output partitioning of cached plans; the
+    session of the jobs/ CLIs allows it, so a cached table of three rows
+    is scanned by one task, not by spark.sql.shuffle.partitions tasks."""
+    from pyspark.sql import functions as F
+
+    from bloomine_spark.session import job_session
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    old = spark.conf.get(key)
+
+    def cached_partitions() -> int:
+        df = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+        df.cache()
+        try:
+            return df.rdd.getNumPartitions()
+        finally:
+            df.unpersist()
+
+    try:
+        spark.conf.set(key, "false")
+        assert cached_partitions() == n_shuffle
+        assert job_session("bloomine-test").conf.get(key) == "true"
+        assert cached_partitions() < n_shuffle
+    finally:
+        spark.conf.set(key, old)

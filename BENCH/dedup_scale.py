@@ -200,8 +200,7 @@ def main():
     base_rows = int(args[0]) if args else 5000
     from bloomine_spark.session import get_spark
 
-    spark = get_spark(master="local[16]", shuffle_partitions=32,
-                      app_name="dedup-scale")
+    spark = get_spark(shuffle_partitions=32, app_name="dedup-scale")
     spark.sparkContext.setLogLevel("ERROR")
     dists = empirical_dists(spark, "/root/testdata/sf0.1")
 

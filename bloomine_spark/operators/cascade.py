@@ -18,6 +18,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bloomine_spark.functions.kgrams import (
+    FlatWindows,
+    KgramIndex,
+    exact_matches,
+)
 from bloomine_spark.operators.screen import screen_scores
 from bloomine_spark.params import ScreenParams
 
@@ -140,82 +145,40 @@ def _kmer_hit(
     return None, None
 
 
-def _sorted_kmer_index(fh, fmat):
-    """(uh, umin_i, fmat_u64): min flank index per unique hash (stable sort
-    → first = min i; equal hashes verify against the same token row)."""
-    order = np.argsort(fh, kind="stable")
-    fh_sorted = fh[order]
-    first = np.ones(len(fh_sorted), dtype=bool)
-    first[1:] = fh_sorted[1:] != fh_sorted[:-1]
-    return fh_sorted[first], order[first], fmat.astype(np.uint64)
-
-
 def _batch_flank_anchors(batch, kascade, flank_flag: str, len_flank: int,
-                         kascade_rev=None):
-    """Vectorized kmer_hit (/root/reference/bloomine/moi.py:80-128) over a
-    whole TokenBatch: for k descending, every still-unresolved row's fwd and
-    reversed window hashes are matched against the flank's k-kmers at once;
-    per row the winning anchor minimizes (kmer index i, fwd-before-rev,
-    first position) — exactly the reference's loop order. Token equality is
-    verified on hash candidates (no collision trust).
+                         complement_map=None):
+    """Vectorized kmer_hit (reference bloomine/moi.py:80-128) over a whole
+    TokenBatch: for k descending, every still-unresolved row's windows and
+    reverse-complement windows are matched against the flank's k-kmers at
+    once (``exact_matches``, token-confirmed); per row the winning anchor
+    minimizes (kmer index i, fwd-before-rev, first position) — exactly the
+    reference's loop order, which searches ``read`` and then
+    ``read.reverse_complement()`` (moi.py:103) for the raw flank kmer.
 
-    ``kascade_rev`` carries the flank kmers the REVERSED read windows are
-    matched against. Default: the same kmers (token domain, where reverse
-    orientation is plain reversal). For DNA pass the COMPLEMENTED flank's
-    kascade: ``kmer ∈ windows(revcomp(read))`` ⟺ ``complement(kmer) ∈
-    windows(reverse(read))`` — the reference matches against
-    ``read.reverse_complement()`` (moi.py:103).
+    ``complement_map`` is the vocabulary permutation of the reverse
+    complement; None (the token domain) makes it plain reversal. A '-'
+    position indexes the reverse-complemented read.
 
     Returns (pos int64[n] with -1 = no hit, dir int8[n] with 1='+', 2='-').
     """
-    from bloomine_spark.functions.kgrams import kgram_windows
-
-    if kascade_rev is None:
-        kascade_rev = kascade
     n = batch.n_rows
     pos_out = np.full(n, -1, dtype=np.int64)
     dir_out = np.zeros(n, dtype=np.int8)
     unresolved = np.ones(n, dtype=bool)
-    k_arange_cache: dict[int, np.ndarray] = {}
 
-    for lvl_f, lvl_r in zip(kascade, kascade_rev):  # k descends
+    for k, fh, fmat in kascade:  # k descends
         if not unresolved.any():
             break
-        k = lvl_f[0]
-        by_dir = {
-            1: _sorted_kmer_index(lvl_f[1], lvl_f[2]),
-            2: _sorted_kmer_index(lvl_r[1], lvl_r[2]),
-        }
-
-        ar = k_arange_cache.setdefault(k, np.arange(k, dtype=np.int64))
-        cr, ci, cd, cp = [], [], [], []
+        index = KgramIndex.of_windows(fh, fmat)
+        win = FlatWindows(batch, k, complement_map)
+        cand = []
         for d, rev in ((1, False), (2, True)):
-            uh, umin_i, fmat_u64 = by_dir[d]
-            ws = kgram_windows(batch, k, reverse=rev)
-            if ws.n_windows == 0:
-                continue
-            loc = np.searchsorted(uh, ws.hashes)
-            np.minimum(loc, len(uh) - 1, out=loc)
-            m = (uh[loc] == ws.hashes) & unresolved[ws.row_ids]
-            if not m.any():
-                continue
-            gst = ws.gstarts[m]
-            i_idx = umin_i[loc[m]]
-            # verify tokens (rev windows read the flat buffer right-to-left)
-            gather = gst[:, None] + ((k - 1 - ar) if rev else ar)[None, :]
-            ok = (batch.flat[gather] == fmat_u64[i_idx]).all(axis=1)
-            if not ok.any():
-                continue
-            cr.append(ws.row_ids[m][ok])
-            ci.append(i_idx[ok])
-            cd.append(np.full(int(ok.sum()), d, dtype=np.int8))
-            cp.append(ws.starts[m][ok])
-        if not cr:
+            pos, rows, ii = exact_matches(win, index, rev, unresolved)
+            cand.append((rows, ii, np.full(len(rows), d, dtype=np.int8),
+                         win.starts_of(pos, rows, rev)))
+        rows, ii, dd, pp = (np.concatenate(c) for c in zip(*cand))
+        if len(rows) == 0:
             continue
-        rows = np.concatenate(cr)
-        ii = np.concatenate(ci)
-        dd = np.concatenate(cd)
-        pp = np.concatenate(cp)
         # per row: lexmin (i, dir, pos) — reference loop order (i ascending,
         # fwd checked before rev, .index() = first occurrence)
         o2 = np.lexsort((pp, dd, ii, rows))
@@ -234,25 +197,23 @@ def _batch_flank_anchors(batch, kascade, flank_flag: str, len_flank: int,
 
 
 def _extract_regions(batch, kas_head, kas_tail, len_head, len_tail,
-                     kas_head_rev=None, kas_tail_rev=None, comp=None):
+                     comp=None):
     """Batched isolate_target core of ``extract_targets_multi``'s kernel,
     run once per probe's rows: anchor both flanks, resolve orientation and
     slice bounds with Python-slice semantics, and gather the inter-flank
     regions from the flat token buffer.
 
-    ``kas_*_rev``/``comp`` carry complement awareness for DNA-style
-    vocabularies (see ``extract_targets``); both default to the token
-    domain where reverse orientation is plain reversal.
+    ``comp`` is the complement map for DNA-style vocabularies (see
+    ``extract_targets``); None is the token domain, where reverse
+    orientation is plain reversal.
 
     Returns ``(rows, offs, vals, raw_h, raw_t, o_rev)`` — row indices into
     ``batch`` with both flanks found, list offsets (len(rows)+1, int32),
     gathered int32 token values, raw anchor positions and the
     reverse-orientation mask — or ``None`` when no row resolves.
     """
-    hp, hd = _batch_flank_anchors(batch, kas_head, "head", len_head,
-                                  kascade_rev=kas_head_rev)
-    tp, td = _batch_flank_anchors(batch, kas_tail, "tail", len_tail,
-                                  kascade_rev=kas_tail_rev)
+    hp, hd = _batch_flank_anchors(batch, kas_head, "head", len_head, comp)
+    tp, td = _batch_flank_anchors(batch, kas_tail, "tail", len_tail, comp)
     ok = (hd != 0) & (td != 0) & (hd == td)
     rows = np.flatnonzero(ok)
     if len(rows) == 0:
@@ -366,10 +327,6 @@ def extract_targets_multi(
             _kascade_hashes(tail, min_kmer),
             len(head),
             len(tail),
-            _kascade_hashes(comp[head], min_kmer) if comp is not None
-            else None,
-            _kascade_hashes(comp[tail], min_kmer) if comp is not None
-            else None,
         )
 
     schema = T.StructType(
@@ -393,20 +350,26 @@ def extract_targets_multi(
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            tcol = np.asarray(
+            # one dictionary encode splits the batch by probe: rows sorted
+            # by probe code, one contiguous run per probe (nulls, code -1,
+            # sort first and belong to no probe)
+            enc = pc.dictionary_encode(
                 rb.column(rb.schema.get_field_index(target_col))
-                .to_pylist(), dtype=object,
             )
-            for tid in sorted(set(tcol.tolist())):
+            codes = enc.indices.fill_null(-1).to_numpy()
+            order = np.argsort(codes, kind="stable")
+            ids = enc.dictionary.to_pylist()
+            cuts = np.searchsorted(codes[order], np.arange(len(ids) + 1))
+            for c in sorted(range(len(ids)), key=ids.__getitem__):
+                tid = ids[c]
                 if tid not in prepared:
                     continue  # unknown assignment: no flanks to anchor
-                (kas_head, kas_tail, len_head, len_tail,
-                 kas_head_rev, kas_tail_rev) = prepared[tid]
-                sub = rb.take(pa.array(np.flatnonzero(tcol == tid)))
+                kas_head, kas_tail, len_head, len_tail = prepared[tid]
+                run = order[cuts[c]:cuts[c + 1]]
+                sub = rb if len(run) == rb.num_rows else rb.take(pa.array(run))
                 batch = token_batch_from_arrow(sub, tokens_col)
                 res = _extract_regions(batch, kas_head, kas_tail,
-                                       len_head, len_tail,
-                                       kas_head_rev, kas_tail_rev, comp)
+                                       len_head, len_tail, comp)
                 if res is None:
                     continue
                 rows, offs, vals, raw_h, raw_t, o_rev = res

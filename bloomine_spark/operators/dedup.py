@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bloomine_spark.functions.hashing import hash_u64, splitmix64
+from bloomine_spark.functions.hashing import splitmix64
 
 
 # ---------------------------------------------------------------------------

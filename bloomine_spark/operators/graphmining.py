@@ -25,7 +25,7 @@ family builds and stay fully relational (SQL-oracle-checkable):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["undirected_edges", "triangle_counts", "lpa_communities", "k_core"]

@@ -175,9 +175,6 @@ def bestfit_pack(
     Deterministic end-to-end: same input ⇒ identical bins on any
     cluster/partitioning.
     """
-    import math
-
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 

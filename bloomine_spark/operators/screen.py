@@ -39,12 +39,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bloomine_spark.functions.hashing import code_kgram_hashes, rolling_kgram_hash
+from bloomine_spark.functions.hashing import code_kgram_hashes
 from bloomine_spark.functions.kgrams import (
-    TokenBatch,
+    FlatWindows,
+    KgramIndex,
     distinct_per_row,
-    unique_kgram_hashes,
-    window_codes,
+    exact_matches,
+    kgram_index,
+    token_range,
 )
 from bloomine_spark.params import ScreenParams
 from bloomine_spark.sketch.bloom import BloomFilter
@@ -67,8 +69,7 @@ class TargetContext:
     target_tokens: np.ndarray        # int64
     k: int
     params: ScreenParams
-    kset_hashes: np.ndarray          # sorted unique uint64 k-gram hashes
-    kgram_matrix: np.ndarray         # (n_kset, k) int64, rows sorted by hash
+    kset: KgramIndex                 # the target's distinct k-grams
     fp_threshold: int
     mst: float
     bloom_bytes: bytes
@@ -92,12 +93,6 @@ class TargetContext:
         d["_table"] = None
         return d
 
-    def kset_lookup(self, hashes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(index into kset_hashes / kgram_matrix, hash-is-member mask)."""
-        idx = np.searchsorted(self.kset_hashes, hashes)
-        np.minimum(idx, len(self.kset_hashes) - 1, out=idx)
-        return idx, self.kset_hashes[idx] == hashes
-
     def window_table(self, radix: int) -> np.ndarray:
         """Flag byte per window code over the alphabet ``[0, radix)``.
 
@@ -120,12 +115,12 @@ class TargetContext:
             cmap = self.complement_map if reverse else None
             h = code_kgram_hashes(radix, k, cmap, reverse)
             flags[self.bloom.contains_hashes(h)] |= bloom_bit
-            idx, member = self.kset_lookup(h)
+            idx, member = self.kset.lookup(h)
             codes = np.flatnonzero(member)
             toks = codes[:, None] // weights % radix
             if reverse:
                 toks = (toks if cmap is None else cmap[toks])[:, ::-1]
-            ok = (toks == self.kgram_matrix[idx[codes]]).all(axis=1)
+            ok = (toks == self.kset.rows[idx[codes]]).all(axis=1)
             flags[codes[ok]] |= kset_bit
         object.__setattr__(self, "_table", (radix, flags))
         return flags
@@ -134,7 +129,7 @@ class TargetContext:
         """True when <50% of the target's k-grams are unique — the
         reference's Bloom-FP blowup warning (/root/reference/src/utilities.hpp:89-99)."""
         n_windows = max(len(self.target_tokens) - self.k + 1, 0)
-        return len(self.kset_hashes) < 0.5 * n_windows
+        return len(self.kset) < 0.5 * n_windows
 
 
 def prepare_target(
@@ -146,29 +141,15 @@ def prepare_target(
     k = params.k
     if len(tokens) < k:
         raise ValueError(f"target shorter than k={k}")
-    hashes = unique_kgram_hashes(tokens, k)
-    # k-gram token matrix aligned with the sorted hash array (for exact
-    # candidate verification — hash collisions must not fabricate coverage)
-    win = np.lib.stride_tricks.sliding_window_view(tokens, k)
-    wh = rolling_kgram_hash(tokens.astype(np.uint64), len(tokens) - k + 1, k)
-    order = np.argsort(wh, kind="stable")
-    wh_sorted = wh[order]
-    first = np.ones(len(wh_sorted), dtype=bool)
-    first[1:] = wh_sorted[1:] != wh_sorted[:-1]
-    kgram_matrix = win[order][first]
-    kset_hashes = wh_sorted[first]
-    if len(kset_hashes) != len(hashes):  # pragma: no cover - sanity
-        raise AssertionError("hash dedup mismatch")
-
-    bf = BloomFilter.build(kset_hashes, params.false_positive)
+    kset = kgram_index(tokens, k)
+    bf = BloomFilter.build(kset.hashes, params.false_positive)
     return TargetContext(
         target_tokens=tokens,
         k=k,
         params=params,
-        kset_hashes=kset_hashes,
-        kgram_matrix=np.ascontiguousarray(kgram_matrix, dtype=np.int64),
-        fp_threshold=params.fp_threshold(len(kset_hashes)),
-        mst=params.mst(len(kset_hashes)),
+        kset=kset,
+        fp_threshold=params.fp_threshold(len(kset)),
+        mst=params.mst(len(kset)),
         bloom_bytes=bf.to_bytes(),
         complement_map=complement_map,
     )
@@ -252,94 +233,19 @@ def window_radix(
     MAX_TABLE_CODES, and V^k no larger than the batch's window count, so a
     table never costs more to build than hashing the batch it serves.
 
-    Raises ValueError for a token outside the complement map's vocabulary:
-    the map could not complement it (a negative token would wrap around to
-    the map's last entry).
+    Raises ValueError for a token outside the complement map's vocabulary
+    (``token_range``).
     """
     if len(values) == 0:
         return None
-    lo, hi = int(values.min()), int(values.max())
-    radix = hi + 1
-    if complement_map is not None:
-        vocab = len(complement_map)
-        if lo < 0 or hi >= vocab:
-            bad = lo if lo < 0 else hi
-            raise ValueError(
-                f"token {bad} is outside the complement map's vocabulary "
-                f"of {vocab} tokens (0..{vocab - 1})"
-            )
-        radix = vocab
+    lo, hi = token_range(values, complement_map)
+    radix = hi + 1 if complement_map is None else len(complement_map)
     if lo < 0:
         return None
     n_codes = radix**k
     if n_codes > min(MAX_TABLE_CODES, len(values) - k + 1):
         return None
     return radix
-
-
-class FlatWindows:
-    """All length-k windows of the FLAT buffer, in both orientations, row
-    structure derived lazily: per-window keys (base-``radix`` codes, or
-    hashes computed on first use) cover every flat position once; row ids /
-    in-row starts / validity are materialized only for the (few) positions
-    that survive a probe. This keeps per-batch transient allocations to the
-    key arrays themselves — large temporaries serialize multi-worker
-    executors on kernel page zeroing.
-
-    The reverse orientation is the reverse complement: ``complement_map``
-    (a vocabulary permutation, or None for plain reversal) then reversal.
-    """
-
-    def __init__(self, batch: TokenBatch, k: int,
-                 complement_map: np.ndarray | None = None,
-                 radix: int | None = None):
-        self.batch = batch
-        self.k = k
-        self.complement_map = complement_map
-        self.radix = radix
-        self.n_windows = max(len(batch.values) - k + 1, 0)
-        self.codes = (
-            None if radix is None
-            else window_codes(batch.values, self.n_windows, k, radix)
-        )
-        self._hashes: dict[bool, np.ndarray] = {}
-        self._row_ends = batch.offsets + batch.lens
-
-    def hashes(self, reverse: bool = False) -> np.ndarray:
-        """Hash of every window (``reverse``: of its reverse complement)."""
-        h = self._hashes.get(reverse)
-        if h is None:
-            flat = self.batch.flat
-            if reverse and self.complement_map is not None:
-                flat = self.complement_map[flat.astype(np.int64)].astype(np.uint64)
-            h = rolling_kgram_hash(flat, self.n_windows, self.k, reverse=reverse)
-            self._hashes[reverse] = h
-        return h
-
-    def tokens(self, pos: np.ndarray, reverse: bool) -> np.ndarray:
-        """(len(pos), k) int64 tokens of the windows at ``pos``, reverse
-        complemented when ``reverse``."""
-        gather = pos[:, None] + np.arange(self.k, dtype=np.int64)[None, :]
-        toks = self.batch.values[gather].astype(np.int64)
-        if reverse:
-            if self.complement_map is not None:
-                toks = self.complement_map[toks]
-            toks = toks[:, ::-1]
-        return toks
-
-    def rows_of(self, pos: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(row_ids, valid_mask) for flat window positions."""
-        rows = np.searchsorted(self.batch.offsets, pos, side="right") - 1
-        valid = pos + self.k <= self._row_ends[rows]
-        return rows, valid
-
-    def starts_of(self, pos: np.ndarray, rows: np.ndarray,
-                  reverse: bool) -> np.ndarray:
-        """In-row window starts (reversed-row coordinates when reverse)."""
-        starts = pos - self.batch.offsets[rows]
-        if reverse:
-            starts = self.batch.lens[rows] - self.k - starts
-        return starts
 
 
 class TargetWindows:
@@ -381,11 +287,8 @@ def _fp_pass_counts(
         hit_pos = np.flatnonzero(tw.ctx.bloom.contains_hashes(keys))
     if len(hit_pos) == 0:
         return np.zeros(n_rows, dtype=np.int64)
-    rows, valid = win.rows_of(hit_pos)
-    if row_mask is not None:
-        valid &= row_mask[rows]
-    rows = rows[valid]
-    uniq = distinct_per_row(rows, keys[hit_pos[valid]])
+    hit_pos, rows = win.in_rows(hit_pos, row_mask)
+    uniq = distinct_per_row(rows, keys[hit_pos])
     return np.bincount(rows[uniq], minlength=n_rows)
 
 
@@ -418,26 +321,18 @@ def _exact_candidates(
 ) -> tuple[np.ndarray, np.ndarray]:
     """(row_ids, starts) of windows whose TOKENS exactly match a target k-gram.
 
-    On the hash path candidates come from hash membership (searchsorted into
-    the sorted target hash set) and are then confirmed token-by-token
-    against the aligned k-gram matrix, so hash collisions cannot fabricate
-    coverage — mirroring the reference's exact map lookup
-    (src/FQread.hpp:233-241). The window table stores the outcome of that
-    same check per code, so the table path is a flag test.
+    The hash path is ``exact_matches`` against the target's k-gram index
+    (hash membership, then a token check, so hash collisions cannot
+    fabricate coverage). The window table stores the outcome of that same
+    check per code, so the table path is a flag test.
     """
     win = tw.win
     if tw.on_table:
-        pos = tw.flagged(RC_KSET if reverse else FWD_KSET)
+        pos, rows = win.in_rows(
+            tw.flagged(RC_KSET if reverse else FWD_KSET), row_sel
+        )
     else:
-        h = win.hashes(reverse)
-        idx, member = tw.ctx.kset_lookup(h)
-        pos = np.flatnonzero(member)
-    rows, valid = win.rows_of(pos)
-    valid &= row_sel[rows]
-    pos, rows = pos[valid], rows[valid]
-    if not tw.on_table and len(pos):
-        ok = (win.tokens(pos, reverse) == tw.ctx.kgram_matrix[idx[pos]]).all(axis=1)
-        pos, rows = pos[ok], rows[ok]
+        pos, rows, _ = exact_matches(win, tw.ctx.kset, reverse, row_sel)
     return rows, win.starts_of(pos, rows, reverse)
 
 
@@ -483,36 +378,6 @@ def score_survivors(
         scores[r] = score_runs(run_vals[i0:i1], rl, p)
 
 
-def _contains_subarray(
-    win: FlatWindows, pattern: np.ndarray, row_sel: np.ndarray, reverse: bool,
-) -> np.ndarray:
-    """Exact contiguous-subarray containment per row (vectorized).
-
-    ``win`` holds the len(pattern)-windows of the batch. Hash them, compare
-    to the pattern hash, confirm token equality, then validate row
-    boundaries — collision-proof. Used by verify mode "exact".
-    """
-    out = np.zeros(len(row_sel), dtype=bool)
-    kp = len(pattern)
-    if win.n_windows == 0:
-        return out
-    # the transformed read contains raw-P iff some window w satisfies
-    # reverse(π(w)) == P, and win.hashes(True) are exactly hash(reverse(π(w)))
-    pat_h = rolling_kgram_hash(pattern.astype(np.uint64), 1, kp)[0]
-    cand_pos = np.flatnonzero(win.hashes(reverse) == pat_h)
-    if len(cand_pos) == 0:
-        return out
-    rows, valid = win.rows_of(cand_pos)
-    valid &= row_sel[rows]
-    cand_pos, rows = cand_pos[valid], rows[valid]
-    if len(cand_pos) == 0:
-        return out
-    toks = win.tokens(cand_pos, reverse)
-    ok = (toks == pattern[None, :].astype(np.int64)).all(axis=1)
-    out[np.unique(rows[ok])] = True
-    return out
-
-
 def verify(
     tw: TargetWindows, fp_f: np.ndarray, fp_r: np.ndarray, mode: str,
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -531,11 +396,14 @@ def verify(
         score_survivors(tw, fp_r, True, scores, p)
         return scores, fp_any & (scores >= ctx.mst)
     if mode == "exact":
+        # the whole target as the one k-gram of an index over its length
         target = ctx.target_tokens
         pat = FlatWindows(tw.win.batch, len(target), ctx.complement_map)
-        contains = _contains_subarray(pat, target, fp_f, False)
-        if fp_r.any():
-            contains |= _contains_subarray(pat, target, fp_r, True)
+        whole = kgram_index(target, len(target))
+        contains = np.zeros(len(fp_f), dtype=bool)
+        for reverse, sel in ((False, fp_f), (True, fp_r)):
+            if sel.any():
+                contains[exact_matches(pat, whole, reverse, sel)[1]] = True
         scores = np.where(contains, len(target) * int(p.hit), 0)
         return scores, fp_any & contains
     raise ValueError(f"unknown mode {mode!r}")

@@ -10,7 +10,7 @@ hit=10, gap_open=15, gap_extend=7 (/root/reference/src/constants.hpp:5-7).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)

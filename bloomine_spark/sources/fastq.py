@@ -54,7 +54,9 @@ for _i, _b in enumerate(b"ACGT"):
 # numpy 256-table gather ~2x on long buffers
 _BASE_TRANS = bytes(_BASE_TABLE.astype(np.uint8).tolist())
 
-# A<->T, C<->G; N stays N — vocab permutation for FlatWindows(reverse=...)
+# A<->T, C<->G; N stays N — the vocab permutation the screen and MOI
+# extraction take as ``complement_map`` (functions.kgrams.FlatWindows
+# reverse complements windows with it)
 DNA_COMPLEMENT_MAP = np.array([3, 2, 1, 0, 4], dtype=np.int64)
 
 _MATE_RE = re.compile(r"_(R?)([12])$")
@@ -250,6 +252,8 @@ def read_sequence_files(
     import pandas as pd
     import pyarrow as pa
 
+    if fmt not in ("fastq", "fasta"):
+        raise ValueError(f"unknown format {fmt!r}: expected 'fastq' or 'fasta'")
     loader = spark.read.format("binaryFile")
     files = (
         loader.load(list(path_glob)) if isinstance(path_glob, (list, tuple))

@@ -192,3 +192,33 @@ def test_extract_targets_multi_matches_per_probe(spark):
         for _, r in multi.iterrows()
     }
     assert want == got and len(want) == 8
+
+
+def test_extract_targets_multi_skips_null_probe_id(spark):
+    """A null target_id next to string ids belongs to no probe: its row is
+    skipped like an unknown id, and the other rows extract as without it."""
+    from pyspark.sql import types as T
+
+    from bloomine_spark.operators.cascade import extract_targets_multi
+
+    schema = T.StructType([
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("target_id", T.StringType()),
+        T.StructField("tokens", T.ArrayType(T.IntegerType())),
+    ])
+    rows = [(f"a{i}", "pA", _mk_read([1, 2, i])) for i in range(3)]
+    rows.append(("z", "zz", _mk_read([4])))
+    null_row = ("n0", None, _mk_read([5, 6]))
+    probes = {"pA": (HEAD, TAIL), "zz": (HEAD, TAIL)}
+
+    def run(rs):
+        df = spark.createDataFrame(rs, schema).coalesce(1)
+        out = extract_targets_multi(df, probes, min_kmer=11).toPandas()
+        return sorted(
+            (r.doc_id, r.target_id, list(r.extracted))
+            for r in out.itertuples()
+        )
+
+    got = run(rows[:2] + [null_row] + rows[2:])
+    assert got == run(rows)
+    assert [d for d, _, _ in got] == ["a0", "a1", "a2", "z"]

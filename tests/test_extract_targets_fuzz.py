@@ -94,3 +94,27 @@ def test_extract_targets_matches_python_slice_oracle(spark, min_kmer):
     # the fixture must actually exercise extraction, not just rejection
     # (at min_kmer=11 most partial cuts are below k, so fewer reads anchor)
     assert n_checked > (20 if min_kmer >= 11 else 50)
+
+
+@pytest.mark.parametrize("bad", [-1, 5])
+def test_oov_token_under_complement_map_raises_in_extraction(spark, bad):
+    """Under a complement map, a token outside its vocabulary raises the
+    screen's ValueError instead of being complemented to N (-1 wraps to the
+    map's last entry) or failing with a bare IndexError (5)."""
+    from bloomine_spark.sources.fastq import DNA_COMPLEMENT_MAP
+
+    rng = np.random.default_rng(5)
+    head = rng.integers(0, 4, 14)
+    tail = rng.integers(0, 4, 14)
+    # a reverse-complemented read whose inter-flank region holds the token
+    read = DNA_COMPLEMENT_MAP[tail][::-1].tolist() + [bad] * 3 \
+        + DNA_COMPLEMENT_MAP[head][::-1].tolist()
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": ["r0"], "tokens": [np.array(read, np.int32)]})
+    )
+    with pytest.raises(Exception, match=rf"token {bad} is outside the "
+                       r"complement map's vocabulary of 5 tokens"):
+        extract_targets(
+            df, head.tolist(), tail.tolist(), min_kmer=11,
+            complement_map=DNA_COMPLEMENT_MAP,
+        ).collect()

@@ -13,6 +13,7 @@ from bloomine_spark.sources.fastq import (
     load_fasta_targets,
     read_fasta,
     read_fastq,
+    read_sequence_files,
     tokenize_bases,
 )
 
@@ -70,6 +71,14 @@ def test_read_fastq_schema_naming_and_framing(spark, fastq_dir):
     # tokens really are the read bases (gz and plain files agree)
     a0 = got.loc[("sampleA", "r0")]
     assert a0["n_tok"] == len(a0["tokens"]) == 15 + len(TARGET) + 15
+
+
+@pytest.mark.parametrize("fmt", ["fq", "FASTQ", "fa", ""])
+def test_read_sequence_files_rejects_unknown_format(spark, fastq_dir, fmt):
+    """Only "fastq" and "fasta" name a kernel; any other value used to
+    reach the FASTA kernel and read a FASTQ file as an empty DataFrame."""
+    with pytest.raises(ValueError, match="unknown format"):
+        read_sequence_files(spark, fastq_dir + "/*", fmt=fmt)
 
 
 def test_screen_planted_target_from_fastq_files(spark, fastq_dir):

@@ -7,11 +7,11 @@ from bloomine_spark.functions.hashing import (
     splitmix64,
 )
 from bloomine_spark.functions.kgrams import (
+    FlatWindows,
     distinct_per_row,
     flatten_token_series,
-    kgram_windows,
+    kgram_index,
     paint_coverage,
-    unique_kgram_hashes,
 )
 
 
@@ -35,23 +35,27 @@ def test_reverse_hash_equals_hash_of_reversed_sequence():
     assert (fwd_of_reversed == rev[::-1]).all()
 
 
-def test_kgram_windows_rows_and_reverse_starts():
+def test_flat_windows_rows_and_reverse_starts():
     s = pd.Series([np.array([1, 2, 3, 4, 5]), np.array([9, 9]), np.array([7, 8, 9])])
     batch = flatten_token_series(s)
     k = 3
-    win = kgram_windows(batch, k)
+    win = FlatWindows(batch, k)
+    rows, valid = win.rows_of(np.arange(win.n_windows))
+    pos, rows = np.flatnonzero(valid), rows[valid]
     # row 0: 3 windows, row 1 (len<k): 0, row 2: 1 window
-    assert win.row_ids.tolist() == [0, 0, 0, 2]
-    assert win.starts.tolist() == [0, 1, 2, 0]
+    assert rows.tolist() == [0, 0, 0, 2]
+    assert win.starts_of(pos, rows, False).tolist() == [0, 1, 2, 0]
     # reverse starts are mirrored
-    winr = kgram_windows(batch, k, reverse=True)
-    assert winr.starts.tolist() == [2, 1, 0, 0]
+    assert win.starts_of(pos, rows, True).tolist() == [2, 1, 0, 0]
     # reverse hashes equal hashes of the reversed rows
     rev_batch = flatten_token_series(
         s.apply(lambda a: np.ascontiguousarray(a[::-1]))
     )
-    win_rev = kgram_windows(rev_batch, k)
-    assert sorted(win_rev.hashes.tolist()) == sorted(winr.hashes.tolist())
+    win_rev = FlatWindows(rev_batch, k)
+    rev_pos = np.flatnonzero(win_rev.rows_of(np.arange(win_rev.n_windows))[1])
+    assert sorted(win_rev.hashes()[rev_pos].tolist()) == sorted(
+        win.hashes(True)[pos].tolist()
+    )
 
 
 def test_distinct_per_row():
@@ -65,7 +69,7 @@ def test_unique_kgram_hashes_period4_fixture():
     # token analog of ACGTACGTACGT: 12 tokens period 4, k=7 → 6 windows,
     # 4 distinct (offsets mod 4)
     seq = np.array([1, 2, 3, 4] * 3)
-    u = unique_kgram_hashes(seq, 7)
+    u = kgram_index(seq, 7).hashes
     assert len(u) == 4
 
 

@@ -54,7 +54,7 @@ def ref_fixture(tmp_path):
 
 
 def test_fasta2kmerset_parity(ref_fixture):
-    from bloomine_spark.functions.kgrams import unique_kgram_hashes
+    from bloomine_spark.functions.kgrams import kgram_index
 
     targets = load_fasta_targets(str(ref_fixture / "temp.fasta"))
     assert list(targets) == ["target_sequence"]
@@ -63,7 +63,7 @@ def test_fasta2kmerset_parity(ref_fixture):
     # genkmerset parity: 6 windows, 4 distinct (NOT the stale gtest 3)
     want = {TARGET[i : i + K] for i in range(len(TARGET) - K + 1)}
     assert want == {"ACGTACG", "CGTACGT", "GTACGTA", "TACGTAC"}
-    assert len(unique_kgram_hashes(toks.astype(np.int64), K)) == len(want)
+    assert len(kgram_index(toks.astype(np.int64), K).hashes) == len(want)
 
 
 def test_fp_threshold_parity():

@@ -179,8 +179,8 @@ def test_screen_no_bloom_false_positive_effect(small_table):
         toks = row["tokens"].tolist()
         for read in (toks, toks[::-1]):
             exact = oracle.fp_screen(read, P.k, thr, kset.__contains__)
-            from bloomine_spark.functions.kgrams import unique_kgram_hashes
+            from bloomine_spark.functions.kgrams import kgram_index
 
-            h = unique_kgram_hashes(np.asarray(read), P.k)
+            h = kgram_index(np.asarray(read), P.k).hashes
             bloom_hits = int(ctx.bloom.contains_hashes(h).sum())
             assert (bloom_hits >= thr) == exact

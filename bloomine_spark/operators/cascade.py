@@ -7,6 +7,11 @@ The cascade itself is cardinality-aware staging: flank 2 screens only
 flank-1 survivors (/root/reference/bloomine/BloomineRunner.py:76-94) — in
 Spark that's simply chaining the second screen onto the first's hit set, so
 AQE sees the shrunken input and re-plans downstream partitioning.
+
+The flank-pair plan over a long score log — composite ids
+(``flank_pair_targets``), combined flank log J1 (``flank_pair_scores``) and
+probe argmax W1 (``best_flank_pairs``) — is defined here once, for
+``combined_flank_scores``, ``multiscreen.polyfamily_onepass`` and the grid.
 """
 
 from __future__ import annotations
@@ -26,48 +31,90 @@ from bloomine_spark.functions.kgrams import (
 from bloomine_spark.operators.screen import screen_scores
 from bloomine_spark.params import ScreenParams
 
+# ---------------------------------------------------------------------------
+# flank pairs: composite target ids and the combined flank log (J1)
+# ---------------------------------------------------------------------------
 
-def _flank_best(scores: DataFrame, flank: int) -> DataFrame:
-    """Per-doc best forward/RC score for one flank — the per-(read,rc,flank)
-    max of /root/reference/bloomine/BloomineRunner.py:230-233 pivoted to
-    columns."""
-    return scores.groupBy("doc_id").agg(
-        F.max(F.when(~F.col("rc"), F.col("score"))).alias(f"f{flank}_score"),
-        F.max(F.when(F.col("rc"), F.col("score"))).alias(f"f{flank}_rc_score"),
+_SEP = "\t"  # probe id / flank separator inside composite target ids
+_PAIR_COLS = ["f1_score", "f1_rc_score", "f2_score", "f2_rc_score"]
+
+
+def _read_keys(df: DataFrame) -> list[str]:
+    """Read ids are only unique per sample: rows are keyed on (source,
+    doc_id) when a ``source`` column exists, else on doc_id."""
+    return ["source", "doc_id"] if "source" in df.columns else ["doc_id"]
+
+
+def flank_pair_targets(probes: dict[str, tuple]) -> dict[str, Sequence[int]]:
+    """{probe_id: (flank1, flank2)} → one screen target per flank, with the
+    composite ids ``<probe_id>\\t1`` / ``<probe_id>\\t2`` that
+    ``flank_pair_scores`` splits again."""
+    return {
+        f"{pid}{_SEP}{flank}": pair[flank - 1]
+        for pid, pair in sorted(probes.items())
+        for flank in (1, 2)
+    }
+
+
+def _flank_pair_best(flank: int):
+    return F.greatest(F.col(f"f{flank}_score"), F.col(f"f{flank}_rc_score"))
+
+
+def flank_pair_scores(
+    scores: DataFrame, thresholds: dict[str, float]
+) -> DataFrame:
+    """The combined flank log (J1, reference bloomine/BloomineRunner.py:
+    236-274) of every probe in a long score log whose
+    ``target_id`` is a ``flank_pair_targets`` id; ``thresholds`` maps those
+    ids to their flank's MST.
+
+    One row per (read keys, probe_id): the best forward and RC score of
+    each flank (the per-(read, rc, flank) max of BloomineRunner.py:230-233),
+    threshold = max of the two flank thresholds, and pass = 1 iff each
+    flank's best clears its own threshold (a missing flank fails)."""
+    keys = _read_keys(scores)
+    parts = F.split(F.col("target_id"), _SEP)
+    thr = F.create_map(*(
+        F.lit(v) for tid, t in sorted(thresholds.items())
+        for v in (tid, float(t))
+    ))
+    thr1, thr2 = (
+        thr[F.concat(F.col("probe_id"), F.lit(f"{_SEP}{f}"))] for f in (1, 2)
+    )
+    return (
+        scores.groupBy(*keys, parts.getItem(0).alias("probe_id"))
+        .agg(*(  # column f<n>[_rc]_score: max score of flank n, rc side
+            F.max(F.when(
+                (parts.getItem(1) == c[1]) & (F.col("rc") == ("_rc" in c)),
+                F.col("score"),
+            )).alias(c)
+            for c in _PAIR_COLS
+        ))
+        .select(
+            *keys, "probe_id", *_PAIR_COLS,
+            F.greatest(thr1, thr2).alias("threshold"),
+            F.when(
+                (_flank_pair_best(1) >= thr1) & (_flank_pair_best(2) >= thr2),
+                F.lit(1),
+            ).otherwise(F.lit(0)).alias("pass"),
+        )
     )
 
 
 def combined_flank_scores(
     scores1: DataFrame, scores2: DataFrame, thr1: float, thr2: float
 ) -> DataFrame:
-    """Full-outer merge of the two flank score logs (J1,
-    /root/reference/bloomine/BloomineRunner.py:236-274).
-
-    pass = 1 iff best(f1) ≥ thr1 AND best(f2) ≥ thr2, null-safe (a missing
-    flank fails); threshold column = max(thr1, thr2) as the reference writes.
-    """
-    f1 = _flank_best(scores1, 1)
-    f2 = _flank_best(scores2, 2)
-    j = f1.join(f2, "doc_id", "full_outer")
-    f1_best = F.greatest(F.col("f1_score"), F.col("f1_rc_score"))
-    f2_best = F.greatest(F.col("f2_score"), F.col("f2_rc_score"))
-    return j.select(
-        "doc_id",
-        "f1_score",
-        "f1_rc_score",
-        "f2_score",
-        "f2_rc_score",
-        F.lit(float(max(thr1, thr2))).alias("threshold"),
-        F.when(
-            f1_best.isNotNull()
-            & f2_best.isNotNull()
-            & (f1_best >= F.lit(float(thr1)))
-            & (f2_best >= F.lit(float(thr2))),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("pass"),
+    """Merged log of two single-target flank screens
+    (reference bloomine/BloomineRunner.py:236-274): the one-probe
+    case of ``flank_pair_scores``. Columns (doc_id, f1_score, f1_rc_score,
+    f2_score, f2_rc_score, threshold, pass)."""
+    tagged = flank_pair_targets({"": (scores1, scores2)})
+    s1, s2 = (
+        s.select("doc_id", "rc", "score", F.lit(tid).alias("target_id"))
+        for tid, s in tagged.items()
     )
+    thresholds = dict(zip(tagged, (thr1, thr2)))
+    return flank_pair_scores(s1.unionByName(s2), thresholds).drop("probe_id")
 
 
 def cascade(
@@ -490,18 +537,27 @@ def choose_best_probes(per_probe_scores: DataFrame) -> DataFrame:
     Read ids are only unique per sample, so when a ``source`` column is
     present the argmax is per (source, doc_id) — colliding ids from
     different samples must not compete."""
-    keys = (
-        ["source", "doc_id"]
-        if "source" in per_probe_scores.columns
-        else ["doc_id"]
-    )
-    w = Window.partitionBy(*keys).orderBy(
+    w = Window.partitionBy(*_read_keys(per_probe_scores)).orderBy(
         F.desc("total_score"), F.asc("target_id")
     )
     return (
         per_probe_scores.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
+    )
+
+
+def best_flank_pairs(pairs: DataFrame) -> DataFrame:
+    """W1 over a ``flank_pair_scores`` log: each read's passing probe with
+    the largest best(flank 1) + best(flank 2), through
+    ``choose_best_probes``. Columns (read keys, target_id, total_score)."""
+    total = _flank_pair_best(1) + _flank_pair_best(2)
+    return choose_best_probes(
+        pairs.filter(F.col("pass") == 1).select(
+            *_read_keys(pairs),
+            F.col("probe_id").alias("target_id"),
+            total.cast("long").alias("total_score"),
+        )
     )
 
 

@@ -13,10 +13,10 @@ Output is a long-format score log: one row per (FP-surviving row, target),
 columns (passthrough..., target_id, rc, fp_hits, score, threshold, sp_pass)
 — the multi-probe analog of the reference's per-run flank_scores.tsv.
 
-``polyfamily_onepass`` rebuilds the reference polyfamily pipeline
-(flank intersection J2 → argmax W1, /root/reference/bloomine/polyfamily.py)
-on top of it: all probes' both flanks screened in ONE scan instead of
-2 × n_probes scans.
+``screen_flank_pairs`` screens both flanks of every probe in that one
+pass; ``polyfamily_onepass`` runs the flank-pair log (J1) and the probe
+argmax (W1) of ``operators.cascade`` on it: 1 scan instead of the
+reference's 2 × n_probes (reference bloomine/polyfamily.py).
 """
 
 from __future__ import annotations
@@ -25,16 +25,18 @@ from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from bloomine_spark.operators.cascade import (
+    best_flank_pairs,
+    flank_pair_scores,
+    flank_pair_targets,
+)
 from bloomine_spark.operators.screen import (
     TargetContext,
     _screen_plan,
     prepare_target,
 )
 from bloomine_spark.params import ScreenParams
-
-_SEP = "\t"  # probe-id / flank separator inside composite target ids
 
 
 def prepare_targets(
@@ -64,50 +66,38 @@ def screen_multi_scores(
     )
 
 
+def screen_flank_pairs(
+    df: DataFrame,
+    probes: dict[str, tuple],
+    params: ScreenParams = ScreenParams(),
+    complement_map: np.ndarray | None = None,
+) -> tuple[DataFrame, dict[str, float]]:
+    """Both flanks of every probe ({probe_id: (flank1, flank2)}) screened
+    in one data pass: the ``screen_multi_scores`` log over the
+    ``flank_pair_targets`` ids, and each flank's MST by the same ids — the
+    inputs of ``operators.cascade.flank_pair_scores``. Each flank's
+    context is prepared once and serves both."""
+    ctxs = prepare_targets(flank_pair_targets(probes), params, complement_map)
+    scores = _screen_plan(
+        df, ctxs, params.k, complement_map, "tokens", mode="scored",
+        rc_retry=True, keep_tokens=False,
+    )
+    return scores, {tid: ctx.mst for tid, ctx in ctxs.items()}
+
+
 def polyfamily_onepass(
     df: DataFrame,
     probes: dict[str, tuple],
     params: ScreenParams = ScreenParams(),
     complement_map: np.ndarray | None = None,
 ) -> DataFrame:
-    """Polyfamily (J2 flank intersection → W1 argmax) with ONE corpus scan.
+    """Polyfamily (flank-pair log J1 → argmax W1) with ONE corpus scan.
 
-    Semantically identical to operators.cascade.polyfamily_run (the cascade
-    is only a work-saving device; the flank intersection ANDs both flanks
-    anyway), but scans the data once for all probes × flanks.
+    Same result as operators.cascade.polyfamily_run (the cascade is only a
+    work-saving device, and a read passes J1 exactly when both flanks'
+    best scores clear their thresholds, J2's intersection), but scans the
+    data once for all probes × flanks. Read keys are (source, doc_id)
+    when a source column exists.
     """
-    from bloomine_spark.operators.cascade import choose_best_probes
-
-    flat_targets = {}
-    for tid, (f1, f2) in sorted(probes.items()):
-        flat_targets[tid + _SEP + "1"] = f1
-        flat_targets[tid + _SEP + "2"] = f2
-
-    scores = screen_multi_scores(df, flat_targets, params,
-                                 complement_map=complement_map)
-    # read ids are only unique per sample: key every stage on (source,
-    # doc_id) when a source column exists so colliding ids from different
-    # samples never merge (same rule as run_grid hydration)
-    keys = ["source", "doc_id"] if "source" in df.columns else ["doc_id"]
-    parts = F.split(F.col("target_id"), _SEP)
-    scored = (
-        scores.filter(F.col("sp_pass"))
-        .select(
-            *keys,
-            parts.getItem(0).alias("probe_id"),
-            parts.getItem(1).alias("flank"),
-            "score",
-        )
-        .groupBy(*keys, "probe_id")
-        .agg(
-            F.max(F.when(F.col("flank") == "1", F.col("score"))).alias("f1_best"),
-            F.max(F.when(F.col("flank") == "2", F.col("score"))).alias("f2_best"),
-        )
-        .filter(F.col("f1_best").isNotNull() & F.col("f2_best").isNotNull())
-        .select(
-            *keys,
-            F.col("probe_id").alias("target_id"),
-            (F.col("f1_best") + F.col("f2_best")).cast("long").alias("total_score"),
-        )
-    )
-    return choose_best_probes(scored)
+    scores, thresholds = screen_flank_pairs(df, probes, params, complement_map)
+    return best_flank_pairs(flank_pair_scores(scores, thresholds))

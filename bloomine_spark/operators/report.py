@@ -3,20 +3,24 @@
 - ``render_subpop_report`` reproduces the MOI text report byte format
   (/root/reference/bloomine/moi.py:131-161: header, ``Sequence variants:``
   block of ``<seq>\\t<count>`` lines, ``Length variants:`` block).
-- ``polyfamily_summary_json`` reproduces the polyfamily JSON summary
+- ``flank_tsv_row`` formats one combined flank-log row
+  (``operators.cascade.flank_pair_scores``) in the reference
+  ``<prefix>_combined_flank_scores.tsv`` format; ``iter_flank_scores_tsv``
+  streams the whole TSV, and the grid CLI (``jobs/run_grid.py``) writes
+  the same rows behind a ``probe_set`` column.
+- ``polyfamily_summary_from_counts`` reproduces the polyfamily JSON summary
   (/root/reference/bloomine/run.py:100-125: ``{probe_id: [[seq, count],
-  ...]}`` sorted by count descending).
+  ...]}`` sorted by count descending) from collected variant counts.
 
-Both take the (small, post-aggregation) result DataFrames — the driver-side
-formatting of counts the cluster already reduced; nothing here touches row
-data.
+All of them format results the cluster already reduced; nothing here
+touches row data.
 """
 
 from __future__ import annotations
 
 import datetime
 import json
-from typing import Callable, Mapping, Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
 
@@ -68,33 +72,38 @@ FLANK_TSV_HEADER = "\t".join(
 )
 
 
+def flank_tsv_row(r) -> str:
+    """One combined flank-log row (doc_id, f1_score, f1_rc_score, f2_score,
+    f2_rc_score, threshold, pass) as a reference TSV line
+    (reference bloomine/BloomineRunner.py:240-274): missing scores
+    as EMPTY fields, integer scores, threshold via Python float repr, pass
+    as 0/1."""
+
+    def cell(v) -> str:
+        return "" if v is None else str(int(v))
+
+    return "\t".join([
+        str(r["doc_id"]),
+        cell(r["f1_score"]),
+        cell(r["f1_rc_score"]),
+        cell(r["f2_score"]),
+        cell(r["f2_rc_score"]),
+        str(float(r["threshold"])),
+        str(int(r["pass"])),
+    ])
+
+
 def iter_flank_scores_tsv(combined: DataFrame):
-    """Yield the combined flank-scores TSV lines (no trailing newline), in
-    the exact reference format (/root/reference/bloomine/BloomineRunner.py:
-    240-274): header row, read_ids ascending, missing scores as EMPTY
-    fields, integer scores, threshold via Python float repr, pass as 0/1.
+    """Yield the combined flank-scores TSV lines (no trailing newline): the
+    header row, then one ``flank_tsv_row`` per read, read_ids ascending.
 
     Streams via ``toLocalIterator`` so the driver never holds the whole log
     (the sort happens cluster-side; ASCII read_ids order identically under
     Spark's UTF8-binary and the reference's Python code-point sort).
     """
     yield FLANK_TSV_HEADER
-
-    def cell(v) -> str:
-        return "" if v is None else str(int(v))
-
     for r in combined.orderBy("doc_id").toLocalIterator():
-        yield "\t".join(
-            [
-                str(r["doc_id"]),
-                cell(r["f1_score"]),
-                cell(r["f1_rc_score"]),
-                cell(r["f2_score"]),
-                cell(r["f2_rc_score"]),
-                str(float(r["threshold"])),
-                str(int(r["pass"])),
-            ]
-        )
+        yield flank_tsv_row(r)
 
 
 def render_flank_scores_tsv(combined: DataFrame) -> str:
@@ -114,36 +123,20 @@ def polyfamily_summary_from_counts(
     counts,
     detokenize: Callable[[Sequence[int]], str] = _default_detok,
 ) -> str:
-    """Same JSON layout as ``polyfamily_summary_json`` but from already
-    collected ``(probe_id, extracted, count)`` triples — lets a grid run
-    collect ONE grouped variant-count frame and render every per-sample /
-    per-probe blob driver-side without further Spark jobs."""
+    """{probe_id: [[variant, count], ...]} sorted by count desc
+    (run.py:117-121's ``probe_json`` layout) from collected ``(probe_id,
+    extracted, count)`` triples — a grid run collects ONE grouped
+    variant-count frame and renders every per-sample / per-probe blob
+    locally without further Spark jobs."""
     per_probe: dict[str, list] = {}
     for probe_id, extracted, count in counts:
         per_probe.setdefault(probe_id, []).append(
             (detokenize(extracted), int(count))
         )
-    out: dict[str, list] = {}
-    for probe_id in sorted(per_probe):
-        pairs = sorted(per_probe[probe_id], key=lambda x: (-x[1], x[0]))
-        if pairs:
-            out[probe_id] = [[s, c] for s, c in pairs]
-    return json.dumps(out, indent=2)
-
-
-def polyfamily_summary_json(
-    per_probe_variants: Mapping[str, DataFrame],
-    detokenize: Callable[[Sequence[int]], str] = _default_detok,
-) -> str:
-    """{probe_id: [[variant, count], ...]} sorted by count desc
-    (run.py:117-121's ``probe_json`` layout)."""
-    out: dict[str, list] = {}
-    for probe_id in sorted(per_probe_variants):
-        rows = per_probe_variants[probe_id].collect()
-        pairs = sorted(
-            ((detokenize(r["extracted"]), int(r["count"])) for r in rows),
-            key=lambda x: (-x[1], x[0]),
-        )
-        if pairs:
-            out[probe_id] = [[s, c] for s, c in pairs]
+    out = {
+        probe_id: [
+            [s, c] for s, c in sorted(pairs, key=lambda x: (-x[1], x[0]))
+        ]
+        for probe_id, pairs in sorted(per_probe.items())
+    }
     return json.dumps(out, indent=2)

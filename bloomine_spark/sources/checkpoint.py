@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from bloomine_spark.sketch.core import _merge_states, fold_partition
+from bloomine_spark.sources.stages import _hadoop_path
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -85,8 +86,11 @@ def checkpoint_dir(base: str, run_id: str, stage: str) -> str:
 
 def _checkpointed_states(spark, path: str) -> dict[int, bytes]:
     """{partition_id: sketch_state} of the checkpoint at ``path``, first
-    row per id, from one collect."""
-    if not os.path.isdir(path):
+    row per id, from one collect. Existence is checked through the Hadoop
+    FileSystem, so ``file://``, ``hdfs://`` and ``s3a://`` paths resume
+    like local ones."""
+    fs, p, _ = _hadoop_path(spark, path)
+    if not fs.exists(p):
         return {}
     rows = (
         spark.read.schema(LINEAGE_SCHEMA).parquet(path)

@@ -4,8 +4,11 @@ loops samples × probes and re-reads each sample's FASTQ once per probe.
 
 Spark-first inversion: samples live in ONE table (the ``source`` column is
 the sample id, SURVEY S6 mapping) and every sample × probe × flank is
-screened in a SINGLE corpus scan (``screen_multi_scores``); everything
-downstream operates on the tiny score log. Per-sample artifacts match the
+screened in a SINGLE corpus scan (``multiscreen.screen_flank_pairs``);
+everything downstream operates on the tiny score log through the library's
+flank-pair plan: the combined flank log per (sample, read, probe) is
+``cascade.flank_pair_scores`` (J1) and the assignments are its argmax
+``cascade.best_flank_pairs`` (W1). Per-sample artifacts match the
 reference's per-run directory layout:
 
     <output>/<run-id>/multi_scores/      long score log (stage, resumable)
@@ -34,8 +37,6 @@ import argparse
 import json
 import os
 
-SEP = "\t"  # composite target-id separator (matches operators.multiscreen)
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -63,13 +64,19 @@ def main() -> None:
     ap.add_argument("--force", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from bloomine_spark.operators.cascade import extract_targets_multi
-    from bloomine_spark.operators.multiscreen import screen_multi_scores
-    from bloomine_spark.operators.report import polyfamily_summary_from_counts
-    from bloomine_spark.operators.screen import prepare_target
+    from bloomine_spark.operators.cascade import (
+        best_flank_pairs,
+        extract_targets_multi,
+        flank_pair_scores,
+    )
+    from bloomine_spark.operators.multiscreen import screen_flank_pairs
+    from bloomine_spark.operators.report import (
+        FLANK_TSV_HEADER,
+        flank_tsv_row,
+        polyfamily_summary_from_counts,
+    )
     from bloomine_spark.params import ScreenParams
     from bloomine_spark.session import job_session
     from bloomine_spark.sources.stages import StageRunner
@@ -120,77 +127,18 @@ def main() -> None:
         df = df.filter(F.col("source").isin(args.samples.split(",")))
 
     # ---- stage 1: ONE scan screens every sample x probe x flank ----------
-    flat_targets = {}
-    for tid, (f1, f2) in sorted(targets.items()):
-        flat_targets[tid + SEP + "1"] = f1
-        flat_targets[tid + SEP + "2"] = f2
+    screened, thresholds = screen_flank_pairs(df, targets, params,
+                                              complement_map)
     scores = runner.stage(
-        "multi_scores",
-        lambda: screen_multi_scores(df, flat_targets, params,
-                                    complement_map=complement_map),
+        "multi_scores", lambda: screened,
         manifest=dict(manifest, stage="multi_scores"),
     )
-
-    # per-(probe, flank) SP thresholds, built driver-side like the screens do
-    thr = {
-        tid: (
-            float(prepare_target(f1, params).mst),
-            float(prepare_target(f2, params).mst),
-        )
-        for tid, (f1, f2) in targets.items()
-    }
-    parts = F.split(F.col("target_id"), SEP)
-    per = scores.select(
-        "source", "doc_id",
-        parts.getItem(0).alias("probe_id"),
-        parts.getItem(1).alias("flank"),
-        "rc", "score",
-    )
-    # the RunManager merged-log pivot: per (sample, read, probe) the best
-    # fwd/RC score of each flank (run.py:139-177 / BloomineRunner.py:236-264)
-    best = per.groupBy("source", "doc_id", "probe_id").agg(
-        F.max(F.when((F.col("flank") == "1") & ~F.col("rc"), F.col("score"))).alias("f1_score"),
-        F.max(F.when((F.col("flank") == "1") & F.col("rc"), F.col("score"))).alias("f1_rc_score"),
-        F.max(F.when((F.col("flank") == "2") & ~F.col("rc"), F.col("score"))).alias("f2_score"),
-        F.max(F.when((F.col("flank") == "2") & F.col("rc"), F.col("score"))).alias("f2_rc_score"),
-    )
-    thr_df = spark.createDataFrame(
-        [(t, v1, v2) for t, (v1, v2) in sorted(thr.items())],
-        "probe_id string, thr1 double, thr2 double",
-    )
-    f1_best = F.greatest(F.col("f1_score"), F.col("f1_rc_score"))
-    f2_best = F.greatest(F.col("f2_score"), F.col("f2_rc_score"))
-    combined = best.join(F.broadcast(thr_df), "probe_id").select(
-        "source", "doc_id", "probe_id",
-        "f1_score", "f1_rc_score", "f2_score", "f2_rc_score",
-        F.greatest(F.col("thr1"), F.col("thr2")).alias("threshold"),
-        F.when(
-            f1_best.isNotNull() & f2_best.isNotNull()
-            & (f1_best >= F.col("thr1")) & (f2_best >= F.col("thr2")),
-            F.lit(1),
-        ).otherwise(F.lit(0)).alias("pass"),
-    )
+    # the RunManager merged log (run.py:139-177): J1 per (sample, read, probe)
+    combined = flank_pair_scores(scores, thresholds)
 
     # ---- stage 2: polyfamily argmax per (sample, read), ties -> min probe -
-    def _build_assignments():
-        total = (f1_best + f2_best).cast("long")
-        w = Window.partitionBy("source", "doc_id").orderBy(
-            F.desc("total_score"), F.asc("target_id")
-        )
-        return (
-            combined.filter(F.col("pass") == 1)
-            .select(
-                "source", "doc_id",
-                F.col("probe_id").alias("target_id"),
-                total.alias("total_score"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
     assigned = runner.stage(
-        "assignments", _build_assignments,
+        "assignments", lambda: best_flank_pairs(combined),
         manifest=dict(manifest, stage="assignments"),
     )
 
@@ -215,13 +163,6 @@ def main() -> None:
     jobs_before_sinks = len(
         spark.sparkContext.statusTracker().getJobIdsForGroup())
 
-    header = "\t".join(
-        ["probe_set", "read_id", "flank_1_score", "flank_1_RC_score",
-         "flank_2_score", "flank_2_RC_score", "threshold", "pass"])
-
-    def cell(v):
-        return "" if v is None else str(int(v))
-
     def sample_dir(sample: str) -> str:
         sdir = os.path.join(args.output, "samples", sample)
         os.makedirs(sdir, exist_ok=True)
@@ -244,13 +185,8 @@ def main() -> None:
                 fh = open(os.path.join(
                     sample_dir(r["source"]),
                     f'{r["source"]}.flank_scores.log'), "w")
-                fh.write(header + "\n")
-            fh.write("\t".join([
-                str(r["probe_id"]), str(r["doc_id"]),
-                cell(r["f1_score"]), cell(r["f1_rc_score"]),
-                cell(r["f2_score"]), cell(r["f2_rc_score"]),
-                str(float(r["threshold"])), str(int(r["pass"])),
-            ]) + "\n")
+                fh.write(f"probe_set\t{FLANK_TSV_HEADER}\n")
+            fh.write(f'{r["probe_id"]}\t{flank_tsv_row(r)}\n')
     finally:
         if fh is not None:
             fh.close()
@@ -271,12 +207,9 @@ def main() -> None:
             (r["target_id"], r["extracted"], r["count"])
         )
     for sample, counts in by_sample.items():
-        blob = polyfamily_summary_from_counts(counts)
-        if json.loads(blob):
-            with open(os.path.join(
-                    sample_dir(sample),
-                    f"{sample}.polyfamily.json"), "w") as jf:
-                jf.write(blob)
+        with open(os.path.join(
+                sample_dir(sample), f"{sample}.polyfamily.json"), "w") as jf:
+            jf.write(polyfamily_summary_from_counts(counts))
     for sample in samples:
         print(f"sample {sample}: wrote "
               f"{os.path.join(args.output, 'samples', sample)}")

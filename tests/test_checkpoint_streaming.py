@@ -129,6 +129,29 @@ def test_checkpoint_merges_in_partition_id_order(spark, seq_parquet, tmp_path):
         spark.conf.set(key, old)
 
 
+def test_checkpoint_resumes_under_uri_base_dir(spark, seq_parquet, tmp_path):
+    """A URI base dir (file:// here; hdfs:// and s3a:// take the same Hadoop
+    FileSystem check) checkpoints like a plain path: the same state, and a
+    rerun resumes instead of appending another copy of every partition."""
+    df = spark.read.parquet(seq_parquet)
+    factory = lambda: HyperLogLog.empty(12)  # noqa: E731
+    plain, _ = checkpointed_sketch_agg(
+        df, "tokens", factory, str(tmp_path / "plain"), "r", "hll"
+    )
+    ckpt = tmp_path / "uri" / "r" / "hll"
+    written = []
+    for _ in range(2):
+        sk, lineage = checkpointed_sketch_agg(
+            df, "tokens", factory, (tmp_path / "uri").as_uri(), "r", "hll"
+        )
+        assert sk.to_bytes() == plain.to_bytes()
+        assert lineage.count() == df.rdd.getNumPartitions()
+        written.append(sorted(
+            f for f in os.listdir(ckpt) if f.startswith("part-")
+        ))
+    assert written[0] and written[1] == written[0]
+
+
 def test_streaming_screen_matches_batch(spark, seq_parquet, tmp_path):
     from bloomine_spark.operators.screen import screen_hits
     from bloomine_spark.streaming.stream_ops import screen_stream

@@ -134,6 +134,35 @@ def _write_grid_input(spark, tmp_path):
     return path
 
 
+def _expected_grid_log(spark, inp, sample, probes, k=7):
+    """One sample's flank_scores.log cells, recomputed in this session:
+    ``combined_flank_scores`` over the sample's two full single-flank
+    screens per probe, rows ordered by (probe, read)."""
+    from pyspark.sql import functions as F
+
+    from bloomine_spark.operators.cascade import combined_flank_scores
+    from bloomine_spark.operators.screen import prepare_target, screen_scores
+    from bloomine_spark.params import ScreenParams
+
+    params = ScreenParams(k=k)
+    df = spark.read.parquet(inp).filter(F.col("source") == sample)
+    cell = lambda v: "" if v is None else str(int(v))  # noqa: E731
+    rows = []
+    for probe, (f1, f2) in sorted(probes.items()):
+        combined = combined_flank_scores(
+            screen_scores(df, f1, params), screen_scores(df, f2, params),
+            prepare_target(f1, params).mst, prepare_target(f2, params).mst,
+        )
+        for r in combined.orderBy("doc_id").collect():
+            rows.append([
+                probe, r["doc_id"], cell(r["f1_score"]),
+                cell(r["f1_rc_score"]), cell(r["f2_score"]),
+                cell(r["f2_rc_score"]), str(float(r["threshold"])),
+                str(r["pass"]),
+            ])
+    return rows
+
+
 def test_run_grid_cli_per_sample_outputs_and_resume(spark, tmp_path):
     """RunManager surface (run.py:26-61): samples x probes in ONE job —
     per-sample flank_scores.log + polyfamily.json, resumable stages,
@@ -159,6 +188,11 @@ def test_run_grid_cli_per_sample_outputs_and_resume(spark, tmp_path):
             "flank_2_score", "flank_2_RC_score", "threshold", "pass"]
         # exactly this sample's reads, once per (probe, read) score row
         assert {ln.split("\t")[1] for ln in lines[1:]} == reads
+        # every cell equals the merged log of this sample's two full
+        # per-probe screens, in (probe, read) order
+        assert [ln.split("\t") for ln in lines[1:]] == _expected_grid_log(
+            spark, inp, sample, {"probeA": (HEAD, TAIL),
+                                 "probeB": (HEAD_B, TAIL)})
         blob = json.load(open(f"{out}/samples/{sample}/{sample}.polyfamily.json"))
         # per-sample variants must NOT leak across the colliding read ids
         assert blob["probeA"] == [[variant, a_count]]

@@ -301,20 +301,12 @@ def test_oov_token_under_complement_map_raises(bad, n_filler, multi):
 
 
 # ---------------------------------------------------------------------------
-# lint: no package module imports anything unused (``__init__.py`` files
-# hold deliberate re-exports)
+# lint: no package module or job script imports anything unused
+# (``__init__.py`` files hold deliberate re-exports)
 # ---------------------------------------------------------------------------
 
-@pytest.mark.parametrize(
-    "module",
-    sorted(
-        p.relative_to(REPO / "bloomine_spark").as_posix()
-        for p in (REPO / "bloomine_spark").rglob("*.py")
-        if p.name != "__init__.py"
-    ),
-)
-def test_screen_module_imports_are_used(module):
-    tree = ast.parse((REPO / "bloomine_spark" / module).read_text())
+def _unused_imports(path):
+    tree = ast.parse(path.read_text())
     imported = {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
@@ -334,5 +326,25 @@ def test_screen_module_imports_are_used(module):
             part.isidentifier() for part in n.value.split(".")
         ):
             used.add(n.value.split(".")[0])
-    unused = sorted(name for name in imported if name not in used)
+    return sorted(name for name in imported if name not in used)
+
+
+@pytest.mark.parametrize(
+    "module",
+    sorted(
+        p.relative_to(REPO / "bloomine_spark").as_posix()
+        for p in (REPO / "bloomine_spark").rglob("*.py")
+        if p.name != "__init__.py"
+    ),
+)
+def test_screen_module_imports_are_used(module):
+    unused = _unused_imports(REPO / "bloomine_spark" / module)
     assert not unused, f"{module}: unused imports {unused}"
+
+
+@pytest.mark.parametrize(
+    "job", sorted(p.name for p in (REPO / "jobs").glob("*.py"))
+)
+def test_job_imports_are_used(job):
+    unused = _unused_imports(REPO / "jobs" / job)
+    assert not unused, f"jobs/{job}: unused imports {unused}"

@@ -71,16 +71,20 @@ def flank_pair_scores(
     One row per (read keys, probe_id): the best forward and RC score of
     each flank (the per-(read, rc, flank) max of BloomineRunner.py:230-233),
     threshold = max of the two flank thresholds, and pass = 1 iff each
-    flank's best clears its own threshold (a missing flank fails)."""
+    flank's best clears its own threshold (a missing flank fails). The
+    thresholds reach the rows as one small (probe_id, thr1, thr2) table,
+    broadcast-joined after the per-read aggregation."""
     keys = _read_keys(scores)
     parts = F.split(F.col("target_id"), _SEP)
-    thr = F.create_map(*(
-        F.lit(v) for tid, t in sorted(thresholds.items())
-        for v in (tid, float(t))
-    ))
-    thr1, thr2 = (
-        thr[F.concat(F.col("probe_id"), F.lit(f"{_SEP}{f}"))] for f in (1, 2)
+    pids = sorted({tid.split(_SEP)[0] for tid in thresholds})
+    thr = scores.sparkSession.createDataFrame(
+        [
+            (pid, *(float(thresholds[f"{pid}{_SEP}{f}"]) for f in (1, 2)))
+            for pid in pids
+        ],
+        "probe_id string, thr1 double, thr2 double",
     )
+    thr1, thr2 = F.col("thr1"), F.col("thr2")
     return (
         scores.groupBy(*keys, parts.getItem(0).alias("probe_id"))
         .agg(*(  # column f<n>[_rc]_score: max score of flank n, rc side
@@ -90,6 +94,7 @@ def flank_pair_scores(
             )).alias(c)
             for c in _PAIR_COLS
         ))
+        .join(F.broadcast(thr), "probe_id", "left")
         .select(
             *keys, "probe_id", *_PAIR_COLS,
             F.greatest(thr1, thr2).alias("threshold"),

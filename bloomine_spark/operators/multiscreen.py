@@ -50,6 +50,21 @@ def prepare_targets(
     }
 
 
+def _scored_plan(
+    df: DataFrame,
+    ctxs: dict[str, TargetContext],
+    params: ScreenParams,
+    complement_map: np.ndarray | None,
+    tokens_col: str = "tokens",
+    rc_retry: bool = True,
+) -> DataFrame:
+    """The scored multi-target screen over prepared contexts."""
+    return _screen_plan(
+        df, ctxs, params.k, complement_map, tokens_col, mode="scored",
+        rc_retry=rc_retry, keep_tokens=False,
+    )
+
+
 def screen_multi_scores(
     df: DataFrame,
     targets: dict[str, Sequence[int]],
@@ -60,10 +75,7 @@ def screen_multi_scores(
 ) -> DataFrame:
     """Score log for ALL targets from one data pass (scored verify)."""
     ctxs = prepare_targets(targets, params, complement_map)
-    return _screen_plan(
-        df, ctxs, params.k, complement_map, tokens_col, mode="scored",
-        rc_retry=rc_retry, keep_tokens=False,
-    )
+    return _scored_plan(df, ctxs, params, complement_map, tokens_col, rc_retry)
 
 
 def screen_flank_pairs(
@@ -78,10 +90,7 @@ def screen_flank_pairs(
     inputs of ``operators.cascade.flank_pair_scores``. Each flank's
     context is prepared once and serves both."""
     ctxs = prepare_targets(flank_pair_targets(probes), params, complement_map)
-    scores = _screen_plan(
-        df, ctxs, params.k, complement_map, "tokens", mode="scored",
-        rc_retry=True, keep_tokens=False,
-    )
+    scores = _scored_plan(df, ctxs, params, complement_map)
     return scores, {tid: ctx.mst for tid, ctx in ctxs.items()}
 
 
@@ -97,7 +106,10 @@ def polyfamily_onepass(
     work-saving device, and a read passes J1 exactly when both flanks'
     best scores clear their thresholds, J2's intersection), but scans the
     data once for all probes × flanks. Read keys are (source, doc_id)
-    when a source column exists.
+    when a source column exists. Only rows that clear their flank's MST
+    enter J1: a flank passes iff one of its rows does, and its best is
+    then the best passing row, so W1 is unchanged by the filter.
     """
     scores, thresholds = screen_flank_pairs(df, probes, params, complement_map)
-    return best_flank_pairs(flank_pair_scores(scores, thresholds))
+    return best_flank_pairs(
+        flank_pair_scores(scores.filter("sp_pass"), thresholds))

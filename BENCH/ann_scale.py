@@ -173,8 +173,7 @@ def main():
 
     from bloomine_spark.session import get_spark
 
-    spark = get_spark(master="local[16]", shuffle_partitions=32,
-                      app_name="ann-scale",
+    spark = get_spark(shuffle_partitions=32, app_name="ann-scale",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     tmp_dir = tempfile.mkdtemp(prefix="bm_ann_scale_")

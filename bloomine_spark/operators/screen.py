@@ -16,7 +16,9 @@ shipped via a Spark broadcast, exactly as the reference shares its filter by
 const-ref across threads (/root/reference/src/BlooMineUtils.cpp:262-264).
 Everything inside the kernel is vectorized numpy over Arrow batches — no
 per-row Python in the FP hot path; only post-prescreen survivors (a tiny
-fraction) see per-row scoring.
+fraction) see per-row scoring. Like the reference's loop, which decodes and
+screens each read in one place, a screen of the FASTQ reader's own
+DataFrame decodes and screens in one Python pass.
 
 Window tables: over a small alphabet (DNA: 5 tokens, 5^7 = 78 125 possible
 7-grams) every window is first turned into a base-V integer code, and each
@@ -39,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bloomine_spark.functions.arrowmap import map_in_arrow
 from bloomine_spark.functions.hashing import code_kgram_hashes
 from bloomine_spark.functions.kgrams import (
     FlatWindows,
@@ -503,7 +506,12 @@ def _screen_plan(
     """The one screen plan: a ``mapInArrow`` of ``make_screen_kernel`` over
     ``df`` with the targets ``ctxs`` broadcast. Columns: passthrough cols +
     (``id_col``, rc, fp_hits, score, threshold, sp_pass) + the tokens
-    column when ``keep_tokens``."""
+    column when ``keep_tokens``.
+
+    Handed the FASTQ reader's own uncached DataFrame, the screen kernel
+    runs inside the reader's pass (``functions.arrowmap.map_in_arrow``):
+    decoded whole-file batches go straight into the screen and only
+    FP-surviving rows reach the JVM."""
     ctx_bc = df.sparkSession.sparkContext.broadcast(ctxs)
     fields = [f for f in df.schema.fields if f.name != tokens_col]
     passthrough = [f.name for f in fields]
@@ -521,7 +529,7 @@ def _screen_plan(
         ctx_bc, tokens_col, passthrough, k, complement_map, mode, rc_retry,
         keep_tokens, id_col,
     )
-    return df.mapInArrow(kernel, schema=T.StructType(fields))
+    return map_in_arrow(df, kernel, T.StructType(fields))
 
 
 def screen_scores(

@@ -19,7 +19,9 @@ Spark-first version:
   Arrow ListArray from a cumsum of lengths — no per-read numpy objects,
   no pandas assembly. Output is the engine's canonical sequences schema
   ``(doc_id, tokens, n_tok, source, mate)``; everything downstream
-  (screen, cascade, grid) consumes it unchanged.
+  (screen, cascade, grid) consumes it unchanged. The kernel runs through
+  ``functions.arrowmap.map_in_arrow``, so a screen handed the reader's own
+  uncached DataFrame decodes and screens each file in one Python pass.
 * sample naming / read pairing (S6): ``source`` is the file stem with
   ``.fastq/.fq/.fasta/.fa[.gz]`` and a trailing ``_R1/_R2/_1/_2`` mate
   suffix stripped; the mate number is kept as its own column.
@@ -44,6 +46,8 @@ from typing import Iterator
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from bloomine_spark.functions.arrowmap import map_in_arrow
 
 # base -> token lookup (uppercase + lowercase), unknown/N -> 4
 _BASE_TABLE = np.full(256, 4, dtype=np.int32)
@@ -313,7 +317,7 @@ def read_sequence_files(
                 yield pd.DataFrame(rows)
 
     if fmt == "fastq":
-        return files.mapInArrow(fastq_kernel, schema=schema)
+        return map_in_arrow(files, fastq_kernel, schema)
     return files.mapInPandas(fasta_kernel, schema=schema)
 
 

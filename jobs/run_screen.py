@@ -77,7 +77,7 @@ def main() -> None:
     complement_map = None
     if args.format == "parquet":
         target = [int(t) for t in args.target.split(",")]
-        df = spark.read.parquet(args.input)
+        df = reads = spark.read.parquet(args.input)
     else:
         import os
 
@@ -95,10 +95,11 @@ def main() -> None:
             target = tokenize_bases(args.target).tolist()
         else:
             target = [int(t) for t in args.target.split(",")]
-        df = read_sequence_files(
+        reads = read_sequence_files(
             spark, args.input, fmt=args.format,
             keep_quality=args.hits_fastq,
-        ).drop("mate")
+        )
+        df = reads.drop("mate")
     if args.flank2:
         from bloomine_spark.sources.stages import resumable_cascade
 
@@ -130,9 +131,13 @@ def main() -> None:
             write_flank_scores_tsv(combined, args.tsv)
             print(f"combined flank-scores TSV: {args.tsv}")
     else:
-        scores = screen_scores(df, target, params, mode=args.mode,
+        # the reader's own frame: decode and screen run as one Python pass
+        scores = screen_scores(reads, target, params, mode=args.mode,
                                complement_map=complement_map,
-                               keep_tokens=args.hits_fastq).cache()
+                               keep_tokens=args.hits_fastq)
+        if args.format != "parquet":
+            scores = scores.drop("mate")
+        scores = scores.cache()
         scores.write.mode("overwrite").parquet(f"{args.output}/scores")
         scores.filter(F.col("sp_pass")).write.mode("overwrite").parquet(
             f"{args.output}/hits"

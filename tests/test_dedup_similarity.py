@@ -525,10 +525,15 @@ def test_dedup_candidate_growth_gates(tmp_path):
     import sys as _sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # a 3 GB driver heap, not the 8 GB default: next to the test session's
+    # own JVM two 8 GB heaps overcommit a 16 GB host. At base 800 the run
+    # grows into the heap it is given (8 GB: 7.5 GB used, 9.3 GB JVM RSS;
+    # 3 GB: 2.8 GB used, 3.8 GB RSS) and still passes with 2 GB
     r = subprocess.run(
         [_sys.executable, os.path.join(repo, "BENCH", "dedup_scale.py"),
          "800", "--no-report"],
         capture_output=True, text=True, timeout=540,
+        env={**os.environ, "SPARK_DRIVER_MEM": "3g"},
     )
     assert r.returncode == 0, r.stderr[-2000:]
     d = _json.loads(r.stdout.strip().splitlines()[-1])

@@ -103,6 +103,113 @@ def test_screen_planted_target_from_fastq_files(spark, fastq_dir):
     assert bool(rc_row["rc"].iloc[0])
 
 
+TARGET2 = "TTGACCAGGCATCGATCCGAGTCAAG"
+
+
+@pytest.fixture()
+def packed_fastq_dir(spark, tmp_path):
+    """Three FASTQ files of uneven size scanned as ONE partition (so a
+    batch of the cached reader mixes files): random 70-base reads with
+    the targets planted forward, reverse complemented and with one
+    substitution. At k=4 the small file alone is below the window-table
+    size (hash path) and the others above it (table path)."""
+    from bloomine_spark.operators.screen import window_radix
+
+    rng = np.random.default_rng(3)
+
+    def read(i, plant=""):
+        seq = "".join(rng.choice(list("ACGT"), 70 - len(plant)))
+        return f"r{i}", seq[:17] + plant + seq[17:]
+
+    mutant = TARGET[:10] + ("A" if TARGET[10] != "A" else "C") + TARGET[11:]
+    plants = [TARGET, _revcomp(TARGET), mutant, TARGET2, _revcomp(TARGET2)]
+    files = {
+        "small_R1.fastq": [read(i, plants[i]) for i in range(3)],
+        "mid_R1.fastq.gz": [read(i, plants[i % 5] if i % 4 == 0 else "")
+                            for i in range(30)],
+        "big_R1.fastq": [read(i, plants[i % 5] if i % 3 == 0 else "")
+                         for i in range(60)],
+    }
+    d = tmp_path / "packed"
+    d.mkdir()
+    for name, reads in files.items():
+        data = _fastq_bytes(reads)
+        (d / name).write_bytes(gzip.compress(data) if name.endswith(".gz")
+                               else data)
+    radix = {
+        name: window_radix(tokenize_bases("".join(s for _, s in reads)), 4,
+                           DNA_COMPLEMENT_MAP)
+        for name, reads in files.items()
+    }
+    assert radix == {"small_R1.fastq": None, "mid_R1.fastq.gz": 5,
+                     "big_R1.fastq": 5}
+    keys = ("spark.sql.files.openCostInBytes",
+            "spark.sql.files.minPartitionNum")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    spark.conf.set(keys[0], "1")
+    spark.conf.set(keys[1], "1")
+    try:
+        yield str(d)
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize(
+    "case", ["scored", "exact", "tokens_and_quality", "multi_target"]
+)
+def test_screen_of_uncached_reader_matches_cached_reader(
+    spark, packed_fastq_dir, case
+):
+    """Handed the reader's own DataFrame, the screen decodes and screens
+    each file in one Python pass (whole-file batches); handed a cached
+    reader, it screens the cache's batches. Both give the same rows and
+    schema, on the hash and the window-table path."""
+    from bloomine_spark.operators.multiscreen import screen_multi_scores
+    from bloomine_spark.operators.screen import screen_scores
+    from bloomine_spark.params import ScreenParams
+    from bloomine_spark.plans.audit import plan_facts
+
+    params = ScreenParams(k=4)
+    keep_quality = case == "tokens_and_quality"
+
+    def screen(reads):
+        if case == "multi_target":
+            return screen_multi_scores(
+                reads, {"t1": tokenize_bases(TARGET).tolist(),
+                        "t2": tokenize_bases(TARGET2).tolist()},
+                params, complement_map=DNA_COMPLEMENT_MAP,
+            )
+        return screen_scores(
+            reads, tokenize_bases(TARGET).tolist(), params,
+            mode="exact" if case == "exact" else "scored",
+            keep_tokens=keep_quality, complement_map=DNA_COMPLEMENT_MAP,
+        )
+
+    def reader():
+        return read_fastq(spark, packed_fastq_dir + "/*",
+                          keep_quality=keep_quality)
+
+    reads = reader()
+    assert reads.rdd.getNumPartitions() == 1
+    cached = reader().cache()
+    try:
+        one_pass, two_pass = screen(reads), screen(cached)
+        got, want = one_pass.collect(), two_pass.collect()
+        # planned while the cache exists: the one-pass plan still decodes
+        assert "InMemoryRelation" not in plan_facts(one_pass).text
+    finally:
+        cached.unpersist()
+    assert one_pass.schema == two_pass.schema
+    assert sorted(got) == sorted(want)
+    assert {r["sp_pass"] for r in got} == {True, False}
+    if case == "multi_target":
+        assert {r["target_id"] for r in got if r["sp_pass"]} == {"t1", "t2"}
+
+
 def test_fasta_targets_and_distributed_fasta(spark, tmp_path):
     fa = tmp_path / "targets.fasta"
     fa.write_bytes(

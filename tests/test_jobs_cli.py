@@ -244,6 +244,15 @@ def test_run_screen_cli_fastq_format(spark, tmp_path):
     hits = spark.read.parquet(f"{out}/hits").toPandas()
     assert sorted(hits["doc_id"]) == ["r0", "r1"]
     assert set(hits["source"]) == {"samp"}
+    # the score log carries no mate column (screened off the reader's own
+    # frame, ``mate`` dropped from the log)
+    log_schema = (
+        "struct<doc_id:string,n_tok:int,source:string,rc:boolean,"
+        "fp_hits:int,score:bigint,threshold:double,sp_pass:boolean>"
+    )
+    for name in ("scores", "hits"):
+        got = spark.read.parquet(f"{out}/{name}").schema.simpleString()
+        assert got == log_schema
 
 
 def test_run_grid_cli_fastq_and_fasta_probes(spark, tmp_path):
@@ -400,6 +409,11 @@ def test_run_screen_cli_hits_fastq_sink(spark, tmp_path):
     assert lines[1] == reads[0][1]          # bases round-tripped
     assert lines[3] == quals["r0"]          # ORIGINAL quality preserved
     assert len(lines) == 4                  # the miss did not leak
+    assert spark.read.parquet(f"{out}/scores").schema.simpleString() == (
+        "struct<doc_id:string,n_tok:int,source:string,qual:string,"
+        "rc:boolean,fp_hits:int,score:bigint,threshold:double,"
+        "sp_pass:boolean,tokens:array<int>>"
+    )
 
 
 def test_spark_submit_py_files_launch(spark, tmp_path):

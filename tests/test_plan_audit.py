@@ -216,7 +216,13 @@ def test_bucketed_hydration_join_has_zero_exchanges(spark, tmp_path):
 def test_fastq_screen_is_shuffle_free(spark, tmp_path):
     """The raw-file read path keeps the screen's zero-exchange property:
     binaryFile scan → Arrow parse/tokenize → screen kernel, no Exchange
-    anywhere (the 100 TB corpus never shuffles to be screened)."""
+    anywhere (the 100 TB corpus never shuffles to be screened).
+
+    Handed the reader's own uncached DataFrame, the screen runs the
+    reader's decode kernel and its own as ONE Python map. A cached reader
+    is read from the cache (one map above ``InMemoryTableScan``, the files
+    are not decoded again), and a ``drop`` in between keeps the two-map
+    plan."""
     import gzip
 
     from bloomine_spark.operators.screen import screen_scores
@@ -231,14 +237,32 @@ def test_fastq_screen_is_shuffle_free(spark, tmp_path):
     body = f"@r0\nTTGGA{t}CCAAT\nplus\nquals\n".replace("plus", "+")
     (tmp_path / "p.fastq.gz").write_bytes(gzip.compress(
         body.replace("quals", "I" * (len(t) + 10)).encode()))
-    q = screen_scores(
-        read_fastq(spark, str(tmp_path) + "/*").drop("mate"),
-        tokenize_bases(t).tolist(), ScreenParams(k=7),
-        complement_map=DNA_COMPLEMENT_MAP,
-    )
-    assert_max_exchanges(q, 0)
-    facts = plan_facts(q)
-    assert facts.has_python_eval
+
+    def screen(reads):
+        return screen_scores(
+            reads, tokenize_bases(t).tolist(), ScreenParams(k=7),
+            complement_map=DNA_COMPLEMENT_MAP,
+        )
+
+    def check(q, maps, from_cache):
+        assert_max_exchanges(q, 0)
+        facts = plan_facts(q)
+        # the plan above the cache (the whole plan when none is read)
+        above = facts.text.split("InMemoryRelation")[0]
+        assert above.count("MapInArrow") == maps, facts.text
+        assert ("InMemoryTableScan" in above) == from_cache, facts.text
+        assert ("binaryFile" in above) != from_cache, facts.text
+
+    # planned before any cache exists: Spark would read a cached reader
+    # for every plan that contains the reader's plan
+    reads = read_fastq(spark, str(tmp_path) + "/*")
+    check(screen(reads), 1, False)
+    check(screen(reads.drop("mate")), 2, False)
+    cached = read_fastq(spark, str(tmp_path) + "/*").cache()
+    try:
+        check(screen(cached), 1, True)
+    finally:
+        cached.unpersist()
 
 
 def test_cc_star_rounds_plan(spark):

@@ -342,17 +342,3 @@ def distinct_per_row(row_ids: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     mask = np.zeros(n, dtype=bool)
     mask[order] = first
     return mask
-
-
-def paint_coverage(
-    starts: np.ndarray, k: int, row_len: int
-) -> np.ndarray:
-    """Boolean coverage mask: position covered iff inside any [s, s+k) window.
-
-    Vectorized interval painting via a difference array — the analog of the
-    reference's zero-array stamping (/root/reference/src/FQread.hpp:229-241).
-    """
-    delta = np.zeros(row_len + 1, dtype=np.int64)
-    np.add.at(delta, starts, 1)
-    np.add.at(delta, starts + k, -1)
-    return np.cumsum(delta[:row_len]) > 0

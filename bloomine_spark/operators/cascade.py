@@ -28,7 +28,7 @@ from bloomine_spark.functions.kgrams import (
     KgramIndex,
     exact_matches,
 )
-from bloomine_spark.operators.screen import screen_scores
+from bloomine_spark.operators.screen import prepare_target, screen_scores
 from bloomine_spark.params import ScreenParams
 
 # ---------------------------------------------------------------------------
@@ -513,11 +513,9 @@ def polyfamily_run(
     per_probe = None
     for tid, (f1, f2) in sorted(targets.items()):
         hits, s1, s2 = cascade(df, f1, f2, params, keep_tokens=False)
-        n1 = len(set(map(tuple, _kgram_tuples(f1, params.k))))
-        n2 = len(set(map(tuple, _kgram_tuples(f2, params.k))))
         combined = flank_intersection(
             s1.filter(F.col("sp_pass")), s2.filter(F.col("sp_pass")),
-            params.mst(n1), params.mst(n2),
+            prepare_target(f1, params).mst, prepare_target(f2, params).mst,
         ).select(
             "doc_id",
             F.lit(tid).alias("target_id"),
@@ -527,11 +525,6 @@ def polyfamily_run(
         s1.unpersist()
         s2.unpersist()
     return choose_best_probes(per_probe)
-
-
-def _kgram_tuples(tokens, k):
-    arr = list(tokens)
-    return [tuple(arr[i : i + k]) for i in range(len(arr) - k + 1)]
 
 
 def choose_best_probes(per_probe_scores: DataFrame) -> DataFrame:

@@ -8,10 +8,17 @@ extensions a training-data ingest pipeline needs:
    readStream unchanged — one code path for batch and streaming).
  * ``hits_per_window_stream`` — watermarked tumbling-window hit counts with
    late-data handling.
- * ``hll_distinct_by_key_stream`` — a CUSTOM STATEFUL operator via
-   ``applyInPandasWithState``: per-key HyperLogLog state merged across
-   triggers, emitting the running distinct estimate (the streaming form of
-   the mergeable-sketch UDAF).
+ * five CUSTOM STATEFUL monitors via ``applyInPandasWithState``, all
+   driven by ONE function, ``_keyed_state_stream``, that owns the
+   ``GroupState`` protocol (load, update, idle-TTL eviction, timeout
+   re-arm) around a pure per-key fold:
+   ``hll_distinct_by_key_stream`` (running distinct estimate),
+   ``heavy_hitters_by_key_stream`` (Misra–Gries top-k) and
+   ``f2_by_key_stream`` (Count-Sketch second moment) share one sketch
+   fold, ``_sketch_by_key_stream`` — the streaming form of the
+   mergeable-sketch UDAF; ``lsh_dedup_stream`` (MinHash-LSH buckets) and
+   ``priority_sample_by_key_stream`` (top-(k+1) priority sample) fold
+   their own state.
  * ``sessions_stream`` — gap-based session windows per key via the native
    ``session_window`` aggregation (the streaming twin of the batch
    gaps-and-islands ``events_sessionize`` query).
@@ -29,6 +36,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from bloomine_spark.params import ScreenParams
+from bloomine_spark.sketch.core import _values_of
 
 
 def screen_stream(
@@ -228,18 +236,111 @@ def idempotent_parquet_batch_writer(path: str):
     return write
 
 
+def _keyed_state_stream(
+    grouped,
+    fold,
+    out_schema: T.StructType,
+    state_schema: T.StructType,
+    idle_ttl_ms: int | None = None,
+    evicted=None,
+    output_mode: str = "update",
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` driver of the stateful monitors.
+
+    A monitor is a pure fold ``fold(key, pdfs, old) -> (new_state,
+    frames)``: ``old`` is the key's stored state tuple (``None`` when the
+    key has none) and ``frames`` the pandas frames to emit. This function
+    owns the ``GroupState`` protocol around it: the timeout mode
+    (processing time when ``idle_ttl_ms`` is set, none otherwise), storing
+    the new state, and re-arming the idle timeout after every fold. A key
+    that receives no data for ``idle_ttl_ms`` loses its state and emits
+    ``evicted(key, old)`` when the monitor gives one; its next data folds
+    from ``None`` again.
+    """
+
+    def fn(
+        key: tuple,
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            old = state.get
+            state.remove()
+            if evicted is not None:
+                yield evicted(key, old)
+            return
+        new, frames = fold(key, pdfs, state.getOption)
+        state.update(new)
+        if idle_ttl_ms is not None:
+            state.setTimeoutDuration(int(idle_ttl_ms))
+        yield from frames
+
+    return grouped.applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=output_mode,
+        timeoutConf=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if idle_ttl_ms is not None
+            else GroupStateTimeout.NoTimeout
+        ),
+    )
+
+
+_SKETCH_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("state", T.BinaryType()),
+        T.StructField("n_rows", T.LongType()),
+    ]
+)
+
+
+def _sketch_by_key_stream(
+    stream_df: DataFrame,
+    key_col: str,
+    value_col: str,
+    factory,
+    emit,
+    out_schema: T.StructType,
+    idle_ttl_ms: int | None = None,
+) -> DataFrame:
+    """A mergeable sketch per key, kept across triggers: the state is
+    (serialized sketch, rows seen), each trigger folds the key's new
+    Arrow batches in with ``update_values`` — the batch UDAF's update,
+    lifted to streaming state — and emits ``emit(key, sketch, n_rows)``,
+    as does the eviction of an idle key. ``factory`` is ``sketch_agg``'s
+    zero-argument constructor of an empty sketch."""
+    cls = type(factory())
+
+    def load(old):
+        if old is None:
+            return factory(), 0
+        blob, n_rows = old
+        return cls.from_bytes(bytes(blob)), n_rows
+
+    def fold(key, pdfs, old):
+        sk, n_rows = load(old)
+        for pdf in pdfs:
+            sk.update_values(_values_of(pdf[value_col]))
+            n_rows += len(pdf)
+        return (sk.to_bytes(), n_rows), [emit(key, sk, n_rows)]
+
+    return _keyed_state_stream(
+        stream_df.groupBy(key_col),
+        fold,
+        out_schema,
+        _SKETCH_STATE_SCHEMA,
+        idle_ttl_ms,
+        evicted=lambda key, old: emit(key, *load(old)),
+    )
+
+
 _HLL_OUT_SCHEMA = T.StructType(
     [
         T.StructField("source", T.StringType()),
         T.StructField("est_distinct", T.DoubleType()),
         T.StructField("n_rows_seen", T.LongType()),
-    ]
-)
-
-_HLL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("state", T.BinaryType()),
-        T.StructField("n_rows", T.LongType()),
     ]
 )
 
@@ -266,43 +367,10 @@ def hll_distinct_by_key_stream(
     bounded state makes; keep the default ``None`` for exact
     running-forever semantics on bounded key sets).
     """
+    from bloomine_spark.sketch.hll import HyperLogLog
 
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        from bloomine_spark.sketch.core import _values_of
-        from bloomine_spark.sketch.hll import HyperLogLog
-
-        if idle_ttl_ms is not None and state.hasTimedOut:
-            # idle eviction: re-emit the final estimate, drop the state
-            blob, n_rows = state.get
-            hll = HyperLogLog.from_bytes(bytes(blob))
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "source": [key[0]],
-                    "est_distinct": [hll.estimate()],
-                    "n_rows_seen": [n_rows],
-                }
-            )
-            return
-        if state.exists:
-            blob, n_rows = state.get
-            hll = HyperLogLog.from_bytes(bytes(blob))
-        else:
-            hll = HyperLogLog.empty(b)
-            n_rows = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            hll.update_values(_values_of(pdf[value_col]))
-            n_rows += len(pdf)
-        state.update((hll.to_bytes(), n_rows))
-        if idle_ttl_ms is not None:
-            state.setTimeoutDuration(int(idle_ttl_ms))
-        yield pd.DataFrame(
+    def emit(key, hll, n_rows):
+        return pd.DataFrame(
             {
                 "source": [key[0]],
                 "est_distinct": [hll.estimate()],
@@ -310,16 +378,9 @@ def hll_distinct_by_key_stream(
             }
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=_HLL_OUT_SCHEMA,
-        stateStructType=_HLL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _sketch_by_key_stream(
+        stream_df, key_col, value_col, lambda: HyperLogLog.empty(b), emit,
+        _HLL_OUT_SCHEMA, idle_ttl_ms,
     )
 
 
@@ -329,13 +390,6 @@ _MG_OUT_SCHEMA = T.StructType(
         T.StructField("item", T.LongType()),
         T.StructField("est_count", T.LongType()),
         T.StructField("n_rows_seen", T.LongType()),
-    ]
-)
-
-_MG_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("state", T.BinaryType()),
-        T.StructField("n_rows", T.LongType()),
     ]
 )
 
@@ -356,29 +410,11 @@ def heavy_hitters_by_key_stream(
     err ≤ n/m). The ingest-monitoring shape: "what tokens dominate each
     source RIGHT NOW" over an unbounded stream with bounded state.
     """
+    from bloomine_spark.sketch.mg import MisraGries
 
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        from bloomine_spark.sketch.core import _values_of
-        from bloomine_spark.sketch.mg import MisraGries
-
-        if state.exists:
-            blob, n_rows = state.get
-            mg = MisraGries.from_bytes(bytes(blob))
-        else:
-            mg = MisraGries(m)
-            n_rows = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            mg.update_values(_values_of(pdf[value_col]))
-            n_rows += len(pdf)
-        state.update((mg.to_bytes(), n_rows))
+    def emit(key, mg, n_rows):
         top = mg.top_k(k)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "source": [key[0]] * len(top),
                 "item": [int(i) for i, _ in top],
@@ -387,12 +423,9 @@ def heavy_hitters_by_key_stream(
             }
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=_MG_OUT_SCHEMA,
-        stateStructType=_MG_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _sketch_by_key_stream(
+        stream_df, key_col, value_col, lambda: MisraGries(m), emit,
+        _MG_OUT_SCHEMA,
     )
 
 
@@ -401,13 +434,6 @@ _F2_OUT_SCHEMA = T.StructType(
         T.StructField("source", T.StringType()),
         T.StructField("f2_est", T.LongType()),
         T.StructField("n_rows_seen", T.LongType()),
-    ]
-)
-
-_F2_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("state", T.BinaryType()),
-        T.StructField("n_rows", T.LongType()),
     ]
 )
 
@@ -434,56 +460,21 @@ def f2_by_key_stream(
     is exactly the batch update. ``idle_ttl_ms`` evicts idle keys like
     the HLL monitor (final estimate re-emitted, fresh sketch on return).
     """
+    from bloomine_spark.sketch.countsketch import CountSketch
 
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        from bloomine_spark.sketch.core import _values_of
-        from bloomine_spark.sketch.countsketch import CountSketch
+    def emit(key, sk, n_rows):
+        return pd.DataFrame(
+            {
+                "source": [key[0]],
+                "f2_est": [sk.f2_estimate()],
+                "n_rows_seen": [n_rows],
+            }
+        )
 
-        def emit(sk, n_rows):
-            return pd.DataFrame(
-                {
-                    "source": [key[0]],
-                    "f2_est": [sk.f2_estimate()],
-                    "n_rows_seen": [n_rows],
-                }
-            )
-
-        if idle_ttl_ms is not None and state.hasTimedOut:
-            blob, n_rows = state.get
-            sk = CountSketch.from_bytes(bytes(blob))
-            state.remove()
-            yield emit(sk, n_rows)
-            return
-        if state.exists:
-            blob, n_rows = state.get
-            sk = CountSketch.from_bytes(bytes(blob))
-        else:
-            sk = CountSketch.empty(epsilon, delta)
-            n_rows = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            sk.update_values(_values_of(pdf[value_col]))
-            n_rows += len(pdf)
-        state.update((sk.to_bytes(), n_rows))
-        if idle_ttl_ms is not None:
-            state.setTimeoutDuration(int(idle_ttl_ms))
-        yield emit(sk, n_rows)
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=_F2_OUT_SCHEMA,
-        stateStructType=_F2_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _sketch_by_key_stream(
+        stream_df, key_col, value_col,
+        lambda: CountSketch.empty(epsilon, delta), emit,
+        _F2_OUT_SCHEMA, idle_ttl_ms,
     )
 
 
@@ -547,20 +538,11 @@ def lsh_dedup_stream(
         _band_buckets_col(bands, r),
     ).select("bb.band", "bb.bucket", "doc_id", "signature")
 
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if idle_ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ids_b, sigs_b = state.get
-            ids = list(ids_b)
-            sigs = [np.frombuffer(bytes(s), dtype=np.int64) for s in sigs_b]
-        else:
-            ids, sigs = [], []
+    def fold(key, pdfs, old):
+        ids, sigs = [], []
+        if old is not None:
+            ids = list(old[0])
+            sigs = [np.frombuffer(bytes(s), dtype=np.int64) for s in old[1]]
         out_a, out_b, out_j = [], [], []
         for pdf in pdfs:
             for did, sig_arr in zip(pdf["doc_id"], pdf["signature"]):
@@ -579,26 +561,18 @@ def lsh_dedup_stream(
                 if did not in ids and len(ids) < max_bucket:
                     ids.append(did)
                     sigs.append(v)
-        state.update(
-            (ids, [s.tobytes() for s in sigs])
-        )
-        if idle_ttl_ms is not None:
-            state.setTimeoutDuration(int(idle_ttl_ms))
-        if out_a:
-            yield pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b, "est_jaccard": out_j}
-            )
+        frames = [
+            pd.DataFrame({"id_a": out_a, "id_b": out_b, "est_jaccard": out_j})
+        ] if out_a else []
+        return (ids, [s.tobytes() for s in sigs]), frames
 
-    return banded.groupBy("band", "bucket").applyInPandasWithState(
-        fn,
-        outputStructType=_LSH_OUT_SCHEMA,
-        stateStructType=_LSH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _keyed_state_stream(
+        banded.groupBy("band", "bucket"),
+        fold,
+        _LSH_OUT_SCHEMA,
+        _LSH_STATE_SCHEMA,
+        idle_ttl_ms,
+        output_mode="append",
     )
 
 
@@ -650,22 +624,12 @@ def priority_sample_by_key_stream(
         )
         return float(weight) / ((h + 1) / 4294967296.0)
 
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if idle_ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            keys_b, weights_b, prios_b = state.get
+    def fold(key, pdfs, old):
+        rows = {}
+        if old is not None:
             rows = {
-                int(kk): (int(w), float(p))
-                for kk, w, p in zip(keys_b, weights_b, prios_b)
+                int(kk): (int(w), float(p)) for kk, w, p in zip(*old)
             }
-        else:
-            rows = {}
         for pdf in pdfs:
             for kk, w in zip(pdf[key_col], pdf[weight_col]):
                 kk, w = int(kk), int(w)
@@ -675,40 +639,34 @@ def priority_sample_by_key_stream(
         ordered = sorted(
             rows.items(), key=lambda it: (-it[1][1], it[0])
         )[: k + 1]
-        state.update(
-            (
-                [kk for kk, _ in ordered],
-                [w for _, (w, _) in ordered],
-                [p for _, (_, p) in ordered],
-            )
-        )
-        if idle_ttl_ms is not None:
-            state.setTimeoutDuration(int(idle_ttl_ms))
         tau = ordered[k][1][1] if len(ordered) > k else 0.0
         sample = ordered[:k]
-        yield pd.DataFrame(
-            {
-                "group": [str(key[0])] * len(sample),
-                "key": [kk for kk, _ in sample],
-                "weight": [w for _, (w, _) in sample],
-                "priority": [p for _, (_, p) in sample],
-                "rank": list(range(1, len(sample) + 1)),
-                "est_weight": [
-                    max(float(w), tau) for _, (w, _) in sample
-                ],
-            }
+        new = (
+            [kk for kk, _ in ordered],
+            [w for _, (w, _) in ordered],
+            [p for _, (_, p) in ordered],
         )
+        return new, [
+            pd.DataFrame(
+                {
+                    "group": [str(key[0])] * len(sample),
+                    "key": [kk for kk, _ in sample],
+                    "weight": [w for _, (w, _) in sample],
+                    "priority": [p for _, (_, p) in sample],
+                    "rank": list(range(1, len(sample) + 1)),
+                    "est_weight": [
+                        max(float(w), tau) for _, (w, _) in sample
+                    ],
+                }
+            )
+        ]
 
-    return stream_df.groupBy(group_col).applyInPandasWithState(
-        fn,
-        outputStructType=_PRIO_OUT_SCHEMA,
-        stateStructType=_PRIO_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _keyed_state_stream(
+        stream_df.groupBy(group_col),
+        fold,
+        _PRIO_OUT_SCHEMA,
+        _PRIO_STATE_SCHEMA,
+        idle_ttl_ms,
     )
 
 

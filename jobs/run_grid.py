@@ -113,7 +113,7 @@ def main() -> None:
         )
 
         complement_map = DNA_COMPLEMENT_MAP
-        df = read_fastq(spark, args.input).drop("mate")
+        df = read_fastq(spark, args.input)
     else:
         df = spark.read.parquet(args.input)
     # the RC vocabulary changes screen/extract results, so it must
@@ -127,10 +127,12 @@ def main() -> None:
         df = df.filter(F.col("source").isin(args.samples.split(",")))
 
     # ---- stage 1: ONE scan screens every sample x probe x flank ----------
+    # the reader's own frame: decode and screen run as one Python pass; the
+    # FASTQ reader's mate column is dropped from the stages after the screen
     screened, thresholds = screen_flank_pairs(df, targets, params,
                                               complement_map)
     scores = runner.stage(
-        "multi_scores", lambda: screened,
+        "multi_scores", lambda: screened.drop("mate"),
         manifest=dict(manifest, stage="multi_scores"),
     )
     # the RunManager merged log (run.py:139-177): J1 per (sample, read, probe)
@@ -148,7 +150,7 @@ def main() -> None:
     # target to another sample's read
     hits = runner.stage(
         "hits",
-        lambda: df.join(
+        lambda: df.drop("mate").join(
             assigned.select("source", "doc_id", "target_id"),
             ["source", "doc_id"],
         ),

@@ -9,7 +9,7 @@ scan-per-probe loop).
         --targets '{"probeA": [[1,2,3],[7,8,9]], "probeB": [[4,5],[7,8,9]]}' \
         --output /path/out [--min-kmer 11]
 
-Writes <output>/assignments/ parquet (doc_id, target_id, total_score) and
+Writes <output>/assignments/ parquet (source, doc_id, target_id, total_score) and
 <output>/polyfamily.json ({probe: [[variant, count], ...]}).
 """
 
@@ -74,7 +74,9 @@ def main() -> None:
         )
 
         complement_map = DNA_COMPLEMENT_MAP
-        df = read_fastq(spark, args.input).drop("mate")
+        # the reader's own frame: decode and screen run as one Python pass
+        # (the assignments carry only read keys, so no mate column)
+        df = read_fastq(spark, args.input)
     else:
         df = spark.read.parquet(args.input)
     if "source" not in df.columns:

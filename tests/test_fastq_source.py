@@ -159,7 +159,9 @@ def packed_fastq_dir(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "case", ["scored", "exact", "tokens_and_quality", "multi_target"]
+    "case",
+    ["scored", "exact", "tokens_and_quality", "multi_target",
+     "polyfamily_onepass"],
 )
 def test_screen_of_uncached_reader_matches_cached_reader(
     spark, packed_fastq_dir, case
@@ -168,7 +170,10 @@ def test_screen_of_uncached_reader_matches_cached_reader(
     each file in one Python pass (whole-file batches); handed a cached
     reader, it screens the cache's batches. Both give the same rows and
     schema, on the hash and the window-table path."""
-    from bloomine_spark.operators.multiscreen import screen_multi_scores
+    from bloomine_spark.operators.multiscreen import (
+        polyfamily_onepass,
+        screen_multi_scores,
+    )
     from bloomine_spark.operators.screen import screen_scores
     from bloomine_spark.params import ScreenParams
     from bloomine_spark.plans.audit import plan_facts
@@ -177,6 +182,15 @@ def test_screen_of_uncached_reader_matches_cached_reader(
     keep_quality = case == "tokens_and_quality"
 
     def screen(reads):
+        if case == "polyfamily_onepass":
+            probes = {
+                "pA": (tokenize_bases(TARGET[:12]).tolist(),
+                       tokenize_bases(TARGET[-12:]).tolist()),
+                "pB": (tokenize_bases(TARGET2[:13]).tolist(),
+                       tokenize_bases(TARGET2[13:]).tolist()),
+            }
+            return polyfamily_onepass(reads, probes, params,
+                                      complement_map=DNA_COMPLEMENT_MAP)
         if case == "multi_target":
             return screen_multi_scores(
                 reads, {"t1": tokenize_bases(TARGET).tolist(),
@@ -205,6 +219,9 @@ def test_screen_of_uncached_reader_matches_cached_reader(
         cached.unpersist()
     assert one_pass.schema == two_pass.schema
     assert sorted(got) == sorted(want)
+    if case == "polyfamily_onepass":
+        assert {r["target_id"] for r in got} == {"pA", "pB"}
+        return
     assert {r["sp_pass"] for r in got} == {True, False}
     if case == "multi_target":
         assert {r["target_id"] for r in got if r["sp_pass"]} == {"t1", "t2"}

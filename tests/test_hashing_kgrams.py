@@ -11,7 +11,6 @@ from bloomine_spark.functions.kgrams import (
     distinct_per_row,
     flatten_token_series,
     kgram_index,
-    paint_coverage,
 )
 
 
@@ -71,12 +70,6 @@ def test_unique_kgram_hashes_period4_fixture():
     seq = np.array([1, 2, 3, 4] * 3)
     u = kgram_index(seq, 7).hashes
     assert len(u) == 4
-
-
-def test_paint_coverage():
-    mask = paint_coverage(np.array([0, 4]), 3, 10)
-    assert mask.tolist() == [True, True, True, False, True, True, True,
-                             False, False, False]
 
 
 def test_double_hash_indices_in_range_and_distinct_probes():

@@ -298,6 +298,10 @@ def test_run_grid_cli_fastq_and_fasta_probes(spark, tmp_path):
         "--output", out, "--run-id", "g1",
     ])
     assert "stages ran: ['multi_scores', 'assignments', 'hits']" in stdout
+    # the screen reads the FASTQ reader's own frame; its mate column stays
+    # out of the stage schemas
+    for stage in ("multi_scores", "hits"):
+        assert "mate" not in spark.read.parquet(f"{out}/g1/{stage}").columns
 
     from bloomine_spark.sources.fastq import tokenize_bases
 

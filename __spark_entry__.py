@@ -2976,51 +2976,6 @@ def _q_doc_fingerprint_winnow(spark, sf_dir):
     )
 
 
-def _q_media_jpeg_features(spark, sf_dir):
-    """Multimodal column path, end to end on REAL encoded bytes: a
-    deterministic synthetic image per row is stdlib-JPEG-encoded at
-    generation, then the full baseline decoder (Huffman entropy decode +
-    dequant + IDCT) and grid-pooled feature extraction run inside
-    mapInPandas. Binary decode is not SQL-expressible → rows-only gate;
-    correctness is pytest-gated (round-trip bounds + javax.imageio
-    interop fixture in tests/test_multimodal_codecs.py)."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.multimodal import (
-        decode_image_features,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 200, codec="jpeg")
-    return decode_image_features(media, decoder="auto", grid=4).select(
-        "media_id", "width", "height",
-        F.round(
-            F.aggregate("features", F.lit(0.0), lambda a, x: a + x), 1
-        ).alias("feat_sum"),
-    )
-
-
-def _q_media_png_features(spark, sf_dir):
-    """Heterogeneous PNG media batch (plain / 4-bit palette / Adam7
-    interlaced, interleaved per row — the shape of a real web corpus's
-    image column) decoded by the auto-sniffing path with grid-pooled
-    features. Binary decode is not SQL-expressible → rows-only; decode
-    correctness is pytest-gated (javax.imageio palette + interlaced
-    fixtures decode pixel-exact in tests/test_multimodal_codecs.py)."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.multimodal import (
-        decode_image_features,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 200, codec="png-mixed")
-    return decode_image_features(media, decoder="auto", grid=4).select(
-        "media_id", "width", "height",
-        F.round(
-            F.aggregate("features", F.lit(0.0), lambda a, x: a + x), 1
-        ).alias("feat_sum"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -3517,30 +3472,6 @@ def _q_kcore_hosts(spark, sf_dir):
     return k_core(edges, k=2, rounds=8).orderBy("node")
 
 
-def _q_media_dhash_dups(spark, sf_dir):
-    """Image near-dup via perceptual dHash: decode (stdlib codecs) →
-    64-bit difference hash → the SAME pigeonhole Hamming banding text
-    SimHash uses (`hamming_pairs`). The corpus is 200 PNG images plus
-    perturbed clones (saturated corner block, re-encoded — same image,
-    different bytes); on the driver fixture every planted clone pair is
-    found at hamming ≤ 3 with zero false pairs (pytest-gated). Binary
-    decode is not SQL-expressible → rows-only gate."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.dedup import hamming_pairs
-    from bloomine_spark.operators.multimodal import (
-        image_dhash,
-        perturbed_clones,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 200, codec="png")
-    corpus = media.unionByName(perturbed_clones(media, every=10))
-    return hamming_pairs(
-        image_dhash(corpus), id_col="media_id", sig_col="dhash",
-        max_hamming=3,
-    ).orderBy("id_a", "id_b")
-
-
 def _q_zorder_key_events(spark, sf_dir):
     """Morton/Z-order interleave key over two event dimensions (user
     grid x value grid, 10 bits each) — the lakehouse multi-dimensional
@@ -3647,8 +3578,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "unigram_segment_stats_per_source": _q_unigram_segment_stats,
         "repetition_scores": _q_repetition_scores,
         "doc_fingerprint_winnow": _q_doc_fingerprint_winnow,
-        "media_jpeg_features": _q_media_jpeg_features,
-        "media_png_features": _q_media_png_features,
         "polyfamily_assign_docs": _q_polyfamily_assign_docs,
         "regional_revenue": _q_regional_revenue,
         "mg_token_topk": _q_mg_token_topk,
@@ -3715,7 +3644,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scd2_apply_user_state": _q_scd2_apply_user_state,
         "kcore_hosts": _q_kcore_hosts,
         "zorder_key_events": _q_zorder_key_events,
-        "media_dhash_dups": _q_media_dhash_dups,
     }
 
 

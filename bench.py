@@ -305,8 +305,7 @@ def main():
     collected: dict[str, list] = {}
     capture = {"minhash_lsh_dups", "ngram_jaccard_pairs", "ann_cosine_topk",
                "ann_ivf_topk", "embedding_near_dup_lsh", "ann_pq_topk",
-               "harmonic_hosts_exact", "hyperball_harmonic_hosts",
-               "media_dhash_dups"}
+               "harmonic_hosts_exact", "hyperball_harmonic_hosts"}
     for name in (
         "two_phase_screen",
         "minhash_lsh_dups",
@@ -418,7 +417,6 @@ def main():
         "scd2_user_state",
         "kcore_hosts",
         "zorder_key_events",
-        "media_dhash_dups",
         # r6 twelfth-session additions (excluded): HITS hubs/authorities,
         # per-host line-document-frequency boilerplate removal
         "hits_hosts",
@@ -491,14 +489,6 @@ def main():
     recall["embedding_lsh_planted_pair_recall"] = round(
         len(_pairs("embedding_near_dup_lsh") & planted) / len(planted), 4
     )
-    # dHash image near-dup: the only true pairs in the fixture are the
-    # planted clones (media_id + "c"); any other pair is a false positive
-    # among the noise images, so clone-share of found pairs = precision
-    # (recall 1.0 on this fixture is pytest-gated in test_zorder.py)
-    dh = _pairs("media_dhash_dups")
-    if dh:
-        clone = {p for p in dh if p[0] + "c" == p[1]}
-        recall["dhash_clone_pair_precision"] = round(len(clone) / len(dh), 4)
 
     # HyperBall vs exact harmonic centrality on the same host graph
     h_exact = {r["node"]: r["harmonic"] for r in collected["harmonic_hosts_exact"]}
@@ -583,7 +573,6 @@ def main():
         "q_scd2_user_state",
         "q_kcore_hosts",
         "q_zorder_key_events",
-        "q_media_dhash_dups",
         # r6 twelfth session
         "q_hits_hosts",
         "q_boilerplate_line_df_docs",

@@ -704,7 +704,7 @@ def hamming_pairs(
     max_hamming: int = 3,
 ) -> DataFrame:
     """Pairs with hamming(64-bit signature) ≤ d over ANY signature
-    relation (SimHash text sketches, image dHash, ...) via chunk
+    relation (SimHash text sketches or any 64-bit hash) via chunk
     banding — the signature-agnostic half of :func:`simhash_duplicates`.
 
     Pigeonhole: split 64 bits into d+1 chunks; any pair within hamming d

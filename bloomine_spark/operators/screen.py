@@ -388,7 +388,7 @@ def verify(
 
     ``"scored"`` scores each orientation's survivors against MST;
     ``"exact"`` requires the whole target as a contiguous subarray of the
-    row (reverse complemented for RC survivors).
+    row (reverse complemented for RC survivors). No other mode gets here.
     """
     ctx = tw.ctx
     p = ctx.params
@@ -398,18 +398,16 @@ def verify(
         score_survivors(tw, fp_f, False, scores, p)
         score_survivors(tw, fp_r, True, scores, p)
         return scores, fp_any & (scores >= ctx.mst)
-    if mode == "exact":
-        # the whole target as the one k-gram of an index over its length
-        target = ctx.target_tokens
-        pat = FlatWindows(tw.win.batch, len(target), ctx.complement_map)
-        whole = kgram_index(target, len(target))
-        contains = np.zeros(len(fp_f), dtype=bool)
-        for reverse, sel in ((False, fp_f), (True, fp_r)):
-            if sel.any():
-                contains[exact_matches(pat, whole, reverse, sel)[1]] = True
-        scores = np.where(contains, len(target) * int(p.hit), 0)
-        return scores, fp_any & contains
-    raise ValueError(f"unknown mode {mode!r}")
+    # exact: the whole target as the one k-gram of an index over its length
+    target = ctx.target_tokens
+    pat = FlatWindows(tw.win.batch, len(target), ctx.complement_map)
+    whole = kgram_index(target, len(target))
+    contains = np.zeros(len(fp_f), dtype=bool)
+    for reverse, sel in ((False, fp_f), (True, fp_r)):
+        if sel.any():
+            contains[exact_matches(pat, whole, reverse, sel)[1]] = True
+    scores = np.where(contains, len(target) * int(p.hit), 0)
+    return scores, fp_any & contains
 
 
 def make_screen_kernel(
@@ -434,7 +432,11 @@ def make_screen_kernel(
     Bloom probes) and its own survivors' verification. Each target's
     survivor rows are emitted as one record batch, with ``take`` on the
     original Arrow columns and the target id in column ``id_col``.
+    ``mode`` is checked here, on the driver: ``verify`` sees only rows
+    that survive the prescreen, so a bad mode could pass silently.
     """
+    if mode not in ("scored", "exact"):
+        raise ValueError(f"unknown mode {mode!r}; expected 'scored' or 'exact'")
     import pyarrow as pa
 
     from bloomine_spark.functions.kgrams import (

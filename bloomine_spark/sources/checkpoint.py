@@ -116,8 +116,9 @@ def checkpointed_sketch_agg(
     Returns (sketch, lineage_df); ``lineage_df`` is lazy (one row per
     partition id). On a rerun with the same (run_id, stage), partitions
     already checkpointed are skipped — only missing ones compute.
-    ``fail_partitions`` injects failures after persisting earlier partitions
-    (test hook for the resume path).
+    ``fail_partitions`` makes those partitions' tasks raise (test hook).
+    The append is one write job, so a failed job commits none of its
+    partitions: a rerun recomputes every one missing before the failure.
     """
     spark = df.sparkSession
     path = checkpoint_dir(base_dir, run_id, stage)

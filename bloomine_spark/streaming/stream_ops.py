@@ -459,6 +459,9 @@ def f2_by_key_stream(
     data-volume-independent); merge = counter add, so the trigger fold
     is exactly the batch update. ``idle_ttl_ms`` evicts idle keys like
     the HLL monitor (final estimate re-emitted, fresh sketch on return).
+    Per-key state at the defaults ε = 0.02, δ = 1e-2 is 5 × 8192 counters,
+    327 708 bytes: 80× the HLL monitor's 4 102. It is re-serialized on
+    every trigger and kept forever unless ``idle_ttl_ms`` is set.
     """
     from bloomine_spark.sketch.countsketch import CountSketch
 

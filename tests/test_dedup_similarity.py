@@ -1,5 +1,5 @@
-"""Dedup family + similarity search: planted-duplicate recall, exact
-baselines, and stub-gated multimodal plumbing."""
+"""Dedup family + similarity search: planted-duplicate recall and exact
+baselines."""
 
 import os
 
@@ -252,42 +252,6 @@ def test_ivf_topk_recall(spark):
     assert not a3.duplicated(["query_id", "neighbor_id"]).any()
     r3 = recall(a3)
     assert r3 >= max(r1, 0.9), (r1, r3)
-
-
-# ------------------------------------------------------------- multimodal
-def test_multimodal_fake_decode_pipeline(spark):
-    from bloomine_spark.operators.multimodal import (
-        decode_image_features,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 50)
-    feats = decode_image_features(media, decoder="fake", grid=4).toPandas()
-    assert len(feats) == 50
-    assert all(len(f) == 16 for f in feats["features"])
-    assert (feats["width"] >= 16).all() and (feats["width"] < 64).all()
-    # deterministic: re-run gives identical features
-    feats2 = decode_image_features(media, decoder="fake", grid=4).toPandas()
-    a = feats.sort_values("media_id").reset_index(drop=True)
-    b = feats2.sort_values("media_id").reset_index(drop=True)
-    assert all(
-        np.allclose(x, y) for x, y in zip(a["features"], b["features"])
-    )
-
-
-def test_multimodal_stub_raises(spark):
-    from bloomine_spark.operators.multimodal import (
-        decode_image_features,
-        synthetic_media,
-    )
-    import py4j
-
-    media = synthetic_media(spark, 5)
-    with pytest.raises(Exception) as ei:
-        decode_image_features(media, decoder="stub").collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
 
 
 # ----------------------------------------------------- short-doc guards

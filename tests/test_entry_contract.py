@@ -33,6 +33,36 @@ def test_query_registry_shape():
         assert name in qs and name not in oracles
 
 
+def test_query_imports_resolve():
+    """Query bodies import lazily, so a deleted module or renamed name only
+    fails when that query runs: resolve every package import up front."""
+    import ast
+    import importlib
+    import pathlib
+
+    tree = ast.parse(pathlib.Path(entrymod.__file__).read_text())
+    dangling, checked = [], 0
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            targets = [(a.name, None) for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.level == 0:
+            targets = [(node.module, a.name) for a in node.names]
+        else:
+            continue
+        for module, name in targets:
+            if module.split(".")[0] != "bloomine_spark":
+                continue
+            checked += 1
+            try:
+                mod = importlib.import_module(module)
+                if name is not None and not hasattr(mod, name):
+                    importlib.import_module(f"{module}.{name}")
+            except ImportError:
+                dangling.append(f"line {node.lineno}: {module} {name or ''}")
+    assert checked > 0
+    assert not dangling, dangling
+
+
 @pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
 def test_three_oracle_queries_at_sf0001(spark):
     """Cheap end-to-end oracle spot check (full set: tools/check_correctness.py)."""

@@ -300,6 +300,19 @@ def test_oov_token_under_complement_map_raises(bad, n_filler, multi):
         run_kernel(kern, rb)
 
 
+@pytest.mark.parametrize("mode", ["Scored", "EXACT", "fuzzy", "", None])
+def test_unknown_mode_raises_when_kernel_is_built(mode):
+    """Rejected on the driver, not by ``verify`` on prescreen survivors:
+    a batch with none would otherwise screen to an empty result."""
+    params = ScreenParams()
+    ctx = prepare_target(list(range(4)) * 6, params)
+    with pytest.raises(ValueError, match="unknown mode"):
+        make_screen_kernel(
+            FakeBroadcast({"": ctx}), "tokens", ["doc_id"], params.k,
+            mode=mode,
+        )
+
+
 # ---------------------------------------------------------------------------
 # lint: no package module or job script imports anything unused
 # (``__init__.py`` files hold deliberate re-exports)

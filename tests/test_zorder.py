@@ -77,62 +77,3 @@ def test_zorder_layout_null_and_constant_dims(spark):
     with pytest.raises(ValueError):
         zorder_layout(df, ["x", "y"], bits=0)
 
-
-# --- image perceptual hashing (dHash + hamming banding) -------------------
-# lives here with the layout tests to avoid a one-test module; the
-# operator spans multimodal.py (hashing) and dedup.py (banding)
-
-def test_dhash_python_replay_and_sensitivity(spark):
-    import numpy as np
-
-    from bloomine_spark.operators.multimodal import _dhash_bits
-
-    rng = np.random.default_rng(7)
-    # width 45 = 9*5: grid bin edges scale exactly under 2x upscale, so
-    # resolution invariance is EXACT; non-divisible dims shift truncated
-    # bin edges and cost a few bits (measured 4 at 40x52) — that's the
-    # "near" in near-dup, still far under the banding threshold
-    img = rng.integers(0, 256, size=(40, 45)).astype(np.float32)
-    h0 = _dhash_bits(img, 8)
-    up = np.repeat(np.repeat(img, 2, axis=0), 2, axis=1)
-    assert _dhash_bits(up, 8) == h0
-    # a saturated corner block touches ONE grid cell = at most the one
-    # comparison that reads it
-    pert = img.copy(); pert[:5, :5] = 255.0
-    d = bin((h0 ^ _dhash_bits(pert, 8)) & ((1 << 64) - 1)).count("1")
-    assert d <= 1
-    # unrelated noise is far
-    other = rng.integers(0, 256, size=(40, 45)).astype(np.float32)
-    far = bin((h0 ^ _dhash_bits(other, 8)) & ((1 << 64) - 1)).count("1")
-    assert far > 15
-
-
-def test_image_dhash_clone_recall(spark):
-    from bloomine_spark.operators.dedup import hamming_pairs
-    from bloomine_spark.operators.multimodal import (
-        image_dhash, perturbed_clones, synthetic_media)
-
-    media = synthetic_media(spark, 100, codec="png")
-    clones = perturbed_clones(media, every=5)
-    n_clones = clones.count()
-    assert n_clones > 0
-    sig = image_dhash(media.unionByName(clones))
-    pairs = hamming_pairs(sig, id_col="media_id", sig_col="dhash",
-                          max_hamming=3).collect()
-    clone_pairs = {
-        (r["id_a"], r["id_b"]) for r in pairs
-        if r["id_a"] + "c" == r["id_b"]
-    }
-    # every planted clone found, and nothing else pairs (noise images
-    # are mutually far in dHash space)
-    assert len(clone_pairs) == n_clones == len(pairs)
-
-
-def test_image_dhash_validation(spark):
-    import pytest as _pt
-
-    from bloomine_spark.operators.multimodal import (
-        image_dhash, synthetic_media)
-
-    with _pt.raises(ValueError):
-        image_dhash(synthetic_media(spark, 2), hash_size=9)

@@ -1,5 +1,5 @@
 """Scaling evidence for the round-6 analytics tail (temporal/event ops,
-corpus analytics, graph mining): the same job on the same input at two
+corpus analytics): the same job on the same input at two
 parallelism levels (N vs 4N cores — the sandbox stand-in for N vs 4N
 executors, north-rule protocol), methodology of BENCH/quality_scale.py
 (paired back-to-back subprocesses per job, pinned leaf splits, pinned
@@ -9,7 +9,6 @@ campaigns untouched.
 Fixtures (all pure-codegen, deterministic xxhash64 content):
 * docs    — the shared 40-words-from-50k-vocab documents parquet
 * events  — (user_id, ts, event_type) rows over a 30-day window
-* edges   — random directed graph (src, dst) over n_nodes hosts
 
 Writes BENCH/ANALYTICS_SCALE.md + BENCH/analytics_scale.json and prints
 one JSON line.
@@ -32,9 +31,6 @@ JOBS = [
     "window_funnel",
     "collocations",
     "phrase_search",
-    "textrank",
-    "triangles",
-    "lpa",
 ]
 CONTROLS = {"jvm_control_explode_count"}
 
@@ -59,9 +55,7 @@ spark = get_spark(master=f"local[{{cores}}]", shuffle_partitions=64,
 spark.sparkContext.setLogLevel("ERROR")
 import os
 
-DOC_JOBS = {{"jvm_control_explode_count", "collocations", "phrase_search",
-             "textrank"}}
-EVENT_JOBS = {{"asof_join", "window_funnel"}}
+DOC_JOBS = {{"jvm_control_explode_count", "collocations", "phrase_search"}}
 
 if job in DOC_JOBS:
     path = {repo!r} + f"/.data/tokdocs_{{size}}.parquet"
@@ -78,7 +72,7 @@ if job in DOC_JOBS:
             .write.mode("overwrite").parquet(path))
     docs = spark.read.parquet(path)
     n_rows = size * 40  # tokens
-elif job in EVENT_JOBS:
+else:
     path = {repo!r} + f"/.data/scaleevents_{{size}}.parquet"
     if not os.path.isdir(path):
         (spark.range(0, size, numPartitions=64)
@@ -94,26 +88,8 @@ elif job in EVENT_JOBS:
             .write.mode("overwrite").parquet(path))
     events = spark.read.parquet(path)
     n_rows = size
-else:
-    path = {repo!r} + f"/.data/scaleedges_{{size}}.parquet"
-    if not os.path.isdir(path):
-        (spark.range(0, size, numPartitions=64)
-            .select(
-                F.concat(F.lit("h"), F.pmod(F.xxhash64("id", F.lit(11)),
-                                            F.lit(100000)).cast("string"))
-                 .alias("src"),
-                F.concat(F.lit("h"), F.pmod(F.xxhash64("id", F.lit(13)),
-                                            F.lit(100000)).cast("string"))
-                 .alias("dst"),
-            )
-            .write.mode("overwrite").parquet(path))
-    edges = spark.read.parquet(path)
-    n_rows = size
 
-from bloomine_spark.operators.collocations import (
-    collocation_scores, textrank_keywords)
-from bloomine_spark.operators.graphmining import (
-    lpa_communities, triangle_counts)
+from bloomine_spark.operators.collocations import collocation_scores
 from bloomine_spark.operators.retrieval import phrase_search
 from bloomine_spark.operators.temporal import asof_join, window_funnel
 
@@ -136,17 +112,10 @@ FNS = {{
         docs, min_count=1, top_k=50).collect(),
     "phrase_search": lambda: phrase_search(
         docs, ["w1 w17 w99", "w4242 w7 w300"]).collect(),
-    "textrank": lambda: textrank_keywords(
-        docs, window=2, iterations=8, top_k=20).collect(),
-    "triangles": lambda: triangle_counts(edges)
-        .agg(F.sum("triangles"), F.sum("degree")).head(),
-    "lpa": lambda: lpa_communities(edges, rounds=4)
-        .agg(F.countDistinct("community"), F.count("*")).head(),
 }}
 
 # warmup: page cache + codegen hot
-(docs if job in DOC_JOBS else events if job in EVENT_JOBS else edges) \
-    .select(F.count("*")).head()
+(docs if job in DOC_JOBS else events).select(F.count("*")).head()
 
 fn = FNS[job]
 best = float("inf")
@@ -180,18 +149,14 @@ def main():
     t_base: dict[str, float] = {}
     t_hi: dict[str, float] = {}
     # per-job input sizes: scan-bound jobs get 8x docs so fixed overhead
-    # does not swamp the signal; the iterative graph jobs run on a fixed
-    # 2M-edge graph (the CC_SCALE / WEB_SCALE operating point); events
-    # jobs at 16 rows per doc-unit so the asof window has real volume
+    # does not swamp the signal; events jobs at 16 rows per doc-unit so
+    # the asof window has real volume
     sizes = {
         "jvm_control_explode_count": n_docs * 8,
         "collocations": n_docs,
         "phrase_search": n_docs * 8,
-        "textrank": max(n_docs // 16, 10_000),
         "asof_join": n_docs * 16,
         "window_funnel": n_docs * 16,
-        "triangles": 2_000_000,
-        "lpa": 2_000_000,
     }
     for job in JOBS:
         # paired back-to-back so the box's throttle drift hits both sides
@@ -220,11 +185,10 @@ def main():
     )
     md = f"""# Analytics tail scaling (N vs 4N cores)
 
-Inputs: generated docs (40 words from a 50k-type vocab), generated
-events (user_id / 30-day ts / 4 event types over 50k users), generated
-2M-edge random host graph (100k nodes) — all pure-codegen fixtures with
-64 pinned leaf splits; per-job input sizes in the table (rows = tokens
-for doc jobs, events for event jobs, edges for graph jobs). Paired
+Inputs: generated docs (40 words from a 50k-type vocab) and generated
+events (user_id / 30-day ts / 4 event types over 50k users) — both
+pure-codegen fixtures with 64 pinned leaf splits; per-job input sizes
+in the table (rows = tokens for doc jobs, events for event jobs). Paired
 back-to-back runs per job, best of 3, local[{base}] vs local[{hi}].
 Same box caveats as BENCH/BASELINE.md: the JVM-codegen control bounds
 what this shared-DRAM VM can evidence in the same window; engine jobs
@@ -239,14 +203,7 @@ asof_join is the union+window formulation — shuffle volume exactly
 window_funnel is k-1 bounded passes (filtered scan + min-agg + narrow
 key join each). collocations aggregates the full bigram relation then
 broadcasts vocab-sized margins. phrase_search filters postings to the
-phrase vocabulary in-scan (scan-bound by construction). textrank is
-8 pagerank rounds over the distinct co-occurrence graph — the iterative
-per-round barrier (localCheckpoint + dangling action) bounds its
-efficiency exactly like pagerank in WEB_SCALE.md, amortizing with edge
-count. triangles is the degree-oriented wedge join (fan-out bounded by
-oriented out-degree). lpa is 4 synchronous label rounds, per round one
-(node,label) exchange in and one partially-aggregated count exchange
-out.
+phrase vocabulary in-scan (scan-bound by construction).
 """
     with open(os.path.join(REPO, "BENCH", "ANALYTICS_SCALE.md"),
               "w") as f:

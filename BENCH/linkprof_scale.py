@@ -1,6 +1,6 @@
-"""Scaling evidence for the round-6 twelfth-session family (HITS,
-line-df boilerplate, generalization-to-k, blocked Jaro-Winkler,
-Soundex keys, lnc.ltc TF-IDF cosine, one-pass profiling): the same job
+"""Scaling evidence for the round-6 twelfth-session family (line-df
+boilerplate, generalization-to-k, blocked Jaro-Winkler, Soundex keys,
+lnc.ltc TF-IDF cosine, one-pass profiling): the same job
 on the same input at two parallelism levels (N vs 4N cores — the
 sandbox stand-in for N vs 4N executors, north-rule protocol),
 methodology of BENCH/quality_scale.py (paired back-to-back
@@ -13,7 +13,7 @@ tokdocs corpus (40 hash-picked words/doc), a line-structured variant
 with planted per-source footers, a quasi-identifier table for the
 k-anonymity ladder, a blocked name relation sized so the JW pair count
 is fixed by construction (block count x block size, independent of
-parallelism), and a host edge list for the 8-round HITS iteration.
+parallelism), and a wide mixed-type table for profiling.
 
 Writes BENCH/LINKPROF_SCALE.md + BENCH/linkprof_scale.json and prints
 one JSON line.
@@ -36,7 +36,6 @@ JOBS = [
     "generalize_to_k",
     "jw_blocked_pairs",
     "tfidf_cosine",
-    "hits_8_rounds",
     "profile_table",
 ]
 CONTROLS = {"jvm_control_explode_count"}
@@ -78,7 +77,6 @@ n_tokens = n * 40
 
 from bloomine_spark.operators.dedup import line_df_boilerplate
 from bloomine_spark.operators.linkage import blocked_jw_pairs, soundex_key
-from bloomine_spark.operators.linkgraph import hits
 from bloomine_spark.operators.privacy import generalize_to_k
 from bloomine_spark.operators.profiling import profile_table
 from bloomine_spark.operators.retrieval import tfidf_cosine_topk_per_source
@@ -122,14 +120,6 @@ _names = spark.range(0, n, numPartitions=64).select(
            " pmod(xxhash64(id, 2), 500))").alias("name"),
 )
 
-# host edge list for HITS: 50k hosts, one edge per row, dense-ish core
-_edges = spark.range(0, n, numPartitions=64).select(
-    F.concat(F.lit("h"), (F.pmod(F.xxhash64("id", F.lit(1)), 50000))
-             .cast("string")).alias("src"),
-    F.concat(F.lit("h"), (F.pmod(F.xxhash64("id", F.lit(2)), 50000))
-             .cast("string")).alias("dst"),
-).filter(F.col("src") != F.col("dst"))
-
 # wide table for profiling: 6 mixed-type columns
 _wide = spark.range(0, n, numPartitions=64).select(
     F.col("id"),
@@ -156,8 +146,6 @@ FNS = {{
         .agg(F.count("*")).head(),
     "tfidf_cosine": lambda: tfidf_cosine_topk_per_source(
         docs, ["w1", "w17", "w4242"], k=5).collect(),
-    "hits_8_rounds": lambda: hits(_edges, iterations=8)
-        .agg(F.sum("hub"), F.sum("auth")).head(),
     "profile_table": lambda: profile_table(_wide).collect(),
 }}
 
@@ -195,14 +183,11 @@ def main():
     t_hi: dict[str, float] = {}
     sizes = {j: n_docs for j in JOBS}
     # scan-bound jobs at 8x so fixed overhead doesn't swamp the signal;
-    # the 8-round HITS iteration at 4x (per-round work is small, the
-    # barrier amortizes with edge count — web_scale.py lesson); the JW
-    # name relation at ~n/3 (pair count, not row count, is the work:
-    # 2000 blocks x ~65-row blocks = ~4M kernel pairs)
+    # the JW name relation at ~n/3 (pair count, not row count, is the
+    # work: 2000 blocks x ~65-row blocks = ~4M kernel pairs)
     sizes["jvm_control_explode_count"] = n_docs * 8
     sizes["profile_table"] = n_docs * 8
     sizes["generalize_to_k"] = n_docs * 4
-    sizes["hits_8_rounds"] = n_docs * 4
     sizes["jw_blocked_pairs"] = max(n_docs // 3, 10_000)
     for job in JOBS:
         # paired back-to-back so the box's throttle drift hits both sides
@@ -229,12 +214,12 @@ def main():
         f"{' (control)' if j in CONTROLS else ''} |"
         for j in JOBS
     )
-    md = f"""# Linkage/privacy/profiling/graph family scaling (N vs 4N cores)
+    md = f"""# Linkage/privacy/profiling family scaling (N vs 4N cores)
 
 Input: generated pure-codegen fixtures (docs x 40 words from a 50k
 vocab; line-structured docs with per-source footers; a 25x5-class
 quasi-identifier table; a 2000-block name relation whose JW pair count
-is fixed by construction; a 50k-host edge list). Paired back-to-back
+is fixed by construction; a wide mixed-type table). Paired back-to-back
 runs per job, best of 3, local[{base}] vs local[{hi}]. Same box
 caveats as BENCH/BASELINE.md: the JVM-codegen control bounds what this
 shared-DRAM VM can evidence in the same window.
@@ -250,9 +235,6 @@ jw_blocked_pairs: block self-join + length prefilter feeding the
 Arrow-batched Python kernel — pair count pinned by block layout so the
 kernel work is parallelism-invariant. tfidf_cosine: ONE corpus-wide
 (doc,term) count collapsing to per-doc norms + |terms|-bounded scoring.
-hits_8_rounds: 16 half-steps of (node, double) exchanges with scalar L2
-norms — the serial per-round barrier is the known iterative-job cost
-(amortizes with edge count, see WEB_SCALE.md sized pair).
 profile_table: one aggregate carrying every per-column statistic incl.
 three exact countDistincts.
 """

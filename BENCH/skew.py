@@ -27,7 +27,8 @@ Correctness cross-check: the per-source HLL estimates from both layouts
 must agree EXACTLY (HLL merge is order/grouping-invariant), so the salted
 plan is the same answer, just balanced.
 
-Writes BENCH/skew.json; bench.py attaches it to the round record.
+Writes BENCH/skew.json, a standalone record; speed claims are perfbench
+results (perfbench/run.py), not this script's.
 """
 
 from __future__ import annotations

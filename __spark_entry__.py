@@ -55,12 +55,12 @@ def _pattern_tokens(spark: SparkSession, phrase: str) -> list[int]:
 
 
 def _ship_pkg(spark: SparkSession) -> None:
-    from bloomine_spark.session import package_zip
+    from bloomine_spark.session import ship_package
 
     try:
-        spark.sparkContext.addPyFile(package_zip())
+        ship_package(spark)
     except Exception:
-        pass  # already added in this context
+        pass  # no SparkContext, or a same-named zip from another path
 
 
 # ---------------------------------------------------------------------------
@@ -1186,246 +1186,6 @@ def _q_unigram_segment_stats(spark, sf_dir):
     ).orderBy("source")
 
 
-def _web_html_expr():
-    """Deterministic HTML planting shared by the Spark query and (as a
-    documented contract) the DuckDB oracle: four page shapes keyed by
-    doc_id % 4 — head/style/script page, comment+list page, entity
-    page, table page."""
-    t = F.col("text")
-    return (
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(
-                F.lit("<html><head><title>t</title><style>p{color:red}"
-                      "</style></head><body><h1>Head</h1><p>"),
-                t,
-                F.lit("</p><script>var x='<p>no</p>';</script>"
-                      "</body></html>"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(
-                F.lit("<div>"), t,
-                F.lit("</div><!-- note --><ul><li>alpha</li>"
-                      "<li>beta</li></ul>"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(
-                F.lit("<p>"), t,
-                F.lit(" &amp; &lt;tag&gt; &#39;q&#39;&nbsp;end</p>"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("<table><tr><td>"), t,
-                F.lit("</td><td>cell2</td></tr></table>"),
-            )
-        )
-    )
-
-
-def _q_html_extract_docs(spark, sf_dir):
-    """HTML→text extraction (the C4/CCNet/RefinedWeb front-end): plant
-    four deterministic page shapes around the document texts, run the
-    pure-codegen extraction chain (non-content subtree kill → block
-    tags → newlines → tag strip → entity decode → whitespace
-    normalization). The DuckDB oracle interpolates the SAME pattern
-    constants from operators/webops.py, so the two engines cannot
-    drift."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.webops import html_extract
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return html_extract(docs.withColumn("html", _web_html_expr()))
-
-
-def _q_html_main_extract_docs(spark, sf_dir):
-    """html_extract plus the link-density boilerplate tier: every page
-    gets a planted nav bar (anchor-dominated line → dropped), content
-    with one short inline link (kept), and even docs a footer nav
-    (dropped). The oracle replays the same per-line density rule with
-    DuckDB list lambdas over the SAME pattern constants; the density
-    cut is the integer cross-multiplication 2·anchor > visible."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.webops import html_extract_main
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    html = F.concat(
-        F.lit('<div><a href="/">Home</a> | <a href="/about">About</a></div><p>'),
-        F.col("text"),
-        F.lit(' with <a href="/x">ref</a></p>'),
-        F.when(F.col("doc_id") % 2 == 0,
-               F.lit('<div><a href="/n">Next</a></div>')).otherwise(F.lit("")),
-    )
-    return html_extract_main(docs.withColumn("html", html))
-
-
-def _q_html_meta_docs(spark, sf_dir):
-    """Head-metadata extraction (title / meta description / canonical
-    link / og:title — the fields web corpora keep beside text): planted
-    heads on doc_id moduli with entities, both quote styles, and a
-    decoy second <title> (first match wins). Zero-exchange codegen."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.webops import html_meta
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = F.col("doc_id")
-    head = F.concat(
-        F.lit("<head><title>T &amp; "), (d % 9).cast("string"),
-        F.lit("</title>"),
-        F.when(d % 2 == 0,
-               F.concat(F.lit('<meta name="description" content="desc '),
-                        (d % 7).cast("string"), F.lit('">')))
-        .otherwise(F.lit("")),
-        F.when(d % 3 == 0,
-               F.concat(F.lit("<link rel='canonical' href='https://c"),
-                        (d % 5).cast("string"),
-                        F.lit(".example.com/p'>"))).otherwise(F.lit("")),
-        F.when(d % 5 == 0,
-               F.concat(F.lit('<meta property="og:title" content="og '),
-                        (d % 4).cast("string"), F.lit('">')))
-        .otherwise(F.lit("")),
-        F.lit("<title>decoy</title></head><body><p>"),
-    )
-    pages = docs.withColumn(
-        "html", F.concat(head, F.col("text"), F.lit("</p></body>"))
-    )
-    return html_meta(pages)
-
-
-def _q_robots_filter_docs(spark, sf_dir):
-    """robots.txt compliance (RFC 9309) end to end: planted robots
-    texts per host (hosts r<20 publish one; r%3==0 gives agent
-    'trainbot' its own group with a longer Allow overriding a Disallow
-    prefix, plus a catch-all '*' Disallow: / that the specific group
-    SHADOWS; other hosts Disallow: /p/2 for everyone) are PARSED by
-    robots_rules (gaps-and-islands grouping) and evaluated by
-    robots_allowed (longest match, allow tie-break). The oracle derives
-    the same rule relation from the planting formulas and replays the
-    argmax — so the parse and the evaluation must BOTH be right for the
-    hash to land."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.robots import robots_allowed, robots_rules
-    from bloomine_spark.sources.tables import load_table
-
-    r = F.col("id")
-    robots_txt = F.when(
-        r % 3 == 0,
-        F.concat(
-            F.lit("# policy\nUser-agent: trainbot\nDisallow: /p/1\n"
-                  "Allow: /p/1"),
-            (r % 10).cast("string"),
-            F.lit("\n\nUser-agent: *\nDisallow: /\n"),
-        ),
-    ).otherwise(F.lit("User-agent: *\nDisallow: /p/2\n"))
-    hosts = spark.range(20).select(
-        F.concat(F.lit("h"), r.cast("string"), F.lit(".example.com")).alias(
-            "host"
-        ),
-        robots_txt.alias("robots_txt"),
-    )
-    rules = robots_rules(hosts)
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    urls = docs.withColumn(
-        "url_canon",
-        F.concat(
-            F.lit("https://h"), (d % 40).cast("string"),
-            F.lit(".example.com/p/"), (d % 100).cast("string"),
-        ),
-    )
-    return robots_allowed(urls, rules, "trainbot")
-
-
-def _q_politeness_schedule_urls(spark, sf_dir):
-    """Frontier politeness planning: planted robots texts carry
-    Crawl-delay directives (hosts r%4==0 give agent 'trainbot' its own
-    5s group SHADOWING a '*' 2s group; r%4==1 only '*: ' 2+r%3; r%4==2
-    a non-numeric value that must drop; r%4==3 no directive →
-    default) parsed by robots_crawl_delays, then each host's URLs
-    serialize into slots with fetch_at_s = slot × delay. The oracle
-    derives delays from the planting formulas — parse AND schedule
-    must both be right."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.robots import (
-        politeness_schedule,
-        robots_crawl_delays,
-    )
-    from bloomine_spark.sources.tables import load_table
-
-    r = F.col("id")
-    robots_txt = (
-        F.when(
-            r % 4 == 0,
-            F.lit("User-agent: trainbot\nCrawl-delay: 5\n\n"
-                  "User-agent: *\nCrawl-delay: 2\n"),
-        )
-        .when(
-            r % 4 == 1,
-            F.concat(F.lit("User-agent: *\nCrawl-delay: "),
-                     (2 + r % 3).cast("string"), F.lit("\n")),
-        )
-        .when(r % 4 == 2,
-              F.lit("User-agent: *\nCrawl-delay: soon\n"))
-        .otherwise(F.lit("User-agent: *\nDisallow: /tmp\n"))
-    )
-    hosts = spark.range(20).select(
-        F.concat(F.lit("h"), r.cast("string"), F.lit(".example.com"))
-        .alias("host"),
-        robots_txt.alias("robots_txt"),
-    )
-    delays = robots_crawl_delays(hosts, "trainbot")
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    urls = docs.select(
-        F.concat(
-            F.lit("https://h"), (d % 20).cast("string"),
-            F.lit(".example.com/p/"), d.cast("string"),
-        ).alias("url")
-    )
-    return politeness_schedule(urls, delays, default_delay=1.0)
-
-
-def _q_sitemap_entries_docs(spark, sf_dir):
-    """Sitemap parse (sitemaps.org): each doc plants a urlset of two
-    <url> blocks (second without lastmod) — or, on %7, a <sitemapindex>
-    whose loc is another sitemap. One regexp_extract_all + explode."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.webops import sitemap_entries
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    xml = F.when(
-        d % 7 == 0,
-        F.concat(
-            F.lit("<sitemapindex><sitemap><loc>https://h"),
-            (d % 40).cast("string"),
-            F.lit(".example.com/s"), (d % 3).cast("string"),
-            F.lit(".xml</loc></sitemap></sitemapindex>"),
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit("<urlset><url><loc> https://h"), (d % 40).cast("string"),
-            F.lit(".example.com/p/"), (d % 100).cast("string"),
-            F.lit(" </loc><lastmod>2024-01-"),
-            F.lpad(((d % 28) + 1).cast("string"), 2, "0"),
-            F.lit("</lastmod></url><url><loc>https://h"),
-            (d % 40).cast("string"),
-            F.lit(".example.com/q</loc></url></urlset>"),
-        )
-    )
-    return sitemap_entries(docs.withColumn("xml", xml))
-
-
 def _q_line_dedup_docs(spark, sf_dir):
     """Corpus-level exact line dedup (RefinedWeb/FineWeb): shared
     footer/cookie lines PLANTED on doc_id moduli repeat across docs —
@@ -1816,233 +1576,6 @@ def _q_binned_price_orders(spark, sf_dir):
     return assign_bins(
         orders.select("o_orderkey", "o_totalprice"), "o_totalprice", edges
     )
-
-
-def _web_url_expr():
-    """Deterministic URL planting shared with the oracle: uppercase
-    scheme/host, www, default/explicit ports, path depth, non-document
-    extensions, tracking params, fragments — each on its own modulus."""
-    d = F.col("doc_id")
-    scheme = (
-        F.when(d % 17 == 0, F.lit("ftp"))
-        .when(d % 7 == 0, F.lit("HTTP"))
-        .otherwise(F.lit("https"))
-    )
-    host = F.concat(
-        F.when(d % 3 == 0, F.lit("WWW.")).otherwise(F.lit("")),
-        F.lit("h"),
-        (d % 40).cast("string"),
-        F.lit(".Example.com"),
-    )
-    port = F.when(
-        d % 11 == 0,
-        F.when(d % 7 == 0, F.lit(":80")).otherwise(F.lit(":443")),
-    ).otherwise(F.lit(""))
-    path = F.concat(
-        F.lit("/"),
-        F.expr("repeat('a/', cast(doc_id % 15 as int))"),
-        F.lit("page"),
-        (d % 100).cast("string"),
-        F.when(d % 13 == 0, F.lit(".jpg")).otherwise(F.lit("")),
-    )
-    query = (
-        F.when(d % 5 == 0, F.lit("?utm_source=x&q=1"))
-        .when(d % 5 == 1, F.lit("?fbclid=zz"))
-        .otherwise(F.lit(""))
-    )
-    frag = F.when(d % 2 == 0, F.lit("#top")).otherwise(F.lit(""))
-    return F.concat(scheme, F.lit("://"), host, port, path, query, frag)
-
-
-def _q_url_canonical_filter(spark, sf_dir):
-    """URL canonicalization + first-failing-rule filter: lowercased
-    scheme/host, www/default-port/fragment/tracking-param stripping,
-    then scheme / extension / blocked-host / path-depth rules — the
-    crawl-frontier hygiene stage ahead of any text filter."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.webops import canonicalize_url_df, url_filter
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    urls = canonicalize_url_df(docs.withColumn("url", _web_url_expr()))
-    return url_filter(
-        urls, blocked_hosts=["h7.example.com"], max_path_depth=12
-    ).select("doc_id", "url_canon", "url_keep", "url_reason")
-
-
-def _q_url_host_cap_dedup(spark, sf_dir):
-    """Canonical-URL exact dedup (min-id survivor) + per-host document
-    cap (md5-rank quota) over the same planted URLs — FineWeb-style
-    URL-level dedup with hot-host bounding; both windows are rank
-    filters (WindowGroupLimit-eligible)."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.webops import (
-        canonicalize_url_df,
-        url_dedup_with_host_cap,
-    )
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    urls = canonicalize_url_df(docs.withColumn("url", _web_url_expr()))
-    return url_dedup_with_host_cap(urls, max_per_host=10).select(
-        "doc_id", "url_canon", "url_rank",
-        F.col("host_rank").cast("long").alias("host_rank"), "keep",
-    )
-
-
-def _linked_page_exprs():
-    """Deterministic (page url, html-with-anchors) planting shared with
-    the oracles: pages live on hosts h(doc_id%40); pages whose host
-    residue is < 30 carry one absolute anchor (uppercase host —
-    exercises lowering), one protocol-relative anchor with a fragment,
-    and modulus-gated root-relative / mailto / directory-relative
-    anchors (the latter three never produce host edges: same-host,
-    non-web scheme, unresolvable). Hosts 30–39 publish NO links, so the
-    host graph has genuinely dangling nodes for PageRank."""
-    d = F.col("doc_id")
-    url = F.concat(
-        F.lit("https://h"), (d % 40).cast("string"),
-        F.lit(".example.com/p/"), (d % 100).cast("string"),
-    )
-    anchors = F.concat(
-        F.lit('<a href="https://H'), ((d * 7 + 3) % 40).cast("string"),
-        F.lit('.Example.com/x'), (d % 9).cast("string"), F.lit('">a</a>'),
-        F.lit("<a href='//h"), ((d * 11 + 1) % 40).cast("string"),
-        F.lit(".example.com/y#frag'>b</a>"),
-        F.when(d % 3 == 0,
-               F.concat(F.lit('<a href="/local/'), (d % 5).cast("string"),
-                        F.lit('">c</a>'))).otherwise(F.lit("")),
-        F.when(d % 4 == 0, F.lit('<a href="mailto:x@y.z">m</a>'))
-        .otherwise(F.lit("")),
-        F.when(d % 5 == 0, F.lit('<a href="rel/page.html">r</a>'))
-        .otherwise(F.lit("")),
-    )
-    html = F.concat(
-        F.lit("<p>intro</p>"),
-        F.when(d % 40 < 30, anchors).otherwise(F.lit("<p>no links</p>")),
-    )
-    return url, html
-
-
-def _q_html_links_docs(spark, sf_dir):
-    """Anchor extraction + URL resolution (the crawl-graph front-end):
-    one regexp_extract_all + explode, hrefs resolved against the page
-    URL (absolute → scheme/host lowered; protocol-relative → page
-    scheme; root-relative → page root; fragments cut; mailto/
-    javascript/directory-relative dropped). Zero-exchange codegen."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.linkgraph import extract_links
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    url, html = _linked_page_exprs()
-    pages = docs.withColumn("url", url).withColumn("html", html)
-    return extract_links(pages)
-
-
-def _q_pagerank_hosts(spark, sf_dir):
-    """Host-graph PageRank (Page 1999) — the centrality weight OSCAR/
-    RefinedWeb-style corpora hang off CommonCrawl's host ranks: links
-    extracted from the planted pages → distinct host edges (hosts 30–39
-    are dangling) → 8 fixed damped power-iteration rounds with uniform
-    dangling-mass redistribution. The oracle unrolls the same 8 rounds
-    as MATERIALIZED CTEs over the formula-derived edge set."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.linkgraph import (
-        extract_links,
-        host_edges,
-        pagerank,
-    )
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    url, html = _linked_page_exprs()
-    pages = docs.withColumn("url", url).withColumn("html", html)
-    edges = host_edges(extract_links(pages))
-    return pagerank(edges, iterations=8).orderBy("node")
-
-
-def _q_trustrank_hosts(spark, sf_dir):
-    """TrustRank (Gyöngyi 2004): personalized PageRank whose teleport
-    mass goes only to trusted seed hosts (h0–h9) — the spam-demotion
-    companion ranking. Same per-round plan as pagerank_hosts; the
-    reset distribution rides the (node, double) relation."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.linkgraph import (
-        extract_links,
-        host_edges,
-        pagerank,
-    )
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    url, html = _linked_page_exprs()
-    pages = docs.withColumn("url", url).withColumn("html", html)
-    edges = host_edges(extract_links(pages))
-    seeds = spark.range(10).select(
-        F.concat(F.lit("h"), F.col("id").cast("string"),
-                 F.lit(".example.com")).alias("node"),
-        F.lit(1.0).alias("weight"),
-    )
-    return pagerank(edges, iterations=8, reset=seeds).orderBy("node")
-
-
-def _q_hits_hosts(spark, sf_dir):
-    """HITS hubs & authorities (Kleinberg 1999) over the planted host
-    graph — the mutual-reinforcement ranking beside PageRank: 8 fixed
-    rounds of auth ∝ Aᵀ·hub then hub ∝ A·auth, L2-normalized per
-    half-step. Hosts 30–39 publish no links so they are pure
-    authorities (hub 0). The oracle unrolls the same 8 rounds as
-    MATERIALIZED CTEs over the formula-derived edge set."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.linkgraph import (
-        extract_links,
-        hits,
-        host_edges,
-    )
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    url, html = _linked_page_exprs()
-    pages = docs.withColumn("url", url).withColumn("html", html)
-    edges = host_edges(extract_links(pages))
-    return hits(edges, iterations=8).orderBy("node")
-
-
-def _q_harmonic_hosts_exact(spark, sf_dir):
-    """Exact harmonic centrality over the planted host graph (the
-    ranking CommonCrawl publishes for hosts): layered BFS closure —
-    each round expands the frontier one hop and anti-joins known
-    pairs, so every (u,v) materializes once at its minimal distance.
-    O(n²) guarded baseline; the HyperBall twin is the scale path."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.centrality import harmonic_centrality_exact
-    from bloomine_spark.operators.linkgraph import extract_links, host_edges
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    url, html = _linked_page_exprs()
-    pages = docs.withColumn("url", url).withColumn("html", html)
-    edges = host_edges(extract_links(pages))
-    return harmonic_centrality_exact(edges).orderBy("node")
-
-
-def _q_hyperball_harmonic_hosts(spark, sf_dir):
-    """HyperBall (Boldi & Vigna 2013): harmonic centrality via HLL
-    counters iterated along edges — register-max merges of the repo's
-    own HyperLogLog, one (node, 4 KB state) shuffle per round, rounds =
-    graph diameter. The approximation whose exact companion is
-    harmonic_hosts_exact (bench records the mean relative error)."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.centrality import hyperball_harmonic
-    from bloomine_spark.operators.linkgraph import extract_links, host_edges
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    url, html = _linked_page_exprs()
-    pages = docs.withColumn("url", url).withColumn("html", html)
-    edges = host_edges(extract_links(pages))
-    return hyperball_harmonic(edges).orderBy("node")
 
 
 def _q_ccnet_normalize(spark, sf_dir):
@@ -2886,13 +2419,13 @@ def _q_ann_cosine_topk(spark, sf_dir):
 
 
 def _q_ann_ivf_topk(spark, sf_dir):
-    """IVF approximate top-10 (scale path; recall gated in pytest and
-    reported per round by bench.py). nprobe=4 of nlist=8 prunes half the
-    cells; assign=3 multi-assignment (each vector indexed in its top-3
-    cells) lifts recall@10 from 0.76 to 1.0 on this fixture WITHOUT
-    widening the probe — boundary neighbors are the only IVF loss, so
-    indexing them redundantly is the dial that doesn't cost query I/O
-    (index grows ×assign instead; see similarity.ivf_topk)."""
+    """IVF approximate top-10 (scale path; recall gated in pytest).
+    nprobe=4 of nlist=8 prunes half the cells; assign=3
+    multi-assignment (each vector indexed in its top-3 cells) lifts
+    recall@10 from 0.76 to 1.0 on this fixture WITHOUT widening the
+    probe — boundary neighbors are the only IVF loss, so indexing them
+    redundantly is the dial that doesn't cost query I/O (index grows
+    ×assign instead; see similarity.ivf_topk)."""
     _ship_pkg(spark)
     from bloomine_spark.operators.similarity import ivf_topk
 
@@ -3016,19 +2549,6 @@ def _q_phrase_search_docs(spark, sf_dir):
     return phrase_search(docs, PHRASE_QUERIES)
 
 
-def _q_textrank_keywords(spark, sf_dir):
-    """TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank
-    over the word co-occurrence graph (window 2, undirected, built from
-    lead offsets — never a positional self-join), reusing the linkgraph
-    pagerank with its uniform-dangling fixed-round semantics; the oracle
-    unrolls the same 8 rounds over the identically-derived edge set."""
-    from bloomine_spark.operators.collocations import textrank_keywords
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return textrank_keywords(docs, window=2, iterations=8, top_k=20)
-
-
 def _q_readability_per_source(spark, sf_dir):
     """Flesch reading-ease + Flesch–Kincaid grade per source over a
     deterministic vowel-group syllable heuristic; sentence terminators
@@ -3052,44 +2572,6 @@ def _q_readability_per_source(spark, sf_dir):
         ),
     )
     return readability_per_source(planted)
-
-
-def _q_triangle_clustering_hosts(spark, sf_dir):
-    """Triangle counting + local clustering coefficient on the host
-    graph via degree orientation (Suri & Vassilvitskii WWW'11): each
-    undirected edge points from its lower (degree, node) endpoint, the
-    oriented graph is acyclic, and every triangle appears exactly once
-    as a wedge at its lowest corner plus one closing-edge join — the
-    shape whose wedge fan-out stays O(√m) per node on a power-law
-    crawl graph. Oracle replays the identical orientation in SQL."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.graphmining import triangle_counts
-    from bloomine_spark.operators.linkgraph import extract_links, host_edges
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    url, html = _linked_page_exprs()
-    pages = docs.withColumn("url", url).withColumn("html", html)
-    edges = host_edges(extract_links(pages))
-    return triangle_counts(edges).orderBy("node")
-
-
-def _q_lpa_communities_hosts(spark, sf_dir):
-    """Synchronous label-propagation communities (Raghavan 2007) on the
-    host graph: 6 fixed rounds, deterministic (count DESC, label ASC)
-    tie-break — the pure-function variant a SQL oracle unrolls round by
-    round. Per round only (node, label) rows move, the pagerank shuffle
-    envelope with a string payload."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.graphmining import lpa_communities
-    from bloomine_spark.operators.linkgraph import extract_links, host_edges
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    url, html = _linked_page_exprs()
-    pages = docs.withColumn("url", url).withColumn("html", html)
-    edges = host_edges(extract_links(pages))
-    return lpa_communities(edges, rounds=6).orderBy("node")
 
 
 def _q_ngram_containment_pairs(spark, sf_dir):
@@ -3455,23 +2937,6 @@ def _q_scd2_apply_user_state(spark, sf_dir):
     )
 
 
-def _q_kcore_hosts(spark, sf_dir):
-    """k-core decomposition (k=2) of the host graph by synchronous
-    peeling — the crawl/social-graph denoiser; 8 fixed rounds reach the
-    fixpoint on this graph (pytest-pinned), and the SQL oracle unrolls
-    the identical rounds."""
-    _ship_pkg(spark)
-    from bloomine_spark.operators.graphmining import k_core
-    from bloomine_spark.operators.linkgraph import extract_links, host_edges
-    from bloomine_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    url, html = _linked_page_exprs()
-    pages = docs.withColumn("url", url).withColumn("html", html)
-    edges = host_edges(extract_links(pages))
-    return k_core(edges, k=2, rounds=8).orderBy("node")
-
-
 def _q_zorder_key_events(spark, sf_dir):
     """Morton/Z-order interleave key over two event dimensions (user
     grid x value grid, 10 bits each) — the lakehouse multi-dimensional
@@ -3543,12 +3008,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gpt3_window_decontaminate": _q_gpt3_window_decontaminate,
         "ngram_novelty_per_source": _q_ngram_novelty_per_source,
         "nb_langid_confusion": _q_nb_langid_confusion,
-        "html_extract_docs": _q_html_extract_docs,
-        "html_main_extract_docs": _q_html_main_extract_docs,
-        "html_meta_docs": _q_html_meta_docs,
-        "robots_filter_docs": _q_robots_filter_docs,
-        "politeness_schedule_urls": _q_politeness_schedule_urls,
-        "sitemap_entries_docs": _q_sitemap_entries_docs,
         "line_dedup_docs": _q_line_dedup_docs,
         "boilerplate_line_df_docs": _q_boilerplate_line_df_docs,
         "k_anonymity_audit_customers": _q_k_anonymity_audit_customers,
@@ -3563,14 +3022,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "snapshot_diff_docs": _q_snapshot_diff_docs,
         "script_mix_docs": _q_script_mix_docs,
         "source_overlap_docs": _q_source_overlap_docs,
-        "url_canonical_filter": _q_url_canonical_filter,
-        "url_host_cap_dedup": _q_url_host_cap_dedup,
-        "html_links_docs": _q_html_links_docs,
-        "pagerank_hosts": _q_pagerank_hosts,
-        "trustrank_hosts": _q_trustrank_hosts,
-        "hits_hosts": _q_hits_hosts,
-        "harmonic_hosts_exact": _q_harmonic_hosts_exact,
-        "hyperball_harmonic_hosts": _q_hyperball_harmonic_hosts,
         "ccnet_normalize": _q_ccnet_normalize,
         "sample_by_hash": _q_sample_by_hash,
         "priority_sample_per_source": _q_priority_sample_per_source,
@@ -3626,10 +3077,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_rollup_day": _q_events_rollup_day,
         "pmi_collocations_topk": _q_pmi_collocations_topk,
         "phrase_search_docs": _q_phrase_search_docs,
-        "textrank_keywords": _q_textrank_keywords,
         "readability_per_source": _q_readability_per_source,
-        "triangle_clustering_hosts": _q_triangle_clustering_hosts,
-        "lpa_communities_hosts": _q_lpa_communities_hosts,
         "ngram_containment_pairs": _q_ngram_containment_pairs,
         "distinctive_terms_per_source": _q_distinctive_terms_per_source,
         "events_cube_day": _q_events_cube_day,
@@ -3642,7 +3090,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ewma_user_value": _q_ewma_user_value,
         "scd2_user_state": _q_scd2_user_state,
         "scd2_apply_user_state": _q_scd2_apply_user_state,
-        "kcore_hosts": _q_kcore_hosts,
         "zorder_key_events": _q_zorder_key_events,
     }
 
@@ -6020,254 +5467,6 @@ def oracle_sql() -> dict[str, str]:
         ORDER BY doc_id
     """
 
-    # --- web front-end: the SQL applies the SAME pattern constants the
-    # Spark operators use (imported from webops, not retyped) ------------
-    from bloomine_spark.operators.webops import (
-        _ANY_TAG,
-        _BLOCK_TAGS,
-        _COMMENTS,
-        _KILL_BLOCKS,
-        _NON_DOC_EXT,
-        _TRACKING,
-    )
-
-    def _html_chain_sql(expr: str) -> str:
-        s = f"regexp_replace({expr}, '{_KILL_BLOCKS}', ' ', 'g')"
-        s = f"regexp_replace({s}, '{_COMMENTS}', ' ', 'g')"
-        s = f"regexp_replace({s}, '{_BLOCK_TAGS}', chr(10), 'g')"
-        s = f"regexp_replace({s}, '{_ANY_TAG}', ' ', 'g')"
-        for ent, ch in (
-            ("&nbsp;", " "),
-            ("&lt;", "<"),
-            ("&gt;", ">"),
-            ("&quot;", '"'),
-            ("&#39;", "''"),   # SQL-escaped single quote
-            ("&amp;", "&"),
-        ):
-            s = f"replace({s}, '{ent}', '{ch}')"
-        s = rf"regexp_replace({s}, '[ \t\r\f]+', ' ', 'g')"
-        s = rf"regexp_replace({s}, ' ?\n ?', chr(10), 'g')"
-        s = rf"regexp_replace({s}, '\n{{2,}}', chr(10), 'g')"
-        s = rf"regexp_replace({s}, '^\n+|\n+$', '', 'g')"
-        return f"trim({s})"
-
-    sql["html_extract_docs"] = f"""
-        WITH h AS (
-          SELECT doc_id,
-            CASE CAST(doc_id % 4 AS INT)
-              WHEN 0 THEN '<html><head><title>t</title><style>p{{color:red}}'
-                || '</style></head><body><h1>Head</h1><p>' || text
-                || '</p><script>var x=''<p>no</p>'';</script></body></html>'
-              WHEN 1 THEN '<div>' || text
-                || '</div><!-- note --><ul><li>alpha</li><li>beta</li></ul>'
-              WHEN 2 THEN '<p>' || text
-                || ' &amp; &lt;tag&gt; &#39;q&#39;&nbsp;end</p>'
-              ELSE '<table><tr><td>' || text
-                || '</td><td>cell2</td></tr></table>'
-            END AS html
-          FROM documents
-        ), x AS (
-          SELECT doc_id, {_html_chain_sql("html")} AS t FROM h
-        )
-        SELECT doc_id, t AS text,
-               CASE WHEN t = '' THEN 0
-                    ELSE CAST(len(string_split(t, chr(10))) AS BIGINT)
-               END AS n_lines
-        FROM x
-    """
-
-    # link-density boilerplate tier: the same per-line rule as
-    # webops.html_extract_main, replayed with DuckDB list lambdas; the
-    # density cut is the integer cross-multiplication 2·anchor > visible
-    from bloomine_spark.operators.webops import _A_INNER, _WS_RUN
-
-    def _vis_sql(l: str) -> str:
-        return (
-            f"length(trim(regexp_replace(regexp_replace({l}, "
-            f"'{_ANY_TAG}', ' ', 'g'), '{_WS_RUN}', ' ', 'g')))"
-        )
-
-    def _anch_sql(l: str) -> str:
-        return (
-            f"length(trim(regexp_replace(regexp_replace(coalesce("
-            f"array_to_string(regexp_extract_all({l}, '{_A_INNER}', 1), ' '),"
-            f" ''), '{_ANY_TAG}', ' ', 'g'), '{_WS_RUN}', ' ', 'g')))"
-        )
-
-    _BOILER = f"({_vis_sql('l')} > 0 AND 2*{_anch_sql('l')} > {_vis_sql('l')})"
-
-    sql["html_main_extract_docs"] = f"""
-        WITH h AS (
-          SELECT doc_id,
-            '<div><a href="/">Home</a> | <a href="/about">About</a></div><p>'
-            || text || ' with <a href="/x">ref</a></p>'
-            || CASE WHEN doc_id % 2 = 0
-                 THEN '<div><a href="/n">Next</a></div>' ELSE '' END AS html
-          FROM documents
-        ), s AS (
-          SELECT doc_id, string_split(
-            regexp_replace(regexp_replace(regexp_replace(html,
-              '{_KILL_BLOCKS}', ' ', 'g'), '{_COMMENTS}', ' ', 'g'),
-              '{_BLOCK_TAGS}', chr(10), 'g'), chr(10)) AS lines
-          FROM h
-        ), k AS (
-          SELECT doc_id,
-            coalesce(array_to_string(
-              list_filter(lines, l -> NOT {_BOILER}), chr(10)), '') AS kept,
-            len(list_filter(lines, l -> {_BOILER})) AS n_boiler
-          FROM s
-        ), x AS (
-          SELECT doc_id, {_html_chain_sql("kept")} AS t, n_boiler FROM k
-        )
-        SELECT doc_id, t AS text,
-               CASE WHEN t = '' THEN 0
-                    ELSE CAST(len(string_split(t, chr(10))) AS BIGINT)
-               END AS n_lines,
-               CAST(n_boiler AS BIGINT) AS n_boilerplate_lines
-        FROM x
-    """
-
-    # head metadata: the SQL interpolates the SAME pattern constants
-    from bloomine_spark.operators.webops import (
-        _CANONICAL,
-        _META_NAME,
-        _META_PROP,
-        _TITLE,
-    )
-
-    def _q(p: str) -> str:  # SQL-escape single quotes in a regex literal
-        return p.replace("'", "''")
-
-    def _meta_clean_sql(expr: str) -> str:
-        s = expr
-        for ent, ch in (
-            ("&nbsp;", " "), ("&lt;", "<"), ("&gt;", ">"),
-            ("&quot;", '"'), ("&#39;", "''"), ("&amp;", "&"),
-        ):
-            s = f"replace({s}, '{ent}', '{ch}')"
-        return rf"trim(regexp_replace({s}, '\s+', ' ', 'g'))"
-
-    def _first_sql(pattern: str) -> str:
-        v = _meta_clean_sql(f"regexp_extract(html, '{_q(pattern)}', 1)")
-        return f"nullif({v}, '')"
-
-    sql["html_meta_docs"] = f"""
-        WITH h AS (
-          SELECT doc_id,
-            '<head><title>T &amp; ' || (doc_id % 9) || '</title>'
-            || CASE WHEN doc_id % 2 = 0 THEN
-                 '<meta name="description" content="desc '
-                 || (doc_id % 7) || '">' ELSE '' END
-            || CASE WHEN doc_id % 3 = 0 THEN
-                 '<link rel=''canonical'' href=''https://c'
-                 || (doc_id % 5) || '.example.com/p''>' ELSE '' END
-            || CASE WHEN doc_id % 5 = 0 THEN
-                 '<meta property="og:title" content="og '
-                 || (doc_id % 4) || '">' ELSE '' END
-            || '<title>decoy</title></head><body><p>' || text
-            || '</p></body>' AS html
-          FROM documents
-        )
-        SELECT doc_id,
-               {_first_sql(_TITLE)} AS title,
-               {_first_sql(_META_NAME.format("description"))} AS description,
-               nullif(regexp_extract(html, '{_q(_CANONICAL)}', 1), '')
-                 AS canonical_url,
-               {_first_sql(_META_PROP.format("title"))} AS og_title
-        FROM h
-    """
-
-    # robots: the oracle rebuilds the rule relation from the planting
-    # formulas (the PARSE path is what the Spark side adds on top — a
-    # parse bug shifts the rule relation and the hash diverges) and
-    # replays the RFC argmax with the exact ordering the operator uses
-    sql["robots_filter_docs"] = """
-        WITH hs AS (
-          SELECT r FROM (SELECT unnest(range(0, 20)) AS r)
-        ), rules AS (
-          SELECT 'h' || r || '.example.com' AS host, 'trainbot' AS agent,
-                 FALSE AS allow, '/p/1' AS path
-          FROM hs WHERE r % 3 = 0
-          UNION ALL
-          SELECT 'h' || r || '.example.com', 'trainbot', TRUE,
-                 '/p/1' || (r % 10)
-          FROM hs WHERE r % 3 = 0
-          UNION ALL
-          SELECT 'h' || r || '.example.com', '*', FALSE, '/'
-          FROM hs WHERE r % 3 = 0
-          UNION ALL
-          SELECT 'h' || r || '.example.com', '*', FALSE, '/p/2'
-          FROM hs WHERE r % 3 <> 0
-        ), u AS (
-          SELECT doc_id,
-            'https://h' || (doc_id % 40) || '.example.com/p/'
-              || (doc_id % 100) AS url_canon,
-            'h' || (doc_id % 40) || '.example.com' AS host,
-            '/p/' || (doc_id % 100) AS path0
-          FROM documents
-        ), spec AS (
-          SELECT host, MAX(CASE WHEN agent = 'trainbot' THEN 1 ELSE 0 END)
-                 AS s
-          FROM rules GROUP BY host
-        ), eff AS (
-          SELECT r.host, r.allow, r.path
-          FROM rules r JOIN spec ON spec.host = r.host
-          WHERE r.agent = 'trainbot' OR (r.agent = '*' AND spec.s = 0)
-        ), j AS (
-          SELECT u.doc_id, u.url_canon, e.allow, e.path,
-                 (e.path IS NOT NULL
-                  AND u.path0 LIKE e.path || '%') AS matched
-          FROM u LEFT JOIN eff e ON e.host = u.host
-        ), rk AS (
-          SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY doc_id
-            ORDER BY CASE WHEN matched THEN length(path) ELSE -1 END DESC,
-                     allow DESC NULLS LAST, path ASC NULLS LAST) AS rn
-          FROM j
-        )
-        SELECT doc_id, url_canon,
-               CASE WHEN matched THEN allow ELSE TRUE END AS robots_allowed,
-               CASE WHEN matched THEN path END AS robots_rule
-        FROM rk WHERE rn = 1
-    """
-
-    from bloomine_spark.operators.webops import (
-        _SM_BLOCK,
-        _SM_LASTMOD,
-        _SM_LOC,
-    )
-
-    sql["sitemap_entries_docs"] = f"""
-        WITH x AS (
-          SELECT doc_id,
-            CASE WHEN doc_id % 7 = 0 THEN
-              '<sitemapindex><sitemap><loc>https://h' || (doc_id % 40)
-              || '.example.com/s' || (doc_id % 3)
-              || '.xml</loc></sitemap></sitemapindex>'
-            ELSE
-              '<urlset><url><loc> https://h' || (doc_id % 40)
-              || '.example.com/p/' || (doc_id % 100)
-              || ' </loc><lastmod>2024-01-'
-              || lpad(CAST((doc_id % 28) + 1 AS VARCHAR), 2, '0')
-              || '</lastmod></url><url><loc>https://h' || (doc_id % 40)
-              || '.example.com/q</loc></url></urlset>'
-            END AS xml
-          FROM documents
-        ), b AS (
-          SELECT doc_id,
-            regexp_matches(xml, '(?is)<\\s*sitemapindex\\b') AS is_index,
-            unnest(regexp_extract_all(xml, '{_SM_BLOCK}', 1)) AS blk
-          FROM x
-        )
-        SELECT doc_id,
-               regexp_extract(blk, '{_SM_LOC}', 1) AS loc,
-               nullif(regexp_extract(blk, '{_SM_LASTMOD}', 1), '')
-                 AS lastmod,
-               is_index
-        FROM b
-        WHERE regexp_extract(blk, '{_SM_LOC}', 1) <> ''
-    """
-
     sql["line_dedup_docs"] = """
         WITH d AS (
           SELECT doc_id,
@@ -6566,34 +5765,6 @@ def oracle_sql() -> dict[str, str]:
         GROUP BY a.source, b.source
     """
 
-    # politeness: delays derived from the planting formulas (trainbot
-    # group shadows '*', non-numeric drops to the default), slots from
-    # the same per-host url-order window
-    sql["politeness_schedule_urls"] = """
-        WITH u AS (
-          SELECT 'h' || CAST(doc_id % 20 AS VARCHAR) || '.example.com'
-                   AS host,
-                 'https://h' || CAST(doc_id % 20 AS VARCHAR)
-                   || '.example.com/p/' || CAST(doc_id AS VARCHAR) AS url
-          FROM documents
-        ), dl AS (
-          SELECT 'h' || CAST(r AS VARCHAR) || '.example.com' AS host,
-                 CASE WHEN r % 4 = 0 THEN CAST(5 AS DOUBLE)
-                      WHEN r % 4 = 1 THEN CAST(2 + r % 3 AS DOUBLE)
-                      ELSE CAST(1.0 AS DOUBLE) END AS crawl_delay
-          FROM range(0, 20) t(r)
-        ), s AS (
-          SELECT u.host, u.url,
-                 ROW_NUMBER() OVER (PARTITION BY u.host ORDER BY u.url)
-                   - 1 AS slot,
-                 dl.crawl_delay
-          FROM u JOIN dl ON dl.host = u.host
-        )
-        SELECT host, url, slot, crawl_delay,
-               slot * crawl_delay AS fetch_at_s
-        FROM s
-    """
-
     # chunking: same closed-form chunk-count arithmetic (stride 24,
     # window 32), list_slice replay of the token windows
     sql["chunk_documents"] = """
@@ -6677,352 +5848,6 @@ def oracle_sql() -> dict[str, str]:
             ELSE 3
           END AS bin
         FROM orders
-    """
-
-    _URL_BUILD = """
-          SELECT doc_id,
-            (CASE WHEN doc_id % 17 = 0 THEN 'ftp'
-                  WHEN doc_id % 7 = 0 THEN 'HTTP' ELSE 'https' END)
-            || '://'
-            || (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END)
-            || 'h' || CAST(doc_id % 40 AS VARCHAR) || '.Example.com'
-            || (CASE WHEN doc_id % 11 = 0 THEN
-                  (CASE WHEN doc_id % 7 = 0 THEN ':80' ELSE ':443' END)
-                ELSE '' END)
-            || '/' || repeat('a/', CAST(doc_id % 15 AS INT))
-            || 'page' || CAST(doc_id % 100 AS VARCHAR)
-            || (CASE WHEN doc_id % 13 = 0 THEN '.jpg' ELSE '' END)
-            || (CASE WHEN doc_id % 5 = 0 THEN '?utm_source=x&q=1'
-                     WHEN doc_id % 5 = 1 THEN '?fbclid=zz' ELSE '' END)
-            || (CASE WHEN doc_id % 2 = 0 THEN '#top' ELSE '' END) AS url
-          FROM documents
-    """
-
-    _URL_CANON = rf"""
-          SELECT doc_id, scheme || '://' ||
-            (CASE WHEN scheme = 'https'
-                  THEN regexp_replace(h2, ':443$', '')
-                  ELSE h2 END) ||
-            (CASE WHEN rest4 = '' THEN '/' ELSE rest4 END) AS url_canon
-          FROM (
-            SELECT doc_id, scheme,
-              CASE WHEN scheme = 'http'
-                   THEN regexp_replace(h1, ':80$', '') ELSE h1 END AS h2,
-              regexp_replace(
-                regexp_replace(
-                  regexp_replace(rest1, '\?&+', '?', 'g'),
-                  '&&+', '&', 'g'),
-                '[?&]+$', '', 'g') AS rest4
-            FROM (
-              SELECT doc_id,
-                lower(regexp_extract(s1,
-                  '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-                regexp_replace(lower(regexp_extract(s1,
-                  '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)),
-                  '^www\.', '') AS h1,
-                regexp_replace(regexp_extract(s1,
-                  '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)$', 1),
-                  '{_TRACKING}', '', 'g') AS rest1
-              FROM (SELECT doc_id, regexp_replace(url, '#.*$', '') AS s1
-                    FROM u)
-            )
-          )
-    """
-
-    sql["url_canonical_filter"] = f"""
-        WITH u AS ({_URL_BUILD}), c AS ({_URL_CANON}), f AS (
-          SELECT doc_id, url_canon,
-            regexp_extract(url_canon,
-              '^[a-z][a-z0-9+.-]*://([^/?#]*)', 1) AS host,
-            len(string_split(regexp_extract(url_canon,
-              '^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)', 1), '/')) - 1
-              AS depth
-          FROM c
-        )
-        SELECT doc_id, url_canon,
-               (CASE
-                  WHEN regexp_extract(url_canon, '^(https?)://', 1) = ''
-                    THEN 'scheme'
-                  WHEN length(url_canon) > 2048 THEN 'too_long'
-                  WHEN regexp_matches(url_canon, '{_NON_DOC_EXT}')
-                    THEN 'extension'
-                  WHEN host LIKE '%h7.example.com%' THEN 'blocked_host'
-                  WHEN depth > 12 THEN 'path_depth'
-                END) IS NULL AS url_keep,
-               CASE
-                 WHEN regexp_extract(url_canon, '^(https?)://', 1) = ''
-                   THEN 'scheme'
-                 WHEN length(url_canon) > 2048 THEN 'too_long'
-                 WHEN regexp_matches(url_canon, '{_NON_DOC_EXT}')
-                   THEN 'extension'
-                 WHEN host LIKE '%h7.example.com%' THEN 'blocked_host'
-                 WHEN depth > 12 THEN 'path_depth'
-               END AS url_reason
-        FROM f
-    """
-
-    sql["url_host_cap_dedup"] = f"""
-        WITH u AS ({_URL_BUILD}), c AS ({_URL_CANON}), r AS (
-          SELECT doc_id, url_canon,
-            ROW_NUMBER() OVER (PARTITION BY url_canon ORDER BY doc_id)
-              AS url_rank,
-            regexp_extract(url_canon,
-              '^[a-z][a-z0-9+.-]*://([^/?#]*)', 1) AS host
-          FROM c
-        ), r2 AS (
-          SELECT *, ROW_NUMBER() OVER (
-              PARTITION BY host
-              ORDER BY CASE WHEN url_rank <> 1 THEN 1 ELSE 0 END,
-                       md5(CAST(doc_id AS VARCHAR)), doc_id) AS host_rank
-          FROM r
-        )
-        SELECT doc_id, url_canon, CAST(url_rank AS BIGINT) AS url_rank,
-               CAST(host_rank AS BIGINT) AS host_rank,
-               (url_rank = 1 AND host_rank <= 10) AS keep
-        FROM r2
-    """
-
-    # --- link graph: anchor extraction + PageRank ------------------------
-    from bloomine_spark.operators.linkgraph import _HREF
-
-    _PAGE_PLANT = """
-          SELECT doc_id,
-            'https://h' || (doc_id % 40) || '.example.com/p/'
-              || (doc_id % 100) AS url,
-            '<p>intro</p>' || CASE WHEN doc_id % 40 < 30 THEN
-              '<a href="https://H' || ((doc_id*7+3) % 40) || '.Example.com/x'
-                || (doc_id % 9) || '">a</a>'
-              || '<a href=''//h' || ((doc_id*11+1) % 40)
-                || '.example.com/y#frag''>b</a>'
-              || CASE WHEN doc_id % 3 = 0 THEN
-                   '<a href="/local/' || (doc_id % 5) || '">c</a>'
-                 ELSE '' END
-              || CASE WHEN doc_id % 4 = 0 THEN
-                   '<a href="mailto:x@y.z">m</a>' ELSE '' END
-              || CASE WHEN doc_id % 5 = 0 THEN
-                   '<a href="rel/page.html">r</a>' ELSE '' END
-            ELSE '<p>no links</p>' END AS html
-          FROM documents
-    """
-
-    sql["html_links_docs"] = rf"""
-        WITH p AS ({_PAGE_PLANT}), x AS (
-          SELECT doc_id, url,
-            unnest(regexp_extract_all(html,
-              '{_HREF.replace("'", "''")}', 1)) AS href0
-          FROM p
-        ), y AS (
-          SELECT doc_id, url,
-            regexp_replace(href0, '#.*$', '') AS h,
-            lower(regexp_extract(url,
-              '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-            lower(regexp_extract(url,
-              '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS phost
-          FROM x
-        ), z AS (
-          SELECT doc_id, url,
-            CASE
-              WHEN regexp_matches(h, '^(?i)https?://') THEN
-                lower(regexp_extract(h, '^([A-Za-z]+)://', 1)) || '://'
-                || lower(regexp_extract(h, '^[A-Za-z]+://([^/?#]*)', 1))
-                || regexp_extract(h, '^[A-Za-z]+://[^/?#]*(.*)$', 1)
-              WHEN regexp_matches(h, '^//') THEN
-                scheme || '://' || lower(regexp_extract(h, '^//([^/?#]*)', 1))
-                || regexp_extract(h, '^//[^/?#]*(.*)$', 1)
-              WHEN regexp_matches(h, '^/') THEN
-                scheme || '://' || phost || h
-            END AS link
-          FROM y
-        )
-        SELECT doc_id, url, link FROM z
-        WHERE link IS NOT NULL AND link <> ''
-    """
-
-    # PageRank: the edge set falls straight out of the planting formulas
-    # (the regex extraction path is itself oracle-checked by
-    # html_links_docs); 8 damped rounds unrolled — every round CTE is
-    # referenced twice (contributions + dangling mass), so each MUST be
-    # MATERIALIZED or DuckDB inlines the chain exponentially
-    _pr_rounds = []
-    for i in range(1, 9):
-        _pr_rounds.append(f"""
-        r{i} AS MATERIALIZED (
-          SELECT nd.node,
-            (1 - 0.85) / (SELECT n FROM nn) + 0.85 * (
-              COALESCE(c.contrib, 0)
-              + (SELECT COALESCE(SUM(r.pr), 0) FROM r{i-1} r
-                 LEFT JOIN o ON o.node = r.node
-                 WHERE o.node IS NULL) / (SELECT n FROM nn)
-            ) AS pr
-          FROM nodes nd LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.pr / o.outdeg) AS contrib
-            FROM e JOIN r{i-1} r ON e.src = r.node
-            JOIN o ON o.node = e.src
-            GROUP BY e.dst
-          ) c ON c.node = nd.node
-        )""")
-
-    sql["pagerank_hosts"] = f"""
-        WITH hp AS MATERIALIZED (
-          SELECT doc_id % 40 AS hs, (doc_id*7+3) % 40 AS d1,
-                 (doc_id*11+1) % 40 AS d2
-          FROM documents WHERE doc_id % 40 < 30
-        ), e AS MATERIALIZED (
-          SELECT DISTINCT 'h' || hs || '.example.com' AS src,
-                 'h' || d || '.example.com' AS dst
-          FROM (SELECT hs, d1 AS d FROM hp
-                UNION ALL SELECT hs, d2 FROM hp)
-          WHERE hs <> d
-        ), nodes AS MATERIALIZED (
-          SELECT DISTINCT node FROM
-            (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)
-        ), nn AS MATERIALIZED (
-          SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes
-        ), o AS MATERIALIZED (
-          SELECT src AS node, CAST(COUNT(*) AS DOUBLE) AS outdeg
-          FROM e GROUP BY src
-        ), r0 AS MATERIALIZED (
-          SELECT node, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS pr
-          FROM nodes
-        ),{",".join(_pr_rounds)}
-        SELECT node, pr FROM r8 ORDER BY node
-    """
-
-    # TrustRank: same unrolled rounds with a seed-only teleport vector;
-    # the reset weight w rides every round CTE (Spark computes the same
-    # (1−d)·w + d·(contrib + dangling·w) with lit scalars)
-    _seed_list = ", ".join(f"'h{i}.example.com'" for i in range(10))
-    _tr_rounds = []
-    for i in range(1, 9):
-        _tr_rounds.append(f"""
-        t{i} AS MATERIALIZED (
-          SELECT w.node,
-            (1 - 0.85) * w.w + 0.85 * (
-              COALESCE(c.contrib, 0)
-              + (SELECT COALESCE(SUM(r.pr), 0) FROM t{i-1} r
-                 LEFT JOIN o ON o.node = r.node
-                 WHERE o.node IS NULL) * w.w
-            ) AS pr
-          FROM w LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.pr / o.outdeg) AS contrib
-            FROM e JOIN t{i-1} r ON e.src = r.node
-            JOIN o ON o.node = e.src
-            GROUP BY e.dst
-          ) c ON c.node = w.node
-        )""")
-
-    sql["trustrank_hosts"] = f"""
-        WITH hp AS MATERIALIZED (
-          SELECT doc_id % 40 AS hs, (doc_id*7+3) % 40 AS d1,
-                 (doc_id*11+1) % 40 AS d2
-          FROM documents WHERE doc_id % 40 < 30
-        ), e AS MATERIALIZED (
-          SELECT DISTINCT 'h' || hs || '.example.com' AS src,
-                 'h' || d || '.example.com' AS dst
-          FROM (SELECT hs, d1 AS d FROM hp
-                UNION ALL SELECT hs, d2 FROM hp)
-          WHERE hs <> d
-        ), nodes AS MATERIALIZED (
-          SELECT DISTINCT node FROM
-            (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)
-        ), o AS MATERIALIZED (
-          SELECT src AS node, CAST(COUNT(*) AS DOUBLE) AS outdeg
-          FROM e GROUP BY src
-        ), w AS MATERIALIZED (
-          SELECT node,
-            CASE WHEN node IN ({_seed_list})
-                 THEN CAST(1 AS DOUBLE) / 10 ELSE CAST(0 AS DOUBLE)
-            END AS w
-          FROM nodes
-        ), t0 AS MATERIALIZED (
-          SELECT node, w AS pr FROM w
-        ),{",".join(_tr_rounds)}
-        SELECT node, pr FROM t8 ORDER BY node
-    """
-
-    # HITS: same formula-derived edge set, 8 unrolled mutual-
-    # reinforcement rounds — per round the raw sums materialize once
-    # (each is referenced twice: numerator + its own L2 norm scalar)
-    _hits_rounds = []
-    for i in range(1, 9):
-        _hits_rounds.append(f"""
-        ar{i} AS MATERIALIZED (
-          SELECT e.dst AS node, SUM(h.s) AS raw
-          FROM e JOIN h{i-1} h ON e.src = h.node GROUP BY e.dst
-        ),
-        a{i} AS MATERIALIZED (
-          SELECT nd.node,
-                 COALESCE(r.raw, 0) / (SELECT sqrt(SUM(raw * raw))
-                                       FROM ar{i}) AS s
-          FROM nodes nd LEFT JOIN ar{i} r ON r.node = nd.node
-        ),
-        hr{i} AS MATERIALIZED (
-          SELECT e.src AS node, SUM(a.s) AS raw
-          FROM e JOIN a{i} a ON e.dst = a.node GROUP BY e.src
-        ),
-        h{i} AS MATERIALIZED (
-          SELECT nd.node,
-                 COALESCE(r.raw, 0) / (SELECT sqrt(SUM(raw * raw))
-                                       FROM hr{i}) AS s
-          FROM nodes nd LEFT JOIN hr{i} r ON r.node = nd.node
-        )""")
-
-    sql["hits_hosts"] = f"""
-        WITH hp AS MATERIALIZED (
-          SELECT doc_id % 40 AS hs, (doc_id*7+3) % 40 AS d1,
-                 (doc_id*11+1) % 40 AS d2
-          FROM documents WHERE doc_id % 40 < 30
-        ), e AS MATERIALIZED (
-          SELECT DISTINCT 'h' || hs || '.example.com' AS src,
-                 'h' || d || '.example.com' AS dst
-          FROM (SELECT hs, d1 AS d FROM hp
-                UNION ALL SELECT hs, d2 FROM hp)
-          WHERE hs <> d
-        ), nodes AS MATERIALIZED (
-          SELECT DISTINCT node FROM
-            (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)
-        ), nn AS MATERIALIZED (
-          SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes
-        ), h0 AS MATERIALIZED (
-          SELECT node, 1.0 / sqrt((SELECT n FROM nn)) AS s FROM nodes
-        ),{",".join(_hits_rounds)}
-        SELECT h.node, h.s AS hub, a.s AS auth
-        FROM h8 h JOIN a8 a ON a.node = h.node
-        ORDER BY h.node
-    """
-
-    # exact harmonic centrality: recursive closure over distinct
-    # (u, v, d) states — the UNION-distinct delta semantics bound the
-    # state space at n²·d_max, so cycles terminate; min distance per
-    # pair comes out in the final GROUP BY
-    sql["harmonic_hosts_exact"] = """
-        WITH RECURSIVE hp AS MATERIALIZED (
-          SELECT doc_id % 40 AS hs, (doc_id*7+3) % 40 AS d1,
-                 (doc_id*11+1) % 40 AS d2
-          FROM documents WHERE doc_id % 40 < 30
-        ), e AS MATERIALIZED (
-          SELECT DISTINCT 'h' || hs || '.example.com' AS src,
-                 'h' || d || '.example.com' AS dst
-          FROM (SELECT hs, d1 AS d FROM hp
-                UNION ALL SELECT hs, d2 FROM hp)
-          WHERE hs <> d
-        ), nodes AS MATERIALIZED (
-          SELECT DISTINCT node FROM
-            (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)
-        ), paths(u, v, d) AS (
-          SELECT src, dst, 1 FROM e
-          UNION
-          SELECT p.u, e.dst, p.d + 1
-          FROM paths p JOIN e ON e.src = p.v
-          WHERE p.d < 64 AND p.u <> e.dst
-        ), md AS (
-          SELECT u, v, MIN(d) AS d FROM paths GROUP BY u, v
-        )
-        SELECT n.node,
-               COALESCE(SUM(CAST(1 AS DOUBLE) / md.d), 0) AS harmonic
-        FROM nodes n LEFT JOIN md ON md.v = n.node
-        GROUP BY n.node
-        ORDER BY n.node
     """
 
     # --- priority_sample_per_source: DLT priority sampling — priority =
@@ -7622,61 +6447,6 @@ def oracle_sql() -> dict[str, str]:
         FROM hit GROUP BY phrase, doc_id
     """
 
-    # TextRank: co-occurrence edges from the same lead offsets, then the
-    # pagerank round template (uniform dangling redistribution) unrolled
-    _tk_rounds = []
-    for i in range(1, 9):
-        _tk_rounds.append(f"""
-        r{i} AS MATERIALIZED (
-          SELECT nd.node,
-            (1 - 0.85) / (SELECT n FROM nn) + 0.85 * (
-              COALESCE(c.contrib, 0)
-              + (SELECT COALESCE(SUM(r.pr), 0) FROM r{i-1} r
-                 LEFT JOIN o ON o.node = r.node
-                 WHERE o.node IS NULL) / (SELECT n FROM nn)
-            ) AS pr
-          FROM nodes nd LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.pr / o.outdeg) AS contrib
-            FROM e JOIN r{i-1} r ON e.src = r.node
-            JOIN o ON o.node = e.src
-            GROUP BY e.dst
-          ) c ON c.node = nd.node
-        )""")
-    sql["textrank_keywords"] = f"""
-        WITH t AS MATERIALIZED (
-          SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-        ), p AS MATERIALIZED (
-          SELECT ws[i+1] AS a, ws[i+2] AS b
-          FROM t, unnest(range(0, len(ws) - 1)) AS u(i)
-          UNION ALL
-          SELECT ws[i+1], ws[i+3]
-          FROM t, unnest(range(0, len(ws) - 2)) AS u(i)
-        ), pe AS MATERIALIZED (
-          SELECT a, b FROM p WHERE a <> b
-        ), e AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT a AS src, b AS dst FROM pe
-            UNION ALL SELECT b, a FROM pe)
-        ), nodes AS MATERIALIZED (
-          SELECT DISTINCT node FROM
-            (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)
-        ), nn AS MATERIALIZED (
-          SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes
-        ), o AS MATERIALIZED (
-          SELECT src AS node, CAST(COUNT(*) AS DOUBLE) AS outdeg
-          FROM e GROUP BY src
-        ), r0 AS MATERIALIZED (
-          SELECT node, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS pr
-          FROM nodes
-        ),{",".join(_tk_rounds)},
-        rk AS (
-          SELECT node, pr, ROW_NUMBER() OVER (
-                   ORDER BY round(pr, 6) DESC, node) AS rank
-          FROM r8
-        )
-        SELECT node, pr, CAST(rank AS INT) AS rank FROM rk WHERE rank <= 20
-    """
-
     # readability: the oracle replants the SAME position-moduli
     # terminators, then identical integer sums + pinned double sequence
     sql["readability_per_source"] = """
@@ -7717,90 +6487,6 @@ def oracle_sql() -> dict[str, str]:
             + 11.8 * (CAST(n_syllables AS DOUBLE) / n_words) - 15.59
             AS fk_grade
         FROM agg
-    """
-
-    # --- graph-mining family ---------------------------------------------
-    # triangle counting via the SAME degree orientation: edge u→v iff
-    # (deg(u), u) < (deg(v), v); every triangle is one wedge at its
-    # lowest corner + the closing edge
-    _host_edges_cte = """
-        hp AS MATERIALIZED (
-          SELECT doc_id % 40 AS hs, (doc_id*7+3) % 40 AS d1,
-                 (doc_id*11+1) % 40 AS d2
-          FROM documents WHERE doc_id % 40 < 30
-        ), e AS MATERIALIZED (
-          SELECT DISTINCT 'h' || hs || '.example.com' AS src,
-                 'h' || d || '.example.com' AS dst
-          FROM (SELECT hs, d1 AS d FROM hp
-                UNION ALL SELECT hs, d2 FROM hp)
-          WHERE hs <> d
-        )"""
-    sql["triangle_clustering_hosts"] = f"""
-        WITH {_host_edges_cte}, und AS MATERIALIZED (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM e WHERE src <> dst
-        ), deg AS MATERIALIZED (
-          SELECT node, COUNT(*) AS degree FROM
-            (SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-          GROUP BY node
-        ), orient AS MATERIALIZED (
-          SELECT
-            CASE WHEN da.degree < db.degree
-                   OR (da.degree = db.degree AND u.a < u.b)
-                 THEN u.a ELSE u.b END AS u,
-            CASE WHEN da.degree < db.degree
-                   OR (da.degree = db.degree AND u.a < u.b)
-                 THEN u.b ELSE u.a END AS v,
-            CASE WHEN da.degree < db.degree
-                   OR (da.degree = db.degree AND u.a < u.b)
-                 THEN db.degree ELSE da.degree END AS dv
-          FROM und u JOIN deg da ON da.node = u.a
-                     JOIN deg db ON db.node = u.b
-        ), tri AS (
-          SELECT w.u, w.v1, w.v2 FROM (
-            SELECT e1.u, e1.v AS v1, e2.v AS v2
-            FROM orient e1 JOIN orient e2 ON e1.u = e2.u
-            WHERE e1.dv < e2.dv OR (e1.dv = e2.dv AND e1.v < e2.v)
-          ) w JOIN orient o ON o.u = w.v1 AND o.v = w.v2
-        ), corner AS (
-          SELECT node, COUNT(*) AS triangles FROM (
-            SELECT u AS node FROM tri
-            UNION ALL SELECT v1 FROM tri
-            UNION ALL SELECT v2 FROM tri)
-          GROUP BY node
-        )
-        SELECT d.node, d.degree, COALESCE(c.triangles, 0) AS triangles,
-          CASE WHEN d.degree >= 2
-            THEN 2.0 * COALESCE(c.triangles, 0)
-                 / (CAST(d.degree AS DOUBLE) * (d.degree - 1.0))
-            ELSE 0.0 END AS lcc
-        FROM deg d LEFT JOIN corner c ON c.node = d.node
-    """
-
-    # LPA: 6 unrolled synchronous rounds, argmax (count DESC, label ASC)
-    _lpa_rounds = []
-    for i in range(1, 7):
-        _lpa_rounds.append(f"""
-        l{i} AS MATERIALIZED (
-          SELECT node, label FROM (
-            SELECT nb.dst AS node, l.label,
-                   ROW_NUMBER() OVER (PARTITION BY nb.dst
-                     ORDER BY COUNT(*) DESC, l.label) AS rn
-            FROM nb JOIN l{i-1} l ON l.node = nb.src
-            GROUP BY nb.dst, l.label
-          ) WHERE rn = 1
-        )""")
-    sql["lpa_communities_hosts"] = f"""
-        WITH {_host_edges_cte}, und AS MATERIALIZED (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM e WHERE src <> dst
-        ), nb AS MATERIALIZED (
-          SELECT a AS src, b AS dst FROM und
-          UNION ALL SELECT b, a FROM und
-        ), l0 AS MATERIALIZED (
-          SELECT DISTINCT src AS node, src AS label FROM nb
-        ),{",".join(_lpa_rounds)}
-        SELECT node, label AS community FROM l6
     """
 
     # containment: the jaccard oracle's skeleton, both directions kept
@@ -8015,7 +6701,7 @@ def oracle_sql() -> dict[str, str]:
         FROM v JOIN q USING (source) GROUP BY v.source
     """
 
-    # --- time-series / SCD2 / k-core family -------------------------------
+    # --- time-series / SCD2 family ----------------------------------------
     # RANGE frame over exact integer microseconds (epoch_us mirrors
     # Spark's unix_micros); the sum is an exact decimal
     sql["rolling_user_value_7d"] = """
@@ -8090,29 +6776,6 @@ def oracle_sql() -> dict[str, str]:
     # maintenance invariant apply(intervals(log1), log2) ==
     # intervals(log1+log2) is what the hash gates
     sql["scd2_apply_user_state"] = sql["scd2_user_state"]
-
-    # k-core: 8 unrolled synchronous peels, every round MATERIALIZED
-    # (each is referenced twice — the DuckDB CTE-inlining trap)
-    _kcore_rounds = []
-    for _i in range(1, 9):
-        _kcore_rounds.append(f"""
-        k{_i} AS MATERIALIZED (
-          SELECT u FROM (SELECT u, COUNT(*) AS d FROM e{_i-1} GROUP BY u)
-          WHERE d >= 2
-        ), e{_i} AS MATERIALIZED (
-          SELECT x.u, x.v FROM e{_i-1} x
-          JOIN k{_i} a ON x.u = a.u JOIN k{_i} b ON x.v = b.u
-        )""")
-    sql["kcore_hosts"] = f"""
-        WITH {_host_edges_cte}, und AS MATERIALIZED (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM e WHERE src <> dst
-        ), e0 AS MATERIALIZED (
-          SELECT a AS u, b AS v FROM und
-          UNION ALL SELECT b, a FROM und
-        ),{",".join(_kcore_rounds)}
-        SELECT u AS node, COUNT(*) AS degree FROM e8 GROUP BY u
-    """
 
     # Morton interleave: identical 10-bit shift/mask fold on both engines
     _zterms = " + ".join(

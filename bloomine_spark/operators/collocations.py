@@ -1,22 +1,15 @@
 """Corpus collocation analytics: PMI / log-likelihood-ratio bigram
-collocations and TextRank keyword extraction.
+collocations, word co-occurrence edges and log-odds keyness.
 
-Both operators reduce the corpus to its BIGRAM-TYPE relation first (one
-scan, one window pass of ``lead``), then compute every statistic from
-that relation alone — corpus scale never re-enters the plan:
-
-* ``collocation_scores`` — pointwise mutual information plus Dunning's
-  (1993) log-likelihood ratio G² over the 2×2 contingency each bigram
-  induces. All four margins (c12, c1·, c·2, N) derive from the one
-  bigram-count relation: c1/c2 are vocab-sized re-aggregations that
-  broadcast back, N is a 1-row scalar. Selection is the engine-portable
-  rank ``(round(llr, 6) DESC, w1, w2)``.
-* ``textrank_keywords`` — TextRank (Mihalcea & Tarau 2004): PageRank
-  over the word co-occurrence graph (undirected, window ``w`` built as
-  ``w`` ``lead`` offsets — pure window functions, never a positional
-  self-join), reusing :func:`bloomine_spark.operators.linkgraph.pagerank`
-  and therefore its uniform-dangling-mass, fixed-round semantics the
-  driver oracle unrolls.
+``collocation_scores`` reduces the corpus to its BIGRAM-TYPE relation
+first (one scan, one window pass of ``lead``), then computes every
+statistic from that relation alone — corpus scale never re-enters the
+plan: pointwise mutual information plus Dunning's (1993)
+log-likelihood ratio G² over the 2×2 contingency each bigram induces.
+All four margins (c12, c1·, c·2, N) derive from the one bigram-count
+relation: c1/c2 are vocab-sized re-aggregations that broadcast back, N
+is a 1-row scalar. Selection is the engine-portable rank
+``(round(llr, 6) DESC, w1, w2)``.
 
 The bigram-type relation is vocab²-bounded (in practice: the distinct
 adjacent pairs actually occurring), which is the standing convention of
@@ -31,7 +24,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "collocation_scores",
-    "textrank_keywords",
     "cooccurrence_edges",
     "distinctive_terms_per_source",
 ]
@@ -116,9 +108,9 @@ def cooccurrence_edges(
     docs: DataFrame, text_col: str = "text", window: int = 2
 ) -> DataFrame:
     """Distinct undirected word co-occurrence edges within ``window``
-    token positions, as a directed (src, dst) list with both directions
-    — the TextRank graph. Built from ``window`` lead offsets over one
-    positional pass; no positional self-join ever happens."""
+    token positions, as a directed (src, dst) list with both directions.
+    Built from ``window`` lead offsets over one positional pass; no
+    positional self-join ever happens."""
     if window < 1:
         raise ValueError("window must be >= 1")
     win = Window.partitionBy("doc_id").orderBy("pos")
@@ -138,27 +130,6 @@ def cooccurrence_edges(
             pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
         .distinct()
-    )
-
-
-def textrank_keywords(
-    docs: DataFrame,
-    text_col: str = "text",
-    window: int = 2,
-    iterations: int = 8,
-    top_k: int = 20,
-) -> DataFrame:
-    """TextRank keywords: PageRank over the co-occurrence graph →
-    ``(node, pr, rank)`` for the top-``top_k`` words by
-    ``(round(pr, 6) DESC, node)``."""
-    from bloomine_spark.operators.linkgraph import pagerank
-
-    edges = cooccurrence_edges(docs, text_col, window)
-    pr = pagerank(edges, iterations=iterations)
-    w = Window.orderBy(F.round(F.col("pr"), 6).desc(), F.col("node"))
-    return (
-        pr.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(top_k))
     )
 
 

@@ -36,6 +36,17 @@ def package_zip() -> str:
     return out
 
 
+def ship_package(spark: SparkSession) -> None:
+    """``addPyFile`` the package zip once per SparkContext. Spark ignores
+    a second add of the same path (with a warning), so zipping again for
+    it is wasted work."""
+    sc = spark.sparkContext
+    if getattr(sc, "_bloomine_pkg_shipped", False):
+        return
+    sc.addPyFile(package_zip())
+    sc._bloomine_pkg_shipped = True
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "bloomine-spark",
@@ -75,7 +86,7 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    spark.sparkContext.addPyFile(package_zip())
+    ship_package(spark)
     return spark
 
 

@@ -117,38 +117,6 @@ def dedup_stream(
     )
 
 
-def url_frontier_stream(
-    stream_df: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    blocked_hosts: list[str] | None = None,
-    max_path_depth: int = 12,
-) -> DataFrame:
-    """Streaming crawl-frontier hygiene: canonicalize each discovered
-    URL (webops rules — the SAME expression as the batch path), drop
-    filter-failing URLs in-stream (first-failing-rule, zero state),
-    then keep only the FIRST arrival per canonical URL within the
-    watermark horizon via the engine's
-    ``dropDuplicatesWithinWatermark`` — the streaming twin of
-    ``url_dedup_with_host_cap``'s ``url_rank == 1`` half, with state
-    bounded by the watermark instead of the crawl's lifetime. (A
-    per-host cap is a batch-window concept; on the frontier it becomes
-    rate limiting, out of scope here.) Emits the canonicalized,
-    filtered, first-seen URLs with ``url_canon`` attached."""
-    from bloomine_spark.operators.webops import canonicalize_url_df, url_filter
-
-    canon = url_filter(
-        canonicalize_url_df(stream_df, url_col=url_col),
-        blocked_hosts=blocked_hosts,
-        max_path_depth=max_path_depth,
-    ).filter(F.col("url_keep")).drop("url_keep", "url_reason")
-    return (
-        canon.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["url_canon"])
-    )
-
-
 def sessions_stream(
     stream_df: DataFrame,
     key_col: str = "user_id",

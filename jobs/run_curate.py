@@ -154,18 +154,8 @@ def main() -> None:
                     "natively — same partitionBy(source) layout); "
                     "intermediate stage tables stay parquet")
     ap.add_argument("--input-format",
-                    choices=("parquet", "orc", "warc", "jsonl"),
-                    default="parquet",
-                    help="'warc' reads raw crawl segments (*.warc / "
-                    "*.warc.gz incl. the CommonCrawl member-per-record "
-                    "layout): 200-OK text/html responses → URL "
-                    "canonicalize + filter → HTML→text extraction with "
-                    "the link-density boilerplate tier — the stage-zero "
-                    "front door before every stage below")
-    ap.add_argument("--html-max-link-density", type=float, default=0.5,
-                    help="boilerplate cut for --input-format warc: block "
-                    "lines whose visible text is more than this fraction "
-                    "anchor text are dropped (default 0.5)")
+                    choices=("parquet", "orc", "jsonl"),
+                    default="parquet")
     ap.add_argument("--force", action="store_true")
     args = ap.parse_args()
     if args.near_dup and args.soft_dedup:
@@ -207,41 +197,12 @@ def main() -> None:
         "token_budget": args.token_budget,
         "trim_dup_spans": args.trim_dup_spans,
         "input_format": args.input_format,
-        "html_max_link_density": args.html_max_link_density,
         "line_dedup": bool(args.line_dedup),
         "boilerplate_frac": args.boilerplate_frac,
         "output_format": args.output_format,
     }
 
-    if args.input_format == "warc":
-        from bloomine_spark.operators.webops import (
-            canonicalize_url_df,
-            html_extract_main,
-            url_filter,
-        )
-        from bloomine_spark.sources.warc import read_warc
-
-        pages = (
-            read_warc(spark, args.input)
-            .filter(
-                (F.col("http_status") == 200)
-                & F.col("http_content_type").startswith("text/html")
-                & F.col("target_uri").isNotNull()
-            )
-            .select(
-                F.col("record_id").alias("doc_id"),
-                "source",
-                F.col("target_uri").alias("url"),
-                F.decode("payload", "UTF-8").alias("html"),
-            )
-        )
-        pages = url_filter(canonicalize_url_df(pages)).filter("url_keep")
-        docs = html_extract_main(
-            pages,
-            max_link_density=args.html_max_link_density,
-            keep=("source", "url_canon"),
-        ).filter(F.col("text") != "")
-    elif args.input_format == "jsonl":
+    if args.input_format == "jsonl":
         # the lingua franca of shipped web corpora (one JSON object per
         # line, .gz transparently decompressed by the line reader);
         # requires a `text` field. Missing doc_id derives as

@@ -1,6 +1,6 @@
-"""Corpus analytics: PMI/LLR collocations, phrase search, TextRank,
-readability. The driver oracles gate the fixture corpus; these pin hand
-cases and independent python replays."""
+"""Corpus analytics: PMI/LLR collocations, phrase search, co-occurrence
+edges, readability. The entry-module oracles gate the fixture corpus;
+these pin hand cases and independent python replays."""
 
 import math
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from bloomine_spark.operators.collocations import (
     collocation_scores,
     cooccurrence_edges,
-    textrank_keywords,
 )
 from bloomine_spark.operators.retrieval import phrase_search
 from bloomine_spark.operators.textops import readability_per_source
@@ -130,7 +129,7 @@ def test_phrase_search_validation(spark):
 
 
 # --------------------------------------------------------------------------
-# textrank
+# co-occurrence edges
 # --------------------------------------------------------------------------
 
 
@@ -154,16 +153,6 @@ def test_cooccurrence_no_self_loops_or_cross_doc(spark):
     assert ("a", "a") not in edges
     assert ("b", "c") not in edges and ("c", "b") not in edges
     assert ("c", "d") in edges and ("a", "b") in edges
-
-
-def test_textrank_hub_word_ranks_first(spark):
-    # star corpus: 'hub' co-occurs with every spoke, spokes only with hub
-    texts = [f"hub s{i}" for i in range(8)]
-    rows = textrank_keywords(
-        _docs(spark, texts), window=1, iterations=8, top_k=3
-    ).collect()
-    assert rows[0]["node"] == "hub" and rows[0]["rank"] == 1
-    assert rows[0]["pr"] > rows[1]["pr"]
 
 
 # --------------------------------------------------------------------------

@@ -3,6 +3,8 @@ schema; every query key resolves; oracle keys ⊆ query keys. Full sf0.01
 oracle comparison lives in tools/check_correctness.py (driver-equivalent)."""
 
 import os
+import pathlib
+import re
 import sys
 
 import pytest
@@ -33,34 +35,66 @@ def test_query_registry_shape():
         assert name in qs and name not in oracles
 
 
-def test_query_imports_resolve():
-    """Query bodies import lazily, so a deleted module or renamed name only
-    fails when that query runs: resolve every package import up front."""
-    import ast
-    import importlib
-    import pathlib
+REPO = pathlib.Path(__file__).resolve().parent.parent
+SCRIPTS = ["__spark_entry__.py"] + sorted(
+    str(p.relative_to(REPO))
+    for d in ("jobs", "tools", "BENCH")
+    for p in (REPO / d).glob("*.py")
+)
+# a package import at the start of a line, in code or in a worker-script
+# template string: ``from bloomine_spark.x import a, b`` (parenthesised
+# lists may span lines) or ``import bloomine_spark.x``
+_PKG_IMPORT = re.compile(
+    r"^[ \t]*from[ \t]+(bloomine_spark[\w.]*)[ \t]+import[ \t]+(\([^)]*\)|[\w \t,]+)"
+    r"|^[ \t]*import[ \t]+(bloomine_spark[\w.]*)",
+    re.M,
+)
 
-    tree = ast.parse(pathlib.Path(entrymod.__file__).read_text())
+
+@pytest.mark.parametrize("script", SCRIPTS)
+def test_query_imports_resolve(script):
+    """Query bodies and scripts import lazily, and the BENCH scripts import
+    inside worker templates, so a deleted module or renamed name only
+    fails when that code runs: resolve every package import up front."""
+    import importlib
+
+    text = (REPO / script).read_text()
     dangling, checked = [], 0
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            targets = [(a.name, None) for a in node.names]
-        elif isinstance(node, ast.ImportFrom) and node.level == 0:
-            targets = [(node.module, a.name) for a in node.names]
-        else:
-            continue
-        for module, name in targets:
-            if module.split(".")[0] != "bloomine_spark":
-                continue
+    for m in _PKG_IMPORT.finditer(text):
+        module = m.group(1) or m.group(3)
+        names = [None]
+        if m.group(1):
+            listed = re.sub(r"#.*", "", m.group(2))
+            names = re.findall(r"(\w+)(?:\s+as\s+\w+)?", listed)
+        line = text.count("\n", 0, m.start()) + 1
+        for name in names:
             checked += 1
             try:
                 mod = importlib.import_module(module)
                 if name is not None and not hasattr(mod, name):
                     importlib.import_module(f"{module}.{name}")
             except ImportError:
-                dangling.append(f"line {node.lineno}: {module} {name or ''}")
-    assert checked > 0
+                dangling.append(f"line {line}: {module} {name or ''}")
+    assert checked or "bloomine_spark" not in text
     assert not dangling, dangling
+
+
+@pytest.mark.skipif(not os.path.isdir(SF), reason="sf0.001 testdata absent")
+def test_package_shipped_once_per_context(spark, monkeypatch):
+    """Queries zip and ship the package once per SparkContext, not once per
+    query: Spark ignores a re-add of the same path, so each re-zip is waste."""
+    from bloomine_spark import session
+
+    calls = []
+    real = session.package_zip
+    monkeypatch.setattr(session, "package_zip",
+                        lambda: calls.append(1) or real())
+    # start as a context the package has not been shipped to yet
+    monkeypatch.delattr(spark.sparkContext, "_bloomine_pkg_shipped",
+                        raising=False)
+    for name in ("two_phase_screen", "mg_token_topk"):
+        entrymod.queries()[name](spark, SF)
+    assert len(calls) == 1
 
 
 @pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")

@@ -751,54 +751,6 @@ def test_pq_ann_plans(spark):
 
 
 @needs_data
-def test_web_extraction_plans(spark):
-    """The whole web front-end is zero-exchange pruned codegen: the
-    documents scan reads only what the planting uses, no Exchange, no
-    Python eval anywhere."""
-    import __spark_entry__ as em
-
-    qs = em.queries()
-    for name, pruned in (
-        ("html_extract_docs", {"lang", "n_chars", "source"}),
-        ("html_main_extract_docs", {"lang", "n_chars", "source"}),
-        ("html_meta_docs", {"lang", "n_chars", "source"}),
-        ("url_canonical_filter", {"text", "lang", "n_chars"}),
-        ("sitemap_entries_docs", {"text", "lang", "n_chars"}),
-        ("html_links_docs", {"text", "lang", "n_chars"}),
-    ):
-        q = qs[name](spark, SF)
-        assert_columns_pruned(q, pruned)
-        assert_max_exchanges(q, 0)
-        facts = plan_facts(q)
-        assert not facts.has_python_eval, name
-
-
-@needs_data
-def test_url_host_cap_plan(spark):
-    """URL dedup + host cap: exactly the two rank-window exchanges
-    (url_canon, then host), both WindowGroupLimit-eligible; no
-    cartesian, no Python."""
-    import __spark_entry__ as em
-
-    q = em.queries()["url_host_cap_dedup"](spark, SF)
-    assert_no_cartesian(q)
-    assert_max_exchanges(q, 2)
-    assert not plan_facts(q).has_python_eval
-
-
-@needs_data
-def test_robots_filter_plan(spark):
-    """Robots evaluation: URL×rules joins on host (never cartesian);
-    the tiny rules relation broadcasts; text column pruned."""
-    import __spark_entry__ as em
-
-    q = em.queries()["robots_filter_docs"](spark, SF)
-    assert_no_cartesian(q)
-    assert_columns_pruned(q, {"text", "lang", "n_chars"})
-    assert "BroadcastHashJoin" in plan_facts(q).text
-
-
-@needs_data
 def test_asof_join_has_no_join_node(spark):
     """The as-of join is the union+window plan: ONE hash exchange on the
     key carries both sides and NO join node exists — shuffle volume is
@@ -870,42 +822,15 @@ def test_collocation_and_phrase_search_plans(spark):
 
 
 @needs_data
-def test_textrank_and_readability_plans(spark):
-    """TextRank builds edges from lead offsets (no positional self-join
-    anywhere before pagerank); readability is a codegen map + ONE
-    partial-agg exchange."""
+def test_readability_plan(spark):
+    """Readability is a codegen map + ONE partial-agg exchange."""
     import __spark_entry__ as em
-
-    q = em.queries()["textrank_keywords"](spark, SF)
-    facts = plan_facts(q)
-    assert "CartesianProduct" not in facts.text
-    assert not facts.has_python_eval
-    assert_columns_pruned(q, {"source", "lang", "n_chars"})
 
     r = em.queries()["readability_per_source"](spark, SF)
     rf = plan_facts(r)
     assert_max_exchanges(r, 1)
     assert not rf.has_python_eval
     assert_columns_pruned(r, {"doc_id", "lang", "n_chars"})
-
-
-@needs_data
-def test_graphmining_plans(spark):
-    """Triangle counting and LPA never go cartesian and never drop into
-    Python; the host-graph derivation keeps text columns pruned."""
-    import __spark_entry__ as em
-
-    t = em.queries()["triangle_clustering_hosts"](spark, SF)
-    tf = plan_facts(t)
-    assert_no_cartesian(t)
-    assert not tf.has_python_eval
-    assert_columns_pruned(t, {"text", "lang", "source", "n_chars"})
-
-    l = em.queries()["lpa_communities_hosts"](spark, SF)
-    lf = plan_facts(l)
-    assert_no_cartesian(l)
-    assert not lf.has_python_eval
-    assert_columns_pruned(l, {"text", "lang", "source", "n_chars"})
 
 
 @needs_data

@@ -100,25 +100,6 @@ def test_scd2_intervals_collapse_and_current(spark):
     assert len(u2) == 1 and u2[0]["is_current"]
 
 
-def test_kcore_star_and_clique(spark):
-    # a 4-clique (2-core and 3-core) plus pendant spokes (peeled at k=2)
-    edges = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"),
-             ("b", "d"), ("c", "d"), ("a", "p1"), ("p1", "p2")]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    from bloomine_spark.operators.graphmining import k_core
-
-    stats = {}
-    core2 = {r["node"]: r["degree"]
-             for r in k_core(df, k=2, rounds=6, stats=stats).collect()}
-    # the pendant chain peels (p2 first, then p1); the clique survives
-    assert core2 == {"a": 3, "b": 3, "c": 3, "d": 3}
-    assert stats["converged_early"]
-    core4 = k_core(df, k=4, rounds=6).count()
-    assert core4 == 0  # clique degree is 3 -> no 4-core
-    with pytest.raises(ValueError):
-        k_core(df, k=0)
-
-
 def test_scd2_apply_matches_full_rebuild(spark):
     """The maintenance invariant: apply(intervals(log1), log2) ==
     intervals(log1 + log2) when every key's log2 events come strictly

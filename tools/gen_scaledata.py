@@ -12,9 +12,10 @@ distort the pair-generation profile the dedup family is measured on).
 Copy 0 is byte-identical to sf0.1, so planted link/host structures stay
 present.
 
-Usage: python tools/gen_scaledata.py [out_dir] [K]   (default
-/root/sfbig/sf1.0, K=10 — the dir basename 'sf1.0' is what bench.py's
-_sf_of reads to size the sequences table like the driver's sf1.0).
+Usage: python tools/gen_scaledata.py [out_dir] [K]   (K defaults to 10;
+the default out_dir is named sf1.0). Per-query timings on this data go
+through tools/qtime.py; speed claims are perfbench results
+(perfbench/run.py), the one benchmark.
 """
 
 from __future__ import annotations

@@ -6,7 +6,8 @@ Usage:
     python tools/qtime.py [--sf-dir DIR] [--repeat N] [--explain DIR] \
         [--fresh-session-per-query] query1 query2 ...
 
-Never used by the driver; bench.py stays the frozen measurement contract.
+Per-query timings guide plan work only; speed claims are perfbench
+results (perfbench/run.py), the one benchmark.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ def main() -> None:
     ap.add_argument("--ui", action="store_true", help="enable the Spark UI")
     ap.add_argument("--action", choices=["noop", "count"], default="noop",
                     help="noop = full-column compute (guide §1.4); "
-                         "count = mirror bench.py's action")
+                         "count = time a count() action instead")
     args = ap.parse_args()
 
     from bloomine_spark.session import get_spark

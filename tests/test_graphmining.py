@@ -1,19 +1,6 @@
-"""Graph mining: triangle counts / clustering coefficients vs a
-brute-force replay on random graphs, and synchronous LPA semantics.
-The driver oracles gate the host-graph fixtures; these pin the
-algorithms on adversarial shapes (skewed degrees, ties, bridges)."""
+"""Graph helpers: the canonical undirected view of an edge list."""
 
-import itertools
-import random
-
-import pytest
-from pyspark.sql import functions as F
-
-from bloomine_spark.operators.graphmining import (
-    lpa_communities,
-    triangle_counts,
-    undirected_edges,
-)
+from bloomine_spark.operators.graphmining import undirected_edges
 
 
 def _edges(spark, pairs):
@@ -22,115 +9,7 @@ def _edges(spark, pairs):
     )
 
 
-def _tri_brute(pairs):
-    """Per-node triangle counts by brute force over the undirected view."""
-    adj = {}
-    for a, b in pairs:
-        if a == b:
-            continue
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    tri = {v: 0 for v in adj}
-    for u, v, w in itertools.combinations(sorted(adj), 3):
-        if v in adj[u] and w in adj[u] and w in adj[v]:
-            tri[u] += 1
-            tri[v] += 1
-            tri[w] += 1
-    return adj, tri
-
-
-# --------------------------------------------------------------------------
-# triangles
-# --------------------------------------------------------------------------
-
-
-def test_triangle_counts_random_graph_parity(spark):
-    rng = random.Random(7)
-    pairs = {(rng.randrange(30), rng.randrange(30)) for _ in range(160)}
-    pairs = [(a, b) for a, b in pairs if a != b]
-    adj, tri = _tri_brute(pairs)
-    got = {r["node"]: r for r in triangle_counts(_edges(spark, pairs)).collect()}
-    assert set(got) == {f"n{v}" for v in adj}
-    for v, t in tri.items():
-        row = got[f"n{v}"]
-        d = len(adj[v])
-        assert row["degree"] == d
-        assert row["triangles"] == t
-        want = 2.0 * t / (d * (d - 1)) if d >= 2 else 0.0
-        assert row["lcc"] == pytest.approx(want, rel=1e-12)
-
-
-def test_triangle_counts_direction_and_duplicate_invariant(spark):
-    # the same undirected triangle reported once regardless of how the
-    # directed input spells it (reversed edges, duplicates, self-loops)
-    pairs = [(1, 2), (2, 1), (2, 3), (3, 1), (1, 1), (2, 3)]
-    rows = {r["node"]: r for r in triangle_counts(_edges(spark, pairs)).collect()}
-    assert {r["triangles"] for r in rows.values()} == {1}
-    assert all(r["degree"] == 2 for r in rows.values())
-    assert all(r["lcc"] == pytest.approx(1.0) for r in rows.values())
-
-
-def test_triangle_counts_skewed_hub(spark):
-    # star + one rim edge: hub has degree n but exactly 1 triangle —
-    # the case where a naive neighbor self-join blows up and orientation
-    # keeps the hub's wedge fan-out at its ORIENTED out-degree
-    n = 40
-    pairs = [(0, i) for i in range(1, n)] + [(1, 2)]
-    rows = {r["node"]: r for r in triangle_counts(_edges(spark, pairs)).collect()}
-    assert rows["n0"]["degree"] == n - 1
-    assert rows["n0"]["triangles"] == 1
-    assert rows["n1"]["triangles"] == 1 and rows["n2"]["triangles"] == 1
-    assert rows["n3"]["triangles"] == 0 and rows["n3"]["lcc"] == 0.0
-
-
 def test_undirected_edges_canonical(spark):
     und = undirected_edges(_edges(spark, [(2, 1), (1, 2), (3, 3), (1, 3)]))
     got = {(r["a"], r["b"]) for r in und.collect()}
     assert got == {("n1", "n2"), ("n1", "n3")}
-
-
-# --------------------------------------------------------------------------
-# label propagation
-# --------------------------------------------------------------------------
-
-
-def test_lpa_two_cliques_with_bridge(spark):
-    # two 5-cliques joined by one bridge edge: LPA must keep them as two
-    # communities (each labelled by its min node)
-    c1 = list(itertools.combinations(range(5), 2))
-    c2 = list(itertools.combinations(range(5, 10), 2))
-    pairs = c1 + c2 + [(4, 5)]
-    out = {r["node"]: r["community"]
-           for r in lpa_communities(_edges(spark, pairs), rounds=6).collect()}
-    assert {out[f"n{i}"] for i in range(5)} == {"n0"}
-    assert {out[f"n{i}"] for i in range(5, 10)} == {"n5"}
-
-
-def test_lpa_synchronous_replay(spark):
-    """Exact parity with an independent synchronous python replay
-    (count DESC, label ASC ties) on a random graph — pins that the
-    Spark rounds are truly synchronous, not in-place."""
-    rng = random.Random(13)
-    pairs = sorted({(rng.randrange(18), rng.randrange(18)) for _ in range(50)})
-    pairs = [(a, b) for a, b in pairs if a != b]
-    adj = {}
-    for a, b in pairs:
-        adj.setdefault(f"n{a}", set()).add(f"n{b}")
-        adj.setdefault(f"n{b}", set()).add(f"n{a}")
-    labels = {v: v for v in adj}
-    for _ in range(4):
-        nxt = {}
-        for v, nbrs in adj.items():
-            cnt = {}
-            for u in nbrs:
-                cnt[labels[u]] = cnt.get(labels[u], 0) + 1
-            nxt[v] = min(cnt, key=lambda l: (-cnt[l], l))
-        labels = nxt
-    got = {r["node"]: r["community"]
-           for r in lpa_communities(_edges(spark, pairs), rounds=4).collect()}
-    assert got == labels
-
-
-def test_lpa_validates_rounds(spark):
-    with pytest.raises(ValueError):
-        lpa_communities(_edges(spark, [(1, 2)]), rounds=0)
